@@ -62,7 +62,10 @@ object QueryDef {
     * The transform is a character scan, not a regex: only identifiers
     * in the statement's top-level WITH list (paren depth 0, comma-
     * chained) are touched, so `WINDOW w AS (…)` clauses and any `AS (`
-    * inside CTE bodies or the final SELECT stay as written. Statements
+    * inside CTE bodies or the final SELECT stay as written. String
+    * literals (`'…'`), quoted identifiers (`"…"`) and `--` line comments
+    * are copied verbatim, so a paren or `AS (` inside them never moves
+    * the depth count or gets rewritten. Statements
     * that do not start with `WITH` return unchanged. `WITH RECURSIVE`
     * lists are transformed too — DuckDB 1.0 accepts the hint on every
     * member (the recursive member's iteration is unaffected), and the
@@ -79,19 +82,23 @@ object QueryDef {
     var i = s.indexOf(firstTok.take(4)) + 4 // position just past WITH
     out ++= s.substring(0, i)
     var depth = 0
-    var inStr = false
+    var quote = '\u0000' // the open quote ('\'' or '"'), or NUL outside one
     var inCteList = true
     // expectComma: at depth 0 right after a CTE body closed — a comma
     // continues the list, anything else begins the main query.
     var expectComma = false
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inStr) {
+      if (quote != '\u0000') {
         out += c
-        if (c == '\'') inStr = false
+        if (c == quote) quote = '\u0000'
         i += 1
       } else c match {
-        case '\'' => inStr = true; out += c; i += 1
+        case '\'' | '"' => quote = c; out += c; i += 1
+        case '-' if s.startsWith("--", i) =>
+          val eol = s.indexOf('\n', i)
+          val end = if (eol < 0) s.length else eol
+          out ++= s.substring(i, end); i = end
         case '(' => depth += 1; out += c; i += 1
         case ')' =>
           depth -= 1; out += c; i += 1

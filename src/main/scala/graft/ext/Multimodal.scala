@@ -646,23 +646,13 @@ object Multimodal {
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
     val incoming = vecs.filter(expr(mediaIncPredSpark))
     val base = vecs.filter(expr(s"NOT ($mediaIncPredSpark)"))
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-media/" + dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val root = SegmentChain.tmpRoot("graft-ann-media", dir)
     // reuse keys on the build's own fingerprint stamp (e52's pattern) —
     // the media-feature corpus lives under its own root, so the generic
     // index stamp plus this root IS the (source, format) key
-    val fpRow = base.agg(count(lit(1)), sum("vec_id")).head()
-    // sum() over an empty split is NULL — guard like RetrievalIndex
-    // .fingerprint does, so an empty base stamps s=0 instead of NPEing
-    val fpSum = if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1)
-    val want = s"index.r:n=${fpRow.getLong(0)};s=$fpSum"
-    graft.streaming.StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => graft.streaming.StreamOps.cdcMarkerStamp(fs, rootP, v) ==
-        ((-3L, want)))
-      .getOrElse(VectorIndex.buildIndexFrom(base, root))
+    SegmentChain.ensure(s, root,
+        (-3L, s"index.r:${SegmentChain.fingerprint(base, "vec_id")}"))(
+      VectorIndex.buildIndexFrom(base, root))
     VectorIndex.admissionVerdicts(incoming, base, root, tau = 0.9, None)
   }
 

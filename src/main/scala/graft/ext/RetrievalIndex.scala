@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.QueryDef
-import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,9 +15,7 @@ import org.apache.spark.sql.functions._
   * data/models/next_hour_congestion.joblib at serve time, never
   * refit per request.)
   *
-  * On-disk layout (the [[VectorIndex]]/[[TextIndex]] marker protocol —
-  * `_commit-<n>` rename flip, fingerprint-stamped ensure, chain-aware
-  * prune):
+  * On-disk segments (committed, resolved and pruned by [[SegmentChain]]):
   *   - `v<n>/postings/tb=<b>/` — one (token, doc_id, tf, dl) row per
   *     distinct doc-token, HIVE-PARTITIONED BY TOKEN-HASH BUCKET (8
   *     dirs): a probe for given terms reads only their bucket
@@ -39,10 +36,8 @@ import org.apache.spark.sql.functions._
   *     discipline ([[loadStats]] sums to the live corpus size and
   *     total length — BM25's N and avgdl inputs).
   *   - `v<n>/postings-delta/` + `v<n>/tombstones` — O(batch) appends
-  *     and metadata-only forgets, exactly [[TextIndex]]'s chain rules
-  *     (at most one tombstones version per chain, auto-fold at
-  *     [[AppendFoldThreshold]] chain segments, explicit
-  *     [[compactIndex]]).
+  *     and metadata-only forgets under the chain rules [[SegmentChain]]
+  *     states; [[compactIndex]] folds explicitly.
   *
   * Serve cost: the 8-term standard query reads ≤8 bucket directories
   * filtered to the query terms (df-bounded posting lists), joins a
@@ -55,22 +50,17 @@ object RetrievalIndex {
 
   private val nBuckets = 8
 
-  /** Chain segments tolerated before an append auto-folds — measured as
-    * live − base ([[VectorIndex]]'s graph-family rule), so tombstones
-    * and marker-only versions count toward the chain like any other
-    * segment a reader must resolve through.
+  /** Postings chain: a base commits `postings` + `vocab` + `stats` +
+    * `docs`, an append their `-delta` twins, a forget `tombstones` with
+    * negative vocab/stats deltas ([[SegmentChain]]).
     */
-  private val AppendFoldThreshold = 8
+  private val chain = new SegmentChain("postings")
 
   def defaultRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-bm25-index/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-bm25-index", dataDir)
 
   def defaultLifeRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-bm25-index-life/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-bm25-index-life", dataDir)
 
   /** (token, doc_id, tf, dl, positions, tb) of a (doc_id, text) frame —
     * d62's exact tokenization (split on single space; every downstream
@@ -106,45 +96,32 @@ object RetrievalIndex {
     postings.select("doc_id", "dl").distinct()
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
 
-  private def fingerprint(docs: DataFrame): String = {
-    val r = docs.agg(count(lit(1)), sum("doc_id")).head()
-    s"n=${r.getLong(0)};s=${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-  }
-
   def latestVersion(s: SparkSession, root: String): Option[Long] =
-    StreamOps.cdcLatestCommit(
-      new org.apache.hadoop.fs.Path(root).getFileSystem(
-        s.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(root))
+    SegmentChain.latest(s, root)
 
-  /** Full (base) commit: postings + complete vocab + complete stats.
-    * Note the vocab/stats re-derive from the just-WRITTEN postings (a
-    * second pass over the base postings, build-time only) — the
-    * statistics must describe what the commit actually persisted, so a
-    * write-path perturbation can never leave them out of sync.
+  /** Write `postings` plus the vocab, stats and doc-id segments derived
+    * from the just-WRITTEN postings into version directory `dir`, each
+    * named with `suffix` ("" for a base, "-delta" for an append). The
+    * statistics re-derive from the written files (a second pass over
+    * the postings) so they always describe what the commit persisted.
     */
-  private def commitVersion(s: SparkSession, root: String, ver: Long,
-      postings: DataFrame, stampId: Long, stampTag: String,
-      retain: Int): Long = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(rootP)
-    val vdir = new org.apache.hadoop.fs.Path(rootP, s"v$ver")
-    fs.delete(vdir, true) // wipe a crashed attempt's partial dir
-    postings.write.mode("overwrite").partitionBy("tb")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "postings").toString)
-    val written = readPostingsDir(s, s"$root/v$ver/postings")
+  private def writeSegments(s: SparkSession, dir: org.apache.hadoop.fs.Path,
+      postings: DataFrame, suffix: String): Unit = {
+    def seg(name: String) = new org.apache.hadoop.fs.Path(dir, name + suffix).toString
+    postings.select("token", "doc_id", "tf", "dl", "positions", "tb")
+      .write.mode("overwrite").partitionBy("tb").parquet(seg("postings"))
+    val written = readPostingsDir(s, seg("postings"))
     vocabOf(written).write.mode("overwrite").partitionBy("tb")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "vocab").toString)
-    statsOf(written).coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "stats").toString)
+      .parquet(seg("vocab"))
+    statsOf(written).coalesce(1).write.mode("overwrite").parquet(seg("stats"))
     docIdsOf(written).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").partitionBy("db")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "docs").toString)
-    StreamOps.flipCommitMarker(fs, rootP, ver, stampId, stampTag)
-    StreamOps.pruneChainVersions(fs, rootP, retain, Seq("postings"))
-    ver
+      .write.mode("overwrite").partitionBy("db").parquet(seg("docs"))
   }
+
+  /** Full (base) commit: postings + complete vocab, stats and docs. */
+  private def commitBase(s: SparkSession, root: String, ver: Long,
+      postings: DataFrame, stamp: (Long, String), retain: Int): Long =
+    chain.commit(s, root, ver, stamp, retain)(writeSegments(s, _, postings, ""))
 
   private def postingsSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -201,51 +178,19 @@ object RetrievalIndex {
   private[graft] def buildIndexFrom(docs: DataFrame, root: String,
       retain: Int = 2): Long = {
     val s = docs.sparkSession
-    val ver = latestVersion(s, root).map(_ + 1).getOrElse(0L)
-    commitVersion(s, root, ver, postingsOf(docs),
-      -3L, s"$FormatTag:${fingerprint(docs)}", retain)
-  }
-
-  /** The version whose `postings/` backs `v` — the chain-base walk. */
-  private def postingsVersion(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Long): Long = {
-    var c = v
-    while (c >= 0 && !fs.exists(
-        new org.apache.hadoop.fs.Path(s"$root/v$c/postings")))
-      c -= 1
-    if (c < 0) throw new IllegalStateException(
-      s"no postings directory reachable from v$v under $root — " +
-        "the referenced base version was pruned")
-    c
+    commitBase(s, root, SegmentChain.next(s, root), postingsOf(docs),
+      (-3L, s"$FormatTag:${SegmentChain.fingerprint(docs, "doc_id")}"), retain)
   }
 
   /** Live postings: base ∖ tombstones ∪ deltas — [[TextIndex
     * .loadPostings]]'s resolution with the declared schema (the bucket
     * probe must reach the reader as a partition filter).
     */
-  def loadPostings(s: SparkSession, root: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val v = latestVersion(s, root).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $root — build first"))
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val pv = postingsVersion(fs, root, v)
-    val base0 = readPostingsDir(s, s"$root/v$pv/postings")
-    val ts = ((pv + 1) to v).reverseIterator
-      .map(i => new org.apache.hadoop.fs.Path(s"$root/v$i/tombstones"))
-      .find(fs.exists)
-    val base = ts match {
-      case Some(p) => base0.join(
-        broadcast(s.read.schema(StructType(Seq(
-          StructField("doc_id", LongType)))).parquet(p.toString)),
-        Seq("doc_id"), "left_anti")
-      case None => base0
-    }
-    val deltas = ((pv + 1) to v).filter(i => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$root/v$i/postings-delta")))
-      .map(i => readPostingsDir(s, s"$root/v$i/postings-delta"))
-    (base +: deltas).reduce(_ unionByName _)
-  }
+  def loadPostings(s: SparkSession, root: String): DataFrame =
+    livePostings(s, chain.resolve(s, root))
+
+  private def livePostings(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
+    c.unionLive(s, "doc_id", "postings", "postings-delta")(readPostingsDir(s, _))
 
   /** The live chain's signed vocab segments, unioned but NOT yet summed
     * — the single reader under [[loadVocab]] (full statistics) and
@@ -253,18 +198,10 @@ object RetrievalIndex {
     * through the union into every segment scan, so both consumers get
     * partition pruning for free.
     */
-  private def vocabSegments(s: SparkSession, root: String): DataFrame = {
-    val v = latestVersion(s, root).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $root — build first"))
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val pv = postingsVersion(fs, root, v)
-    val segs = s.read.schema(vocabSchema).parquet(s"$root/v$pv/vocab") +:
-      ((pv + 1) to v).filter(i => fs.exists(
-          new org.apache.hadoop.fs.Path(s"$root/v$i/vocab-delta")))
-        .map(i => s.read.schema(vocabSchema).parquet(s"$root/v$i/vocab-delta"))
-    segs.reduce(_ unionByName _)
-  }
+  private def vocabSegments(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
+    (c.dir(c.base, "vocab") +: c.deltas("vocab-delta"))
+      .map(s.read.schema(vocabSchema).parquet(_))
+      .reduce(_ unionByName _)
 
   /** The live document-frequency table: base `vocab/` plus every signed
     * `vocab-delta/` in the chain, summed (df > 0) — reading the FULL
@@ -272,7 +209,10 @@ object RetrievalIndex {
     * known term set resolves by key instead — [[resolveTerms]].
     */
   def loadVocab(s: SparkSession, root: String): DataFrame =
-    vocabSegments(s, root)
+    liveVocab(s, chain.resolve(s, root))
+
+  private def liveVocab(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
+    vocabSegments(s, c)
       .groupBy("token").agg(sum("df").as("df"))
       .filter(col("df") > 0)
 
@@ -298,9 +238,13 @@ object RetrievalIndex {
     * token equality must push into the parquet scan.
     */
   def resolveTerms(s: SparkSession, root: String,
+      terms: Seq[String]): DataFrame =
+    termsAt(s, chain.resolve(s, root), terms)
+
+  private def termsAt(s: SparkSession, c: SegmentChain.Snapshot,
       terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "resolveTerms needs at least one term")
-    vocabSegments(s, root)
+    vocabSegments(s, c)
       .filter(col("tb").isin(termBuckets(s, terms): _*))
       .filter(col("token").isin(terms: _*))
       .groupBy("token").agg(sum("df").as("df"))
@@ -308,36 +252,24 @@ object RetrievalIndex {
   }
 
   /** Live (n_docs, sum_dl) — base `stats/` plus signed deltas. */
-  def loadStats(s: SparkSession, root: String): DataFrame = {
+  def loadStats(s: SparkSession, root: String): DataFrame =
+    liveStats(s, chain.resolve(s, root))
+
+  private def liveStats(s: SparkSession, c: SegmentChain.Snapshot): DataFrame = {
     import org.apache.spark.sql.types._
-    val v = latestVersion(s, root).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $root — build first"))
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val pv = postingsVersion(fs, root, v)
     val sch = StructType(Seq(
       StructField("n_docs", LongType), StructField("sum_dl", LongType)))
-    val segs = s.read.schema(sch).parquet(s"$root/v$pv/stats") +:
-      ((pv + 1) to v).filter(i => fs.exists(
-          new org.apache.hadoop.fs.Path(s"$root/v$i/stats-delta")))
-        .map(i => s.read.schema(sch).parquet(s"$root/v$i/stats-delta"))
-    segs.reduce(_ unionByName _)
+    (c.dir(c.base, "stats") +: c.deltas("stats-delta"))
+      .map(s.read.schema(sch).parquet(_))
+      .reduce(_ unionByName _)
       .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
   }
-
-  /** Chain length as live − base — tombstones and marker-only versions
-    * count like deltas ([[VectorIndex]]'s graphChainLength rule), so a
-    * chain can never silently exceed [[AppendFoldThreshold]] resolvable
-    * segments just because some of them carry no postings-delta.
-    */
-  private def chainLength(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, cur: Long): Long =
-    cur - postingsVersion(fs, root, cur)
 
   /** One incremental append commit: the batch's postings as an O(batch)
     * `postings-delta/` segment plus its +df vocab-delta and +stats
     * delta — maintenance IO scales with the batch, never the corpus.
-    * Auto-folds once the chain holds [[AppendFoldThreshold]] segments;
+    * Auto-folds once the chain is [[SegmentChain.AppendFoldThreshold]]
+    * versions deep;
     * exactly-once by stamp. An EMPTY batch commits a marker-only
     * version carrying the stamp (no data dirs): the stamp is what
     * ensure paths and retries key on, so even a no-op batch must leave
@@ -354,46 +286,25 @@ object RetrievalIndex {
   private[graft] def appendDocs(batch: DataFrame, root: String,
       batchId: Long, incarnationId: String, retain: Int = 2): Long = {
     val s = batch.sparkSession
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, rootP).getOrElse(
-      throw new IllegalStateException(
-        s"appendDocs needs a committed index under $root — build first"))
-    if (StreamOps.cdcMarkerStamp(fs, rootP, cur) == ((batchId, incarnationId)))
-      return cur
-    if (batch.isEmpty) {
+    val c = chain.resolve(s, root)
+    val stamp = (batchId, incarnationId)
+    if (SegmentChain.isRetry(s, root, c.live, stamp)) c.live
+    else appendAt(s, c, batch, stamp, retain)
+  }
+
+  /** [[appendDocs]] past its retry check, on the resolved chain `c`. */
+  private def appendAt(s: SparkSession, c: SegmentChain.Snapshot,
+      batch: DataFrame, stamp: (Long, String), retain: Int): Long =
+    if (batch.isEmpty)
       // marker-only commit: records the stamp (exactly-once + ensure
       // keys) without writing data dirs — readers resolve through it
-      val ver = cur + 1
-      fs.delete(new org.apache.hadoop.fs.Path(rootP, s"v$ver"), true)
-      StreamOps.flipCommitMarker(fs, rootP, ver, batchId, incarnationId)
-      StreamOps.pruneChainVersions(fs, rootP, retain, Seq("postings"))
-      return ver
-    }
-    if (chainLength(fs, root, cur) >= AppendFoldThreshold) {
-      val merged = loadPostings(s, root).select("token", "doc_id", "tf", "dl", "positions", "tb")
-        .unionByName(postingsOf(batch).select("token", "doc_id", "tf", "dl", "positions", "tb"))
-      commitVersion(s, root, cur + 1, merged, batchId, incarnationId, retain)
-    } else {
-      val ver = cur + 1
-      val vdir = new org.apache.hadoop.fs.Path(rootP, s"v$ver")
-      fs.delete(vdir, true) // wipe a crashed attempt's partial dir
-      postingsOf(batch).write.mode("overwrite").partitionBy("tb")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "postings-delta").toString)
-      val written = readPostingsDir(s,
-        new org.apache.hadoop.fs.Path(vdir, "postings-delta").toString)
-      vocabOf(written).write.mode("overwrite").partitionBy("tb")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "vocab-delta").toString)
-      statsOf(written).coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "stats-delta").toString)
-      docIdsOf(written).sortWithinPartitions("doc_id")
-        .write.mode("overwrite").partitionBy("db")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "docs-delta").toString)
-      StreamOps.flipCommitMarker(fs, rootP, ver, batchId, incarnationId)
-      StreamOps.pruneChainVersions(fs, rootP, retain, Seq("postings"))
-      ver
-    }
-  }
+      chain.commit(s, c.root, c.live + 1, stamp, retain)(_ => ())
+    else if (c.shouldFold)
+      commitBase(s, c.root, c.live + 1,
+        livePostings(s, c).unionByName(postingsOf(batch)), stamp, retain)
+    else
+      chain.commit(s, c.root, c.live + 1, stamp, retain)(
+        writeSegments(s, _, postingsOf(batch), "-delta"))
 
   /** Forget documents: on a clean base a METADATA-ONLY commit whose
     * READ is O(forgotten) — doc-id tombstones plus −df/−stats segments
@@ -418,53 +329,30 @@ object RetrievalIndex {
   private[graft] def forgetDocs(s: SparkSession, root: String,
       docs: DataFrame, stampId: Long, stampTag: String,
       retain: Int = 2): Long = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, rootP).getOrElse(
-      throw new IllegalStateException(
-        s"forgetDocs needs a committed index under $root — build first"))
-    if (StreamOps.cdcMarkerStamp(fs, rootP, cur) == ((stampId, stampTag)))
-      return cur
+    val c = chain.resolve(s, root)
+    val stamp = (stampId, stampTag)
+    if (SegmentChain.isRetry(s, root, c.live, stamp)) return c.live
     val batch = docs.select("doc_id", "text").dropDuplicates("doc_id")
-    if (batch.isEmpty) {
-      val ver = cur + 1
-      fs.delete(new org.apache.hadoop.fs.Path(rootP, s"v$ver"), true)
-      StreamOps.flipCommitMarker(fs, rootP, ver, stampId, stampTag)
-      StreamOps.pruneChainVersions(fs, rootP, retain, Seq("postings"))
-      return ver
-    }
-    val ver = cur + 1
-    val vdir = new org.apache.hadoop.fs.Path(rootP, s"v$ver")
-    fs.delete(vdir, true) // wipe a crashed attempt's partial dir
-    val pv = postingsVersion(fs, root, cur)
-    val chainClean = ((pv + 1) to cur).forall { i =>
-      !fs.exists(new org.apache.hadoop.fs.Path(s"$root/v$i/postings-delta")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(s"$root/v$i/tombstones"))
-    }
-    if (chainClean) {
+    if (batch.isEmpty)
+      chain.commit(s, root, c.live + 1, stamp, retain)(_ => ())
+    else if (c.deltas("postings-delta").isEmpty && c.tombstones.isEmpty)
       // O(forgotten): the negative segments come from the batch's own
       // re-tokenization — no postings file is opened by this commit
-      val gone = postingsOf(batch)
-      batch.select("doc_id")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "tombstones").toString)
-      vocabOf(gone).selectExpr("token", "-df AS df", "tb")
-        .write.mode("overwrite").partitionBy("tb")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "vocab-delta").toString)
-      statsOf(gone).selectExpr("-n_docs AS n_docs", "-sum_dl AS sum_dl")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "stats-delta").toString)
-      StreamOps.flipCommitMarker(fs, rootP, ver, stampId, stampTag)
-      StreamOps.pruneChainVersions(fs, rootP, retain, Seq("postings"))
-      ver
-    } else {
-      commitVersion(s, root, ver,
-        loadPostings(s, root)
-          .join(broadcast(batch.select("doc_id")), Seq("doc_id"),
-            "left_anti")
-          .select("token", "doc_id", "tf", "dl", "positions", "tb"),
-        stampId, stampTag, retain)
-    }
+      chain.commit(s, root, c.live + 1, stamp, retain) { dir =>
+        def seg(name: String) = new org.apache.hadoop.fs.Path(dir, name).toString
+        val gone = postingsOf(batch)
+        batch.select("doc_id")
+          .coalesce(1).write.mode("overwrite").parquet(seg("tombstones"))
+        vocabOf(gone).selectExpr("token", "-df AS df", "tb")
+          .write.mode("overwrite").partitionBy("tb").parquet(seg("vocab-delta"))
+        statsOf(gone).selectExpr("-n_docs AS n_docs", "-sum_dl AS sum_dl")
+          .coalesce(1).write.mode("overwrite").parquet(seg("stats-delta"))
+      }
+    else
+      commitBase(s, root, c.live + 1,
+        livePostings(s, c).join(broadcast(batch.select("doc_id")),
+          Seq("doc_id"), "left_anti"),
+        stamp, retain)
   }
 
   /** Streaming maintenance sink: each micro-batch of (doc_id, text)
@@ -479,17 +367,12 @@ object RetrievalIndex {
     * live doc_id (dedupe or forget-first if it can).
     */
   def indexAppendSink(docs: DataFrame, root: String, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val fallbackIncarnation = java.util.UUID.randomUUID().toString
-    docs.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val incarnation = Option(b.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId"))
-          .getOrElse(fallbackIncarnation)
-        appendDocs(b.toDF(), root, id, incarnation, retain)
-        ()
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    SegmentChain.stampedSink(docs) { (b, id, incarnation) =>
+      appendDocs(b, root, id, incarnation, retain)
+      ()
     }
-  }
+
 
   /** Streaming FORGET sink — the retrieval family's other half of the
     * mutation pair ([[VectorIndex.graphDeleteSink]]'s arrangement):
@@ -503,17 +386,12 @@ object RetrievalIndex {
     * cadence.
     */
   def indexForgetSink(docs: DataFrame, root: String, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val fallbackIncarnation = java.util.UUID.randomUUID().toString
-    docs.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val incarnation = Option(b.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId"))
-          .getOrElse(fallbackIncarnation)
-        forgetDocs(b.sparkSession, root, b.toDF(), id, incarnation, retain)
-        ()
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    SegmentChain.stampedSink(docs) { (b, id, incarnation) =>
+      forgetDocs(b.sparkSession, root, b, id, incarnation, retain)
+      ()
     }
-  }
+
 
   /** The LIVE doc-id set (doc_id, db): base `docs/` ∖ tombstones ∪
     * every `docs-delta/` — the sidecar read an admission novelty check
@@ -523,32 +401,15 @@ object RetrievalIndex {
     * buckets).
     */
   def liveDocIds(s: SparkSession, root: String,
-      buckets: Option[Seq[Long]] = None): DataFrame = {
-    import org.apache.spark.sql.types._
-    val v = latestVersion(s, root).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $root — build first"))
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val pv = postingsVersion(fs, root, v)
-    val prune = (df: DataFrame) =>
+      buckets: Option[Seq[Long]] = None): DataFrame =
+    liveDocsAt(s, chain.resolve(s, root), buckets)
+
+  private def liveDocsAt(s: SparkSession, c: SegmentChain.Snapshot,
+      buckets: Option[Seq[Long]]): DataFrame =
+    c.unionLive(s, "doc_id", "docs", "docs-delta") { p =>
+      val df = s.read.schema(docsSchema).parquet(p)
       buckets.fold(df)(b => df.filter(col("db").isin(b: _*)))
-    val base0 = prune(s.read.schema(docsSchema).parquet(s"$root/v$pv/docs"))
-    val ts = ((pv + 1) to v).reverseIterator
-      .map(i => new org.apache.hadoop.fs.Path(s"$root/v$i/tombstones"))
-      .find(fs.exists)
-    val base = ts match {
-      case Some(p) => base0.join(
-        broadcast(s.read.schema(StructType(Seq(
-          StructField("doc_id", LongType)))).parquet(p.toString)),
-        Seq("doc_id"), "left_anti")
-      case None => base0
     }
-    val deltas = ((pv + 1) to v).filter(i => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$root/v$i/docs-delta")))
-      .map(i => prune(s.read.schema(docsSchema)
-        .parquet(s"$root/v$i/docs-delta")))
-    (base +: deltas).reduce(_ unionByName _)
-  }
 
   /** NOVELTY-GATED append — [[appendDocs]]'s new-docs contract made
     * MECHANICAL (the d79/e52 admission discipline on the retrieval
@@ -565,13 +426,9 @@ object RetrievalIndex {
   private[graft] def admitDocs(batch: DataFrame, root: String,
       batchId: Long, incarnationId: String, retain: Int = 2): Long = {
     val s = batch.sparkSession
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, rootP).getOrElse(
-      throw new IllegalStateException(
-        s"admitDocs needs a committed index under $root — build first"))
-    if (StreamOps.cdcMarkerStamp(fs, rootP, cur) == ((batchId, incarnationId)))
-      return cur
+    val c = chain.resolve(s, root)
+    val stamp = (batchId, incarnationId)
+    if (SegmentChain.isRetry(s, root, c.live, stamp)) return c.live
     val keyed = batch.select("doc_id", "text").dropDuplicates("doc_id")
       .selectExpr("doc_id", "text",
         s"pmod(xxhash64(doc_id), $nDocBuckets) AS db")
@@ -582,10 +439,10 @@ object RetrievalIndex {
     // it does not (either way the postings are never read)
     val novel =
       if (bkts.isEmpty) keyed.select("doc_id", "text")
-      else keyed.join(liveDocIds(s, root, Some(bkts)).select("doc_id"),
+      else keyed.join(liveDocsAt(s, c, Some(bkts)).select("doc_id"),
           Seq("doc_id"), "left_anti")
         .select("doc_id", "text")
-    appendDocs(novel, root, batchId, incarnationId, retain)
+    appendAt(s, c, novel, stamp, retain)
   }
 
   /** Streaming ADMISSION sink — the retrieval family's ingest gate
@@ -596,27 +453,21 @@ object RetrievalIndex {
     * never double-count.
     */
   def indexAdmitSink(docs: DataFrame, root: String, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val fallbackIncarnation = java.util.UUID.randomUUID().toString
-    docs.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val incarnation = Option(b.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId"))
-          .getOrElse(fallbackIncarnation)
-        admitDocs(b.toDF(), root, id, incarnation, retain)
-        ()
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    SegmentChain.stampedSink(docs) { (b, id, incarnation) =>
+      admitDocs(b, root, id, incarnation, retain)
+      ()
     }
-  }
+
 
   /** Fold the live chain into ONE self-contained version — stamped
     * (−2, "optimize") like every index family's maintenance commit.
     */
   def compactIndex(s: SparkSession, root: String,
       retain: Int = 2): Option[Long] =
-    latestVersion(s, root).map { cur =>
-      commitVersion(s, root, cur + 1,
-        loadPostings(s, root).select("token", "doc_id", "tf", "dl", "positions", "tb"),
-        -2L, "optimize", retain)
+    chain.resolveOption(s, root).map { c =>
+      commitBase(s, root, c.live + 1, livePostings(s, c),
+        (-2L, "optimize"), retain)
     }
 
   /** BM25 top-5 per query term, served ENTIRELY off the committed
@@ -629,7 +480,8 @@ object RetrievalIndex {
     */
   def serveBm25TopK(s: SparkSession, root: String, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val qterms = loadVocab(s, root)
+    val c = chain.resolve(s, root)
+    val qterms = liveVocab(s, c)
       .orderBy(col("df").asc, col("token").asc).limit(8)
       .selectExpr("token", "df", s"pmod(xxhash64(token), $nBuckets) AS qtb")
       .collect()
@@ -642,11 +494,11 @@ object RetrievalIndex {
     val terms = qterms.map(r => s.range(1)
         .select(lit(r.getString(0)).as("token"), lit(r.getLong(1)).as("df")))
       .reduce(_ unionByName _)
-    loadPostings(s, root)
+    livePostings(s, c)
       .filter(col("tb").isin(tbs: _*))
       .filter(col("token").isin(termLits: _*))
       .join(broadcast(terms), Seq("token"))
-      .crossJoin(broadcast(loadStats(s, root)))
+      .crossJoin(broadcast(liveStats(s, c)))
       .selectExpr("token AS query_term", "doc_id",
         s"round(${TextOps.bm25TermScoreExpr}, 6) AS bm25")
       .withColumn("rank", row_number().over(
@@ -671,12 +523,12 @@ object RetrievalIndex {
   def serveBm25Daat(s: SparkSession, root: String, terms: Seq[String],
       k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val termDf = resolveTerms(s, root, terms)
-    loadPostings(s, root)
+    val c = chain.resolve(s, root)
+    livePostings(s, c)
       .filter(col("tb").isin(termBuckets(s, terms): _*))
       .filter(col("token").isin(terms: _*))
-      .join(broadcast(termDf), Seq("token"))
-      .crossJoin(broadcast(loadStats(s, root)))
+      .join(broadcast(termsAt(s, c, terms)), Seq("token"))
+      .crossJoin(broadcast(liveStats(s, c)))
       .selectExpr("doc_id", s"${TextOps.bm25TermScoreExpr} AS sc")
       .groupBy("doc_id")
       .agg(round(sum("sc"), 6).as("bm25"),
@@ -882,8 +734,9 @@ object RetrievalIndex {
     import org.apache.spark.sql.expressions.Window
     val allToks = queryToks.select("token").distinct()
       .collect().map(_.getString(0)).toSeq
+    val c = chain.resolve(s, root)
     val qterms = queryToks
-      .join(broadcast(resolveTerms(s, root, allToks)), Seq("token"))
+      .join(broadcast(termsAt(s, c, allToks)), Seq("token"))
       .withColumn("rn", row_number().over(
         Window.partitionBy("qid").orderBy(col("df").asc, col("token").asc)))
       .filter(col("rn") <= 5)
@@ -893,12 +746,12 @@ object RetrievalIndex {
       .localCheckpoint()
     val selected = qterms.select("token").distinct()
       .collect().map(_.getString(0)).toSeq
-    loadPostings(s, root)
+    livePostings(s, c)
       .filter(col("tb").isin(termBuckets(s, selected): _*))
       .filter(col("token").isin(selected: _*))
       .join(broadcast(qterms), Seq("token"))
       .filter(col("doc_id") =!= col("qid"))
-      .crossJoin(broadcast(loadStats(s, root)))
+      .crossJoin(broadcast(liveStats(s, c)))
       .selectExpr("qid", "doc_id", s"${TextOps.bm25TermScoreExpr} AS sc")
       .groupBy("qid", "doc_id").agg(round(sum("sc"), 6).as("bm25"))
       .withColumn("lex_rank", row_number().over(
@@ -915,12 +768,9 @@ object RetrievalIndex {
   private[ext] def ensureCorpusIndex(s: SparkSession, dir: String): String = {
     val docs = graft.Tables.documents(s, dir).select("doc_id", "text")
     val root = defaultRoot(dir)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val want = s"$FormatTag:${fingerprint(docs)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-3L, want)))
-      .getOrElse(buildIndexFrom(docs, root))
+    SegmentChain.ensure(s, root,
+        (-3L, s"$FormatTag:${SegmentChain.fingerprint(docs, "doc_id")}"))(
+      buildIndexFrom(docs, root))
     root
   }
 
@@ -977,24 +827,19 @@ object RetrievalIndex {
     val incoming = docs.filter(col("bucket") >= TextOps.TrainCut)
       .select("doc_id", "text")
     val root = defaultLifeRoot(dir)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val want = s"$FormatTag+life[forget=$bm25ForgetPred]:${fingerprint(docs)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-7L, want)))
-      .getOrElse {
-        buildIndexFrom(base, root)                                // v0
-        forgetDocs(s, root, base.filter(expr(bm25ForgetPred)),
-          -6L, s"life-forget:$bm25ForgetPred")                    // v1: DV
-        appendDocs(incoming, root, -7L, want)                     // v2: delta
-      }
+    val want = s"$FormatTag+life[forget=$bm25ForgetPred]:" +
+      SegmentChain.fingerprint(docs, "doc_id")
+    SegmentChain.ensure(s, root, (-7L, want)) {
+      buildIndexFrom(base, root)                                // v0
+      forgetDocs(s, root, base.filter(expr(bm25ForgetPred)),
+        -6L, s"life-forget:$bm25ForgetPred")                    // v1: DV
+      appendDocs(incoming, root, -7L, want)                     // v2: delta
+    }
     serveBm25TopK(s, root)
   }
 
   def defaultAdmitRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-bm25-index-admit/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-bm25-index-admit", dataDir)
 
   /** The deterministic REDELIVERED slice d88 plants in its incoming
     * batch — base docs an at-least-once upstream sends again.
@@ -1022,16 +867,12 @@ object RetrievalIndex {
       .select("doc_id", "text")
       .unionByName(base.filter(expr(bm25RedeliverPred)))
     val root = defaultAdmitRoot(dir)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val want =
-      s"$FormatTag+admit[redeliver=$bm25RedeliverPred]:${fingerprint(docs)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-7L, want)))
-      .getOrElse {
-        buildIndexFrom(base, root)                                // v0
-        admitDocs(incoming, root, -7L, want)                      // v1: gated
-      }
+    val want = s"$FormatTag+admit[redeliver=$bm25RedeliverPred]:" +
+      SegmentChain.fingerprint(docs, "doc_id")
+    SegmentChain.ensure(s, root, (-7L, want)) {
+      buildIndexFrom(base, root)                                // v0
+      admitDocs(incoming, root, -7L, want)                      // v1: gated
+    }
     serveBm25TopK(s, root)
   }
 

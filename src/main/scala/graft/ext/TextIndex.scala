@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.QueryDef
-import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,12 +14,10 @@ import org.apache.spark.sql.functions._
   * scaling with |batch| × bucket occupancy, never |corpus|² (d17's
   * property, lifted from exact text equality to the near-dup tier).
   *
-  * On-disk layout (the same atomic marker protocol as the CDC sink /
-  * [[VectorIndex]]): `v<n>/postings/band=<b>/` — one (bh, doc_id) row
-  * per band per indexed doc, HIVE-PARTITIONED BY BAND (8 directories;
-  * probes join per band partition), committed by the `_commit-<n>`
-  * rename flip; a fingerprint stamp gives [[ensureIndex]] its
-  * reuse-or-rebuild decision. Signature parameters are d06's verbatim:
+  * On-disk segments ([[SegmentChain]] commits and resolves them):
+  * `v<n>/postings/band=<b>/` — one (bh, doc_id) row per band per
+  * indexed doc, HIVE-PARTITIONED BY BAND (8 directories; probes join
+  * per band partition). Signature parameters are d06's verbatim:
   * distinct word-trigram shingle hashes → 32 permutations
   * `xxhash64(i, h)` → 8 bands × 4 rows keyed by `xxhash64(m..m+3)` —
   * so the banded-candidates ≡ exact-pairs guarantee DedupSpec pins for
@@ -46,10 +43,13 @@ object TextIndex {
   private val nPerm = 32
   private val nBands = 8
 
+  /** Postings chain: `postings` bases, `postings-delta` admissions and
+    * `tombstones` forgets ([[SegmentChain]]).
+    */
+  private val chain = new SegmentChain("postings")
+
   def defaultRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-text-index/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-text-index", dataDir)
 
   /** Distinct trigram-shingle hashes of any (doc_id, text) frame —
     * d06's shingle table over an arbitrary frame.
@@ -73,42 +73,34 @@ object TextIndex {
       .select(col("doc_id"), col("e.band").as("band"), col("e.bh").as("bh"))
   }
 
-  private def fingerprint(docs: DataFrame): String = {
-    val r = docs.agg(count(lit(1)), sum("doc_id")).head()
-    s"n=${r.getLong(0)};s=${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-  }
-
   def latestVersion(s: SparkSession, root: String): Option[Long] =
-    StreamOps.cdcLatestCommit(
-      new org.apache.hadoop.fs.Path(root).getFileSystem(
-        s.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(root))
+    SegmentChain.latest(s, root)
 
-  private def commitVersion(s: SparkSession, root: String, ver: Long,
-      postings: DataFrame, stampId: Long, stampTag: String,
-      retain: Int): Long = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(rootP)
-    // wipe a crashed attempt's partial v<ver> BEFORE writing:
-    // [[postingsVersion]] resolves the chain base by fs.exists, so a
-    // torn postings/ dir left at a reused version number would be
-    // adopted as the base and silently shadow this commit's segments
-    fs.delete(new org.apache.hadoop.fs.Path(rootP, s"v$ver"), true)
-    postings.write.mode("overwrite").partitionBy("band")
-      .parquet(new org.apache.hadoop.fs.Path(rootP, s"v$ver/postings").toString)
-    StreamOps.flipCommitMarker(fs, rootP, ver, stampId, stampTag)
-    StreamOps.pruneChainVersions(fs, rootP, retain, Seq("postings"))
-    ver
+  private val postingsSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("bh", LongType),
+      StructField("band", IntegerType)))
   }
+
+  /** Commit band-partitioned `postings` as `segment` of version `ver`. */
+  private def commitPostings(s: SparkSession, root: String, ver: Long,
+      segment: String, postings: DataFrame, stamp: (Long, String),
+      retain: Int): Long =
+    chain.commit(s, root, ver, stamp, retain) { dir =>
+      postings.select("doc_id", "bh", "band").write.mode("overwrite")
+        .partitionBy("band")
+        .parquet(new org.apache.hadoop.fs.Path(dir, segment).toString)
+    }
 
   /** Build the postings of `docs` (doc_id, text) as a NEW version. */
   private[graft] def buildIndexFrom(docs: DataFrame, root: String,
       retain: Int = 2): Long = {
     val s = docs.sparkSession
-    val ver = latestVersion(s, root).map(_ + 1).getOrElse(0L)
-    commitVersion(s, root, ver, bandPostings(shinglesOf(docs)),
-      -3L, s"index:${fingerprint(docs)}", retain)
+    commitPostings(s, root, SegmentChain.next(s, root), "postings",
+      bandPostings(shinglesOf(docs)),
+      (-3L, s"index:${SegmentChain.fingerprint(docs, "doc_id")}"), retain)
   }
 
   /** Committed postings (doc_id, bh, band) with a DECLARED schema (the
@@ -119,87 +111,26 @@ object TextIndex {
     * ([[VectorIndex.loadCodes]]'s deletion-vector arrangement — the
     * anti-join is skipped when the live version has no tombstones).
     */
-  def loadPostings(s: SparkSession, root: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val v = latestVersion(s, root).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $root — build first"))
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val pv = postingsVersion(fs, root, v)
-    val sch = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("bh", LongType),
-      StructField("band", IntegerType)))
-    val base0 = s.read.schema(sch).parquet(s"$root/v$pv/postings")
-    // the chain invariant ([[forgetDocs]] compacts whenever the live
-    // chain already carries deltas or tombstones) keeps at most one
-    // tombstones version, directly on the base — so a forget shades
-    // ONLY the base segment and a re-admitted doc's delta stays live
-    val ts = ((pv + 1) to v).reverseIterator
-      .map(i => new org.apache.hadoop.fs.Path(s"$root/v$i/tombstones"))
-      .find(fs.exists)
-    val base = ts match {
-      case Some(p) => base0.join(
-        broadcast(s.read.schema(StructType(Seq(
-          StructField("doc_id", LongType)))).parquet(p.toString)),
-        Seq("doc_id"), "left_anti")
-      case None => base0
-    }
-    // O(batch) admission deltas since the base ([[admitBatch]])
-    val deltas = ((pv + 1) to v).filter(i => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$root/v$i/postings-delta")))
-      .map(i => s.read.schema(sch).parquet(s"$root/v$i/postings-delta"))
-    (base +: deltas).reduce(_ unionByName _)
-  }
+  def loadPostings(s: SparkSession, root: String): DataFrame =
+    livePostings(s, chain.resolve(s, root))
 
-  /** Deltas tolerated before an admission append auto-folds. */
-  private val AppendFoldThreshold = 8
+  private def livePostings(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
+    c.unionLive(s, "doc_id", "postings", "postings-delta")(
+      s.read.schema(postingsSchema).parquet(_))
 
   /** Commit already-banded `fresh` postings as the next version — an
-    * O(batch) `postings-delta/` segment, auto-folding into one postings
-    * table once the chain holds [[AppendFoldThreshold]] deltas
+    * O(batch) `postings-delta/` segment, or one folded postings table
+    * once the chain is [[SegmentChain.AppendFoldThreshold]] deep
     * ([[VectorIndex]]'s append discipline on the text family).
     */
-  private def appendPostings(s: SparkSession, root: String, cur: Long,
-      fresh: DataFrame, batchId: Long, incarnationId: String,
-      retain: Int): Long = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val pv = postingsVersion(fs, root, cur)
-    val nDeltas = ((pv + 1) to cur).count(i => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$root/v$i/postings-delta")))
-    if (nDeltas >= AppendFoldThreshold) {
-      val merged = loadPostings(s, root).select("doc_id", "band", "bh")
-        .unionByName(fresh.select("doc_id", "band", "bh"))
-      commitVersion(s, root, cur + 1, merged, batchId, incarnationId, retain)
-    } else {
-      val ver = cur + 1
-      // wipe a crashed attempt's partial dir (see commitVersion)
-      fs.delete(new org.apache.hadoop.fs.Path(rootP, s"v$ver"), true)
-      fresh.select("doc_id", "bh", "band").write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(new org.apache.hadoop.fs.Path(rootP,
-          s"v$ver/postings-delta").toString)
-      StreamOps.flipCommitMarker(fs, rootP, ver, batchId, incarnationId)
-      StreamOps.pruneChainVersions(fs, rootP, retain, Seq("postings"))
-      ver
-    }
-  }
-
-  /** The version whose `postings/` backs `v` — `v` itself except for a
-    * forget (DV) commit, which references the nearest lower version.
-    */
-  private def postingsVersion(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Long): Long = {
-    var c = v
-    while (c >= 0 && !fs.exists(
-        new org.apache.hadoop.fs.Path(s"$root/v$c/postings")))
-      c -= 1
-    if (c < 0) throw new IllegalStateException(
-      s"no postings directory reachable from v$v under $root — " +
-        "the referenced base version was pruned")
-    c
-  }
+  private def appendPostings(s: SparkSession, c: SegmentChain.Snapshot,
+      fresh: DataFrame, stamp: (Long, String), retain: Int): Long =
+    if (c.shouldFold)
+      commitPostings(s, c.root, c.live + 1, "postings",
+        livePostings(s, c).unionByName(fresh.select("doc_id", "bh", "band")),
+        stamp, retain)
+    else commitPostings(s, c.root, c.live + 1, "postings-delta", fresh,
+      stamp, retain)
 
   /** Fold the live chain (base ∖ tombstones ∪ deltas) into ONE
     * self-contained postings version — [[VectorIndex.compactIndex]]'s
@@ -208,10 +139,9 @@ object TextIndex {
     */
   def compactIndex(s: SparkSession, root: String,
       retain: Int = 2): Option[Long] =
-    latestVersion(s, root).map { cur =>
-      commitVersion(s, root, cur + 1,
-        loadPostings(s, root).select("doc_id", "band", "bh"),
-        -2L, "optimize", retain)
+    chain.resolveOption(s, root).map { c =>
+      commitPostings(s, root, c.live + 1, "postings", livePostings(s, c),
+        (-2L, "optimize"), retain)
     }
 
   /** Forget documents — GDPR-style removal from the dedup index: a
@@ -229,35 +159,22 @@ object TextIndex {
   private[graft] def forgetDocs(s: SparkSession, root: String,
       ids: DataFrame, stampId: Long, stampTag: String,
       retain: Int = 2): Long = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, rootP).getOrElse(
-      throw new IllegalStateException(
-        s"forgetDocs needs a committed index under $root — build first"))
-    if (StreamOps.cdcMarkerStamp(fs, rootP, cur) == ((stampId, stampTag)))
-      return cur
-    val ver = cur + 1
-    val vdir = new org.apache.hadoop.fs.Path(rootP, s"v$ver")
-    // wipe a crashed attempt's partial dir (see commitVersion)
-    fs.delete(vdir, true)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/v$cur/postings"))) {
-      // live is a clean base (a postings-owning version starts a fresh
-      // chain): metadata-only forget — tombstones only
-      ids.select("doc_id").distinct()
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "tombstones").toString)
-    } else {
+    val c = chain.resolve(s, root)
+    val stamp = (stampId, stampTag)
+    if (SegmentChain.isRetry(s, root, c.live, stamp)) c.live
+    else if (c.depth == 0)
+      // live is a clean base: metadata-only forget — tombstones only
+      chain.commit(s, root, c.live + 1, stamp, retain) { dir =>
+        ids.select("doc_id").distinct()
+          .coalesce(1).write.mode("overwrite")
+          .parquet(new org.apache.hadoop.fs.Path(dir, "tombstones").toString)
+      }
+    else
       // chain already carries tombstones and/or deltas: COMPACT so the
       // chain keeps at most one tombstones version on a clean base
-      loadPostings(s, root)
-        .join(broadcast(ids.select("doc_id")), Seq("doc_id"), "left_anti")
-        .select("doc_id", "band", "bh")
-        .write.mode("overwrite").partitionBy("band")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "postings").toString)
-    }
-    StreamOps.flipCommitMarker(fs, rootP, ver, stampId, stampTag)
-    StreamOps.pruneChainVersions(fs, rootP, retain, Seq("postings"))
-    ver
+      commitPostings(s, root, c.live + 1, "postings", livePostings(s, c)
+        .join(broadcast(ids.select("doc_id")), Seq("doc_id"), "left_anti"),
+        stamp, retain)
   }
 
   /** Probe + verify: per `incoming` doc (doc_id, text), the best
@@ -308,24 +225,18 @@ object TextIndex {
       root: String, batchId: Long, incarnationId: String,
       retain: Int = 2): DataFrame = {
     val s = batch.sparkSession
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, rootP).getOrElse(
-      throw new IllegalStateException(
-        s"admitBatch needs a committed index under $root — build first"))
+    val c = chain.resolve(s, root)
     val verdicts = verdictsAgainst(batch, primary,
-      loadPostings(s, root), Some(batch.select("doc_id"))).cache()
-    val isRetry =
-      StreamOps.cdcMarkerStamp(fs, rootP, cur) == ((batchId, incarnationId))
-    if (!isRetry) {
+      livePostings(s, c), Some(batch.select("doc_id"))).cache()
+    val stamp = (batchId, incarnationId)
+    if (!SegmentChain.isRetry(s, root, c.live, stamp)) {
       val admitted = batch.join(
         verdicts.filter(col("is_near_dup")).select("doc_id"),
         Seq("doc_id"), "left_anti")
       // an all-dup (or empty) batch admits nothing — skip the commit
       // entirely rather than rewrite the index for no-op input
       if (!admitted.isEmpty)
-        appendPostings(s, root, cur, bandPostings(shinglesOf(admitted)),
-          batchId, incarnationId, retain)
+        appendPostings(s, c, bandPostings(shinglesOf(admitted)), stamp, retain)
     }
     verdicts
   }
@@ -336,21 +247,15 @@ object TextIndex {
     * sink maintains the index (dedup-then-index, the ingest order).
     */
   def admissionSink(docs: DataFrame, primary: DataFrame, root: String,
-      retain: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val fallbackIncarnation = java.util.UUID.randomUUID().toString
-    docs.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val incarnation = Option(b.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId"))
-          .getOrElse(fallbackIncarnation)
-        val v = admitBatch(b.toDF(), primary, root, id, incarnation, retain)
-        v.count()
-        // drop the per-batch verdict cache — a long-running sink must
-        // not accrete one cached plan per micro-batch in storage memory
-        v.unpersist()
-        ()
+      retain: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    SegmentChain.stampedSink(docs) { (b, id, incarnation) =>
+      val v = admitBatch(b, primary, root, id, incarnation, retain)
+      v.count()
+      // drop the per-batch verdict cache — a long-running sink must
+      // not accrete one cached plan per micro-batch in storage memory
+      v.unpersist()
+      ()
     }
-  }
 
   // ---------------------------------------------------------------- d79
 
@@ -371,12 +276,9 @@ object TextIndex {
     val incoming = docs.filter(col("bucket") >= TextOps.TrainCut)
       .select("doc_id", "text")
     val root = defaultRoot(dir)
-    val fp = s"index:${fingerprint(base)}"
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-3L, fp)))
-      .getOrElse(buildIndexFrom(base, root))
+    SegmentChain.ensure(s, root,
+        (-3L, s"index:${SegmentChain.fingerprint(base, "doc_id")}"))(
+      buildIndexFrom(base, root))
     verdictsAgainst(incoming, base, loadPostings(s, root), None)
   }
 
@@ -411,9 +313,7 @@ object TextIndex {
   // ---------------------------------------------------------------- d80
 
   def defaultForgetRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-text-index-forget/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-text-index-forget", dataDir)
 
   /** The deterministic forget set d80 commits out of the base split. */
   private[graft] def forgetPred = "doc_id % 11 = 2"
@@ -439,16 +339,13 @@ object TextIndex {
     val root = defaultForgetRoot(dir)
     // the stamp tag encodes the forget RULE too: a changed predicate on
     // an unchanged corpus must rebuild, not reuse the old tombstone set
-    val want = s"index+forget[$forgetPred]:${fingerprint(base)}"
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-4L, want)))
-      .getOrElse {
-        buildIndexFrom(base, root)
-        forgetDocs(s, root, base.filter(expr(forgetPred)).select("doc_id"),
-          -4L, want)
-      }
+    val want =
+      s"index+forget[$forgetPred]:${SegmentChain.fingerprint(base, "doc_id")}"
+    SegmentChain.ensure(s, root, (-4L, want)) {
+      buildIndexFrom(base, root)
+      forgetDocs(s, root, base.filter(expr(forgetPred)).select("doc_id"),
+        -4L, want)
+    }
     verdictsAgainst(incoming, base, loadPostings(s, root), None)
   }
 
@@ -484,9 +381,7 @@ object TextIndex {
   // ---------------------------------------------------------------- d82
 
   def defaultLifeRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-text-index-life/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-text-index-life", dataDir)
 
   /** Registry entry: the signature index's LIVE DOC STATE after the
     * full lifecycle chain — build the base split, forget a
@@ -510,18 +405,15 @@ object TextIndex {
     val incoming = docs.filter(col("bucket") >= TextOps.TrainCut)
       .select("doc_id", "text")
     val root = defaultLifeRoot(dir)
-    val want = s"index+life[forget=$forgetPred]:${fingerprint(docs)}"
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-7L, want)))
-      .getOrElse {
-        buildIndexFrom(base, root)                               // v0
-        forgetDocs(s, root, base.filter(expr(forgetPred))
-          .select("doc_id"), -6L, s"life-forget:$forgetPred")    // v1: DV
-        admitBatch(incoming, base, root, -7L, want).unpersist()  // v2: delta
-        latestVersion(s, root).get
-      }
+    val want =
+      s"index+life[forget=$forgetPred]:${SegmentChain.fingerprint(docs, "doc_id")}"
+    SegmentChain.ensure(s, root, (-7L, want)) {
+      buildIndexFrom(base, root)                               // v0
+      forgetDocs(s, root, base.filter(expr(forgetPred))
+        .select("doc_id"), -6L, s"life-forget:$forgetPred")    // v1: DV
+      admitBatch(incoming, base, root, -7L, want).unpersist()  // v2: delta
+      latestVersion(s, root).get
+    }
     loadPostings(s, root)
       .groupBy("doc_id").agg(count(lit(1)).as("n_bands"))
       .orderBy("doc_id")

@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.QueryDef
-import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,19 +27,14 @@ import org.apache.spark.sql.functions._
   *     HIVE-PARTITIONED BY COARSE CELL, so a probe reads exactly nprobe
   *     cell directories (partition-pruned scan — the e24 scaladoc's
   *     "codes bucketed by cell" promise, made literal on disk);
-  *   - `_commit-<n>` — the atomic commit marker, flipped by the SAME
-  *     rename protocol as [[StreamOps.cdcApplyParquetSink]] /
-  *     [[StreamOps.optimizeCdcTable]]: readers resolve max(committed
-  *     version) and can never observe a torn build — a crash mid-write
-  *     leaves the previous version live and the partial `v<n>` invisible
-  *     (and reclaimed by the next successful commit's prune).
   *
-  * The marker CONTENT doubles as the staleness guard: build commits
-  * stamp `(-3, "index:<fingerprint>")` where the fingerprint is a cheap
-  * deterministic aggregate of the indexed corpus (row count + vec_id
-  * sum). [[ensureIndex]] re-resolves the stamp and rebuilds as a NEW
-  * version only when the corpus fingerprint changed — the lakehouse
-  * REFRESH discipline on plain parquet.
+  * Versions commit, resolve and prune through [[SegmentChain]] (the
+  * `_commit-<n>` marker protocol, its crash-safety and read lease).
+  * Build commits stamp `(-3, "index.r:<fingerprint>")` where the
+  * fingerprint is a cheap deterministic aggregate of the indexed corpus
+  * (row count + vec_id sum); [[ensureIndex]] rebuilds as a NEW version
+  * only when the corpus fingerprint changed — the lakehouse REFRESH
+  * discipline on plain parquet.
   *
   * Incremental maintenance ([[appendBatch]] / [[indexAppendSink]]):
   * micro-batches of new vectors are assigned against the COMMITTED
@@ -80,33 +74,32 @@ object VectorIndex {
   private val l2 =
     "round(aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), 0D, (a, x) -> a + x), 6)"
 
+  /** Codes chain: `codes` bases, `codes-delta` appends and `tombstones`
+    * deletes; every version also carries its codebooks and stats.
+    */
+  private val chain = new SegmentChain("codes")
+
+  /** Graph chain: `edges` bases and `edges-delta` + `edges-tombstones`
+    * mutations.
+    */
+  private val graphChain = new SegmentChain("edges")
+
   /** Default on-disk root for a data directory's index — under the JVM
     * temp dir, keyed by the full data path so two corpora never share an
     * index. The registry entry (e46) serves through this root.
     */
   def defaultRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-index/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-ann-index", dataDir)
 
-  /** Cheap deterministic corpus fingerprint for the staleness stamp:
-    * row count + vec_id sum (one parallel aggregate). Catches appends,
-    * deletions and id remaps; a same-count same-idsum content change is
-    * outside what a registry data dir does between rounds.
-    */
-  private def fingerprint(e: DataFrame): String = {
-    val r = e.agg(count(lit(1)), sum("vec_id")).head()
-    s"n=${r.getLong(0)};s=${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-  }
+  /** The corpus fingerprint build stamps carry ([[SegmentChain.fingerprint]]). */
+  private def fingerprint(e: DataFrame): String =
+    SegmentChain.fingerprint(e, "vec_id")
 
   /** Latest committed index version under `indexRoot`, None before the
     * first commit — the same marker resolution every CDC reader uses.
     */
-  def latestVersion(s: SparkSession, indexRoot: String): Option[Long] = {
-    val root = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    StreamOps.cdcLatestCommit(fs, root)
-  }
+  def latestVersion(s: SparkSession, indexRoot: String): Option[Long] =
+    SegmentChain.latest(s, indexRoot)
 
   /** TRAINED coarse codebook (cid, cv) — e25's two deterministic Lloyd
     * rounds ([[VectorOps.kmeansCodebook]]'s exact chain: spherical
@@ -228,39 +221,33 @@ object VectorIndex {
         .as("codes"))
   }
 
-  /** Write codebook + cell-partitioned codes as `v<ver>` and flip the
-    * commit marker — the single commit step both build and append end
-    * in. Data first, marker last: a crash anywhere before the rename
-    * leaves the previous version live (torn reads impossible).
+  /** Write codebook + cell-partitioned codes as base version `ver` —
+    * the single commit step builds, folds and compactions end in.
     */
   private def commitVersion(s: SparkSession, indexRoot: String, ver: Long,
-      cb: DataFrame, pqcb: DataFrame, codes: DataFrame, stampId: Long,
-      stampTag: String, retain: Int): Long = {
-    val root = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    val vdir = new org.apache.hadoop.fs.Path(root, s"v$ver")
-    // a crashed attempt may have left a partial v<ver> (e.g. a torn
-    // codes/ dir with no marker): wipe it BEFORE writing, or base
-    // resolution ([[codesVersion]] walks fs.exists, not markers) could
-    // adopt the torn dir as the chain base and silently drop the
-    // delta/tombstones this commit writes beside it
-    fs.delete(vdir, true)
+      cb: DataFrame, pqcb: DataFrame, codes: DataFrame, stamp: (Long, String),
+      retain: Int): Long =
+    chain.commit(s, indexRoot, ver, stamp, retain) { dir =>
+      writeCodebooks(dir, cb, pqcb)
+      val codesDir = new org.apache.hadoop.fs.Path(dir, "codes").toString
+      codes.write.mode("overwrite").partitionBy("cell").parquet(codesDir)
+      // per-cell population stats, committed WITH the artifact (read back
+      // from the just-written files — exact, and costs one 8-byte-row
+      // column scan at build time, never at serve time): the adaptive
+      // probe routes off this ≤16-row table instead of aggregating the
+      // full code table per query
+      writeStatsFrom(s, readCodesDir(s, codesDir), dir)
+    }
+
+  /** The codebooks copy forward into every version (≤16 + ≤128 rows), so
+    * readers always resolve them at the live version.
+    */
+  private def writeCodebooks(dir: org.apache.hadoop.fs.Path, cb: DataFrame,
+      pqcb: DataFrame): Unit = {
     cb.coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "codebook").toString)
+      .parquet(new org.apache.hadoop.fs.Path(dir, "codebook").toString)
     pqcb.coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "pqcodebook").toString)
-    codes.write.mode("overwrite").partitionBy("cell")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "codes").toString)
-    // per-cell population stats, committed WITH the artifact (read back
-    // from the just-written files — exact, and costs one 8-byte-row
-    // column scan at build time, never at serve time): the adaptive
-    // probe routes off this ≤16-row table instead of aggregating the
-    // full code table per query
-    writeStatsFrom(s, readCodesDir(s, s"$indexRoot/v$ver/codes"), vdir)
-    StreamOps.flipCommitMarker(fs, root, ver, stampId, stampTag)
-    StreamOps.pruneChainVersions(fs, root, retain, Seq("codes"))
-    ver
+      .parquet(new org.apache.hadoop.fs.Path(dir, "pqcodebook").toString)
   }
 
   private def codesSchema: org.apache.spark.sql.types.StructType = {
@@ -285,13 +272,14 @@ object VectorIndex {
     * build/fold, merged incrementally on delta appends, decremented on
     * deletes) so probe-width decisions never scan the code table.
     */
-  def loadStats(s: SparkSession, indexRoot: String): DataFrame = {
+  def loadStats(s: SparkSession, indexRoot: String): DataFrame =
+    statsAt(s, chain.resolve(s, indexRoot))
+
+  private def statsAt(s: SparkSession, c: SegmentChain.Snapshot): DataFrame = {
     import org.apache.spark.sql.types._
-    val v = latestVersion(s, indexRoot).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $indexRoot — build first"))
     s.read.schema(StructType(Seq(
         StructField("cell", LongType), StructField("cnt", LongType))))
-      .parquet(s"$indexRoot/v$v/stats")
+      .parquet(c.dir(c.live, "stats"))
   }
 
   /** Build (or rebuild) the index from `e` (vec_id, v) as a NEW version
@@ -304,10 +292,8 @@ object VectorIndex {
     graft.functions.GraftFunctions.register(s)
     val cb = trainCoarse(e)
     val pqcb = trainPqResidual(e, cb)
-    val codes = encodeCorpus(e, cb, pqcb)
-    val ver = latestVersion(s, indexRoot).map(_ + 1).getOrElse(0L)
-    commitVersion(s, indexRoot, ver, cb, pqcb, codes,
-      -3L, s"index.r:${fingerprint(e)}", retain)
+    commitVersion(s, indexRoot, SegmentChain.next(s, indexRoot), cb, pqcb,
+      encodeCorpus(e, cb, pqcb), (-3L, s"index.r:${fingerprint(e)}"), retain)
   }
 
   /** Commit at `dstRoot` the encoding of `e` against `srcRoot`'s
@@ -322,9 +308,8 @@ object VectorIndex {
     graft.functions.GraftFunctions.register(s)
     val cb = loadCodebook(s, srcRoot)
     val pqcb = loadPqCodebook(s, srcRoot)
-    val ver = latestVersion(s, dstRoot).map(_ + 1).getOrElse(0L)
-    commitVersion(s, dstRoot, ver, cb, pqcb, encodeCorpus(e, cb, pqcb),
-      -9L, "spec-encode", 2)
+    commitVersion(s, dstRoot, SegmentChain.next(s, dstRoot), cb, pqcb,
+      encodeCorpus(e, cb, pqcb), (-9L, "spec-encode"), 2)
   }
 
   /** Assign + encode `e` against EXPLICIT committed quantizers — the
@@ -352,32 +337,28 @@ object VectorIndex {
   def ensureIndex(s: SparkSession, dataDir: String,
       indexRoot: String): Long = {
     val e = VectorOps.vecs(s, dataDir).select("vec_id", "v")
-    val root = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val want = s"index.r:${fingerprint(e)}"
-    StreamOps.cdcLatestCommit(fs, root)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, root, v) == ((-3L, want)))
-      .getOrElse(buildIndexFrom(e, indexRoot))
+    SegmentChain.ensure(s, indexRoot, (-3L, s"index.r:${fingerprint(e)}"))(
+      buildIndexFrom(e, indexRoot))
   }
 
   /** Load the latest committed version's codebook — 16 rows. Throws with
     * a clear message before the first commit (readers must never guess
     * at an uncommitted directory).
     */
-  def loadCodebook(s: SparkSession, indexRoot: String): DataFrame = {
-    val v = latestVersion(s, indexRoot).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $indexRoot — build first"))
-    s.read.parquet(s"$indexRoot/v$v/codebook")
-  }
+  def loadCodebook(s: SparkSession, indexRoot: String): DataFrame =
+    codebookAt(s, chain.resolve(s, indexRoot))
+
+  private def codebookAt(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
+    s.read.parquet(c.dir(c.live, "codebook"))
 
   /** Latest committed version's trained PQ codebooks (cid, cj, cv) —
     * ≤ 8×16 rows, broadcast at every serve/append site.
     */
-  def loadPqCodebook(s: SparkSession, indexRoot: String): DataFrame = {
-    val v = latestVersion(s, indexRoot).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $indexRoot — build first"))
-    s.read.parquet(s"$indexRoot/v$v/pqcodebook")
-  }
+  def loadPqCodebook(s: SparkSession, indexRoot: String): DataFrame =
+    pqCodebookAt(s, chain.resolve(s, indexRoot))
+
+  private def pqCodebookAt(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
+    s.read.parquet(c.dir(c.live, "pqcodebook"))
 
   /** Load the latest committed version's code table (vec_id, codes,
     * cell). The schema is DECLARED (not inferred): partition discovery
@@ -388,86 +369,28 @@ object VectorIndex {
     * a partition filter and only the probed cell directories are
     * listed/read — the read path the IndexSpec audits file-by-file.
     */
-  def loadCodes(s: SparkSession, indexRoot: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val v = latestVersion(s, indexRoot).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $indexRoot — build first"))
-    val fs = new org.apache.hadoop.fs.Path(indexRoot)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cv = codesVersion(fs, indexRoot, v)
-    val sch = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("codes", ArrayType(LongType)),
-      StructField("cell", LongType)))
-    val base0 = s.read.schema(sch).parquet(s"$indexRoot/v$cv/codes")
-    // the LIVE view: a deletion-vector version shades ids out of every
-    // reader without touching the code files — and it shades ONLY the
-    // base segment: the chain invariant ([[deleteIds]] compacts
-    // whenever the live chain already carries deltas or tombstones)
-    // guarantees at most one tombstones version per chain, committed
-    // directly on the base, with every delta AFTER it — so a vector
-    // deleted and later re-appended lives in an unshaded delta (re-add
-    // works). The anti-join, when present, broadcasts the small
-    // tombstone set UNDER the probe's partition filter; Catalyst pushes
-    // the cell filter through the union into EVERY segment scan, so
-    // pruning reaches base and delta reads alike.
-    val base = chainTombstones(fs, indexRoot, cv, v) match {
-      case Some(p) =>
-        val ts = s.read.schema(StructType(Seq(StructField("vec_id", LongType))))
-          .parquet(p)
-        base0.join(broadcast(ts), Seq("vec_id"), "left_anti")
-      case None => base0
-    }
-    // delta segments: O(batch)-sized appends committed since the base
-    // ([[appendBatch]]) — folded back into one codes table on the
-    // compaction cadence ([[compactIndex]] / the append auto-fold)
-    val deltas = ((cv + 1) to v).filter(i => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$indexRoot/v$i/codes-delta")))
-      .map(i => s.read.schema(sch).parquet(s"$indexRoot/v$i/codes-delta"))
-    (base +: deltas).reduce(_ unionByName _)
-  }
+  def loadCodes(s: SparkSession, indexRoot: String): DataFrame =
+    codesAt(s, chain.resolve(s, indexRoot))
 
-  /** The single tombstones file in the live chain (base `cv` .. live
-    * `v`], if any — the chain invariant keeps at most one.
+  /** The LIVE view of chain `c`: a deletion-vector version shades ids
+    * out of every reader without touching the code files — and it
+    * shades ONLY the base segment ([[deleteIds]] compacts whenever the
+    * live chain already carries deltas or tombstones), so a vector
+    * deleted and later re-appended lives in an unshaded delta (re-add
+    * works). The anti-join, when present, broadcasts the small
+    * tombstone set UNDER the probe's partition filter; Catalyst pushes
+    * the cell filter through the union into EVERY segment scan, so
+    * pruning reaches base and delta reads alike. Delta segments are the
+    * O(batch) appends since the base ([[appendBatch]]).
     */
-  private def chainTombstones(fs: org.apache.hadoop.fs.FileSystem,
-      indexRoot: String, cv: Long, v: Long): Option[String] =
-    ((cv + 1) to v).reverseIterator
-      .map(i => new org.apache.hadoop.fs.Path(s"$indexRoot/v$i/tombstones"))
-      .find(fs.exists)
-      .map(_.toString)
-
-  /** Number of delta segments in the live chain — the append auto-fold
-    * trigger reads this.
-    */
-  private def chainDeltaCount(fs: org.apache.hadoop.fs.FileSystem,
-      indexRoot: String, cv: Long, v: Long): Int =
-    ((cv + 1) to v).count(i => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$indexRoot/v$i/codes-delta")))
-
-  /** The version whose `codes/` directory backs version `v`: `v` itself
-    * for a build/append/compaction commit, the nearest lower version for
-    * a deletion-vector commit (which writes only tombstones + codebook —
-    * the metadata-only delete). The compaction rule in [[deleteIds]]
-    * keeps the referenced version inside the prune window.
-    */
-  private def codesVersion(fs: org.apache.hadoop.fs.FileSystem,
-      indexRoot: String, v: Long): Long = {
-    var c = v
-    while (c >= 0 && !fs.exists(
-        new org.apache.hadoop.fs.Path(s"$indexRoot/v$c/codes")))
-      c -= 1
-    if (c < 0) throw new IllegalStateException(
-      s"no codes directory reachable from v$v under $indexRoot — " +
-        "the referenced base version was pruned")
-    c
-  }
+  private def codesAt(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
+    c.unionLive(s, "vec_id", "codes", "codes-delta")(readCodesDir(s, _))
 
   /** Delete `ids` (a one-column vec_id frame) from the served index —
     * the deletion-vector discipline on plain parquet: when the live
     * version owns its code files, the delete commits METADATA ONLY
     * (cumulative tombstones + the 16-row codebook copied forward; the
-    * big code table is referenced back via [[codesVersion]]) — at 100 TB
+    * big code table is referenced back to the chain base) — at 100 TB
     * this is the difference between an O(deleted) commit and an O(corpus)
     * rewrite. A second delete on top of a DV version COMPACTS instead
     * (codes minus every tombstone, rewritten cell-partitioned), both so
@@ -480,51 +403,39 @@ object VectorIndex {
   private[graft] def deleteIds(s: SparkSession, indexRoot: String,
       ids: DataFrame, stampId: Long, stampTag: String,
       retain: Int = 2): Long = {
-    val root = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"deleteIds needs a committed index under $indexRoot — build first"))
-    if (StreamOps.cdcMarkerStamp(fs, root, cur) == ((stampId, stampTag)))
-      return cur // redelivery of the delete that produced the live version
-    val ver = cur + 1
-    val vdir = new org.apache.hadoop.fs.Path(root, s"v$ver")
-    fs.delete(vdir, true) // wipe a crashed attempt's partial dir (see commitVersion)
-    loadCodebook(s, indexRoot).coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "codebook").toString)
-    loadPqCodebook(s, indexRoot).coalesce(1).write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "pqcodebook").toString)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexRoot/v$cur/codes"))) {
-      // live is a clean base (a codes-owning version starts a fresh
-      // chain: no deltas above it, no tombstones): metadata-only DV
-      // commit — tombstones written, codes by reference
-      ids.select("vec_id").distinct()
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "tombstones").toString)
-      // stats decrement by the deleted ids' cells — the one per-delete
-      // read of the (vec_id, cell) columns; the WRITE stays O(deleted)
-      loadStats(s, indexRoot)
-        .unionByName(loadCodes(s, indexRoot)
-          .join(broadcast(ids.select("vec_id")), Seq("vec_id"), "left_semi")
-          .groupBy("cell").agg((-count(lit(1))).as("cnt")))
-        .groupBy("cell").agg(sum("cnt").as("cnt"))
-        .filter(col("cnt") > 0)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "stats").toString)
-    } else {
-      // live chain already carries tombstones and/or deltas: COMPACT
-      // (live view minus the new ids, rewritten cell-partitioned) — the
-      // rule that keeps chains at most one tombstones version deep and
-      // lets [[loadCodes]] shade only the base segment
-      loadCodes(s, indexRoot)
-        .join(broadcast(ids.select("vec_id")), Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "codes").toString)
-      writeStatsFrom(s, readCodesDir(s, s"$indexRoot/v$ver/codes"), vdir)
+    val c = chain.resolve(s, indexRoot)
+    val stamp = (stampId, stampTag)
+    if (SegmentChain.isRetry(s, indexRoot, c.live, stamp))
+      return c.live // redelivery of the delete that produced the live version
+    chain.commit(s, indexRoot, c.live + 1, stamp, retain) { dir =>
+      def seg(name: String) = new org.apache.hadoop.fs.Path(dir, name).toString
+      writeCodebooks(dir, codebookAt(s, c), pqCodebookAt(s, c))
+      if (c.depth == 0) {
+        // live is a clean base (a codes-owning version starts a fresh
+        // chain: no deltas above it, no tombstones): metadata-only DV
+        // commit — tombstones written, codes by reference
+        ids.select("vec_id").distinct()
+          .coalesce(1).write.mode("overwrite").parquet(seg("tombstones"))
+        // stats decrement by the deleted ids' cells — the one per-delete
+        // read of the (vec_id, cell) columns; the WRITE stays O(deleted)
+        statsAt(s, c)
+          .unionByName(codesAt(s, c)
+            .join(broadcast(ids.select("vec_id")), Seq("vec_id"), "left_semi")
+            .groupBy("cell").agg((-count(lit(1))).as("cnt")))
+          .groupBy("cell").agg(sum("cnt").as("cnt"))
+          .filter(col("cnt") > 0)
+          .coalesce(1).write.mode("overwrite").parquet(seg("stats"))
+      } else {
+        // live chain already carries tombstones and/or deltas: COMPACT
+        // (live view minus the new ids, rewritten cell-partitioned) — the
+        // rule that keeps chains at most one tombstones version deep and
+        // lets [[loadCodes]] shade only the base segment
+        codesAt(s, c)
+          .join(broadcast(ids.select("vec_id")), Seq("vec_id"), "left_anti")
+          .write.mode("overwrite").partitionBy("cell").parquet(seg("codes"))
+        writeStatsFrom(s, readCodesDir(s, seg("codes")), dir)
+      }
     }
-    StreamOps.flipCommitMarker(fs, root, ver, stampId, stampTag)
-    StreamOps.pruneChainVersions(fs, root, retain, Seq("codes"))
-    ver
   }
 
   /** IVF-PQ kNN served ENTIRELY off the loaded artifact — e24's query
@@ -551,7 +462,8 @@ object VectorIndex {
   private def serveAdc(s: SparkSession, dataDir: String,
       indexRoot: String): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(s)
-    val cb = loadCodebook(s, indexRoot)
+    val c = chain.resolve(s, indexRoot)
+    val cb = codebookAt(s, c)
     val q = VectorOps.vecs(s, dataDir).filter(col("vec_id") === 0)
       .selectExpr("v AS qv")
     // coarse routing: 16 loaded centroids × 1 query — driver-bounded
@@ -563,14 +475,14 @@ object VectorIndex {
     // partition filter, so only nprobe cell directories are listed/read
     // (a join would scan all partitions before filtering)
     val probed = qcells.collect().map(_.getLong(0)).toSeq
-    val cand = loadCodes(s, indexRoot)
+    val cand = codesAt(s, c)
       .filter(col("cell").isin(probed: _*))
       .filter(col("vec_id") =!= 0)
     // PER-CELL ADC lookup tables (nprobe × 8 × 16 rows): stored codes
     // quantize residuals, so the query side is q − centroid(cell) per
     // probed cell against the residual codebooks — the per-cell tables
     // IndexIVFPQ precomputes (e63's serving shape off the artifact)
-    val qtab = perCellQueryTables(s, indexRoot, q, qcells)
+    val qtab = perCellQueryTables(s, c, q, qcells)
     val adc = cand.select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
       .join(broadcast(qtab), col("cell") === col("tcell") &&
@@ -585,15 +497,15 @@ object VectorIndex {
     * residual vs THAT cell's centroid, scored against the committed
     * residual codebooks. Broadcast-sized (|cells| × 128 rows).
     */
-  private def perCellQueryTables(s: SparkSession, indexRoot: String,
+  private def perCellQueryTables(s: SparkSession, c: SegmentChain.Snapshot,
       q: DataFrame, cells: DataFrame): DataFrame = {
-    val qres = cells.join(broadcast(loadCodebook(s, indexRoot)),
+    val qres = cells.join(broadcast(codebookAt(s, c)),
         col("qcell") === col("cid"))
       .crossJoin(broadcast(q))
       .selectExpr("qcell", "zip_with(qv, cv, (x, y) -> x - y) AS v")
       .selectExpr("qcell", subEx)
       .select(col("qcell"), col("s.j").as("j"), col("s.sv").as("sv"))
-    qres.join(broadcast(loadPqCodebook(s, indexRoot)),
+    qres.join(broadcast(pqCodebookAt(s, c)),
         col("j") === col("cj"))
       .selectExpr("qcell AS tcell", "j AS qj", "cid AS qcid", s"$l2 AS qd2")
   }
@@ -602,15 +514,15 @@ object VectorIndex {
     * variant: per (qid, probed cell) one 8×16 residual lookup table
     * (nQueries × nprobe × 128 rows, still broadcast-sized).
     */
-  private def perQueryCellTables(s: SparkSession, indexRoot: String,
+  private def perQueryCellTables(s: SparkSession, c: SegmentChain.Snapshot,
       qs: DataFrame, qcells: DataFrame): DataFrame = {
-    val qres = qcells.join(broadcast(loadCodebook(s, indexRoot)),
+    val qres = qcells.join(broadcast(codebookAt(s, c)),
         col("qcell") === col("cid"))
       .join(qs, Seq("qid"))
       .selectExpr("qid", "qcell", "zip_with(qv, cv, (x, y) -> x - y) AS v")
       .selectExpr("qid", "qcell", subEx)
       .select(col("qid"), col("qcell"), col("s.j").as("j"), col("s.sv").as("sv"))
-    qres.join(broadcast(loadPqCodebook(s, indexRoot)),
+    qres.join(broadcast(pqCodebookAt(s, c)),
         col("j") === col("cj"))
       .selectExpr("qid AS tqid", "qcell AS tcell", "j AS qj",
         "cid AS qcid", s"$l2 AS qd2")
@@ -650,75 +562,48 @@ object VectorIndex {
       batchId: Long, incarnationId: String, retain: Int = 2): Long = {
     val s = batch.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val root = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"appendBatch needs a committed index under $indexRoot — build first"))
-    if (StreamOps.cdcMarkerStamp(fs, root, cur) == ((batchId, incarnationId)))
-      return cur // genuine retry of the batch that produced the live version
+    val c = chain.resolve(s, indexRoot)
+    val stamp = (batchId, incarnationId)
+    if (SegmentChain.isRetry(s, indexRoot, c.live, stamp))
+      return c.live // genuine retry of the batch that produced the live version
     // streaming sinks regularly deliver empty micro-batches — an empty
     // append must not cost a commit (version churn + a full write)
-    if (batch.isEmpty) return cur
-    val cb = loadCodebook(s, indexRoot)
-    val pqcb = loadPqCodebook(s, indexRoot)
-    val fresh = encodeCorpus(batch, cb, pqcb)
-    appendEncoded(s, indexRoot, cur, cb, pqcb, fresh, batchId,
-      incarnationId, retain)
+    if (batch.isEmpty) return c.live
+    val cb = codebookAt(s, c)
+    val pqcb = pqCodebookAt(s, c)
+    appendEncoded(s, c, cb, pqcb, encodeCorpus(batch, cb, pqcb), stamp, retain)
   }
-
-  /** Deltas tolerated in a chain before an append auto-folds — bounds
-    * both the per-read segment count and the prune window's tail.
-    */
-  private val AppendFoldThreshold = 8
 
   /** Commit already-encoded `fresh` codes as the next version — as an
     * O(batch) `codes-delta/` segment (the point of incremental
     * maintenance: append IO scales with the batch, never the corpus),
-    * auto-FOLDING into a self-contained codes version once the chain
-    * holds [[AppendFoldThreshold]] deltas (the OPTIMIZE cadence —
-    * [[compactIndex]] is the explicit maintenance entry). Codebooks are
-    * tiny (≤16 + ≤128 rows) and copy forward every commit so readers
-    * always resolve them at the live version.
+    * auto-FOLDING into a self-contained codes version once the chain is
+    * [[SegmentChain.AppendFoldThreshold]] deep (the OPTIMIZE cadence —
+    * [[compactIndex]] is the explicit maintenance entry).
     */
-  private def appendEncoded(s: SparkSession, indexRoot: String, cur: Long,
-      cb: DataFrame, pqcb: DataFrame, fresh: DataFrame, batchId: Long,
-      incarnationId: String, retain: Int): Long = {
-    val root = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val bv = codesVersion(fs, indexRoot, cur)
-    if (chainDeltaCount(fs, indexRoot, bv, cur) >= AppendFoldThreshold) {
-      val merged = loadCodes(s, indexRoot)
-        .select("vec_id", "cell", "codes").unionByName(fresh)
-      commitVersion(s, indexRoot, cur + 1, cb, pqcb, merged, batchId,
-        incarnationId, retain)
-    } else {
-      val ver = cur + 1
-      val vdir = new org.apache.hadoop.fs.Path(root, s"v$ver")
-      fs.delete(vdir, true) // wipe a crashed attempt's partial dir (see commitVersion)
-      cb.coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "codebook").toString)
-      pqcb.coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "pqcodebook").toString)
-      fresh.write.mode("overwrite").partitionBy("cell")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "codes-delta").toString)
+  private def appendEncoded(s: SparkSession, c: SegmentChain.Snapshot,
+      cb: DataFrame, pqcb: DataFrame, fresh: DataFrame, stamp: (Long, String),
+      retain: Int): Long =
+    if (c.shouldFold)
+      commitVersion(s, c.root, c.live + 1, cb, pqcb,
+        codesAt(s, c).select("vec_id", "cell", "codes").unionByName(fresh),
+        stamp, retain)
+    else chain.commit(s, c.root, c.live + 1, stamp, retain) { dir =>
+      val deltaDir = new org.apache.hadoop.fs.Path(dir, "codes-delta").toString
+      writeCodebooks(dir, cb, pqcb)
+      fresh.write.mode("overwrite").partitionBy("cell").parquet(deltaDir)
       // stats merge incrementally: prior table + the written delta's
       // per-cell counts — O(batch + 16), the commit never rescans codes
-      loadStats(s, indexRoot)
-        .unionByName(readCodesDir(s,
-            new org.apache.hadoop.fs.Path(vdir, "codes-delta").toString)
+      statsAt(s, c)
+        .unionByName(readCodesDir(s, deltaDir)
           .groupBy("cell").agg(count(lit(1)).as("cnt")))
         .groupBy("cell").agg(sum("cnt").as("cnt"))
         .coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "stats").toString)
-      StreamOps.flipCommitMarker(fs, root, ver, batchId, incarnationId)
-      StreamOps.pruneChainVersions(fs, root, retain, Seq("codes"))
-      ver
+        .parquet(new org.apache.hadoop.fs.Path(dir, "stats").toString)
     }
-  }
 
   /** Fold the live chain (base ∖ tombstones ∪ deltas) into ONE
-    * self-contained codes version — [[StreamOps.optimizeCdcTable]]'s
+    * self-contained codes version — [[graft.streaming.StreamOps.optimizeCdcTable]]'s
     * maintenance shape on the index family, stamped (−2, "optimize")
     * like the CDC OPTIMIZE so stream retry detection can never mistake
     * it for a batch. After the fold, the chain-aware prune retires the
@@ -727,30 +612,25 @@ object VectorIndex {
     */
   def compactIndex(s: SparkSession, indexRoot: String,
       retain: Int = 2): Option[Long] =
-    latestVersion(s, indexRoot).map { cur =>
-      commitVersion(s, indexRoot, cur + 1,
-        loadCodebook(s, indexRoot), loadPqCodebook(s, indexRoot),
-        loadCodes(s, indexRoot).select("vec_id", "cell", "codes"),
-        -2L, "optimize", retain)
+    chain.resolveOption(s, indexRoot).map { c =>
+      commitVersion(s, indexRoot, c.live + 1,
+        codebookAt(s, c), pqCodebookAt(s, c),
+        codesAt(s, c).select("vec_id", "cell", "codes"),
+        (-2L, "optimize"), retain)
     }
 
   /** Streaming maintenance sink: each micro-batch of new vectors
     * appends through [[appendBatch]] — version re-resolved per batch,
     * commit via the marker flip, retries detected by stamp
-    * ([[StreamOps.cdcApplyParquetSink]]'s exact discipline).
+    * ([[graft.streaming.StreamOps.cdcApplyParquetSink]]'s exact discipline).
     */
   def indexAppendSink(vectors: DataFrame, indexRoot: String,
-      retain: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val fallbackIncarnation = java.util.UUID.randomUUID().toString
-    vectors.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val incarnation = Option(b.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId"))
-          .getOrElse(fallbackIncarnation)
-        appendBatch(b.toDF(), indexRoot, id, incarnation, retain)
-        ()
+      retain: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    SegmentChain.stampedSink(vectors) { (b, id, incarnation) =>
+      appendBatch(b, indexRoot, id, incarnation, retain)
+      ()
     }
-  }
+
 
   // ---------------------------------------------------------------- e46
 
@@ -780,7 +660,8 @@ object VectorIndex {
       indexRoot: String, nQueries: Int = 10, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(s)
-    val cb = loadCodebook(s, indexRoot)
+    val c = chain.resolve(s, indexRoot)
+    val cb = codebookAt(s, c)
     val qs = VectorOps.vecs(s, dataDir).filter(col("vec_id") < nQueries)
       .selectExpr("vec_id AS qid", "v AS qv")
     val qcells = qs.crossJoin(broadcast(cb))
@@ -795,11 +676,11 @@ object VectorIndex {
     // ≤16 distinct cells however many queries probe them — one read
     val probed = qcells.select("qcell").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val cand = loadCodes(s, indexRoot)
+    val cand = codesAt(s, c)
       .filter(col("cell").isin(probed: _*))
     val candQ = cand.join(broadcast(qcells), col("cell") === col("qcell"))
       .filter(col("vec_id") =!= col("qid"))
-    val qtab = perQueryCellTables(s, indexRoot, qs, qcells)
+    val qtab = perQueryCellTables(s, c, qs, qcells)
     candQ.select(col("qid"), col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
       .join(broadcast(qtab), col("qid") === col("tqid") &&
@@ -836,43 +717,17 @@ object VectorIndex {
     * expensive corpus pass, the walk only ever probes adjacency.
     */
   def defaultGraphRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-graph/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-ann-graph", dataDir)
 
   def ensureGraphIndex(s: SparkSession, dataDir: String,
       root: String, retain: Int = 2): Long = {
     val e = VectorOps.vecs(s, dataDir).select("vec_id", "v")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val want = s"index:${fingerprint(e)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-3L, want)))
-      .getOrElse {
-        val ver = StreamOps.cdcLatestCommit(fs, rootP)
-          .map(_ + 1).getOrElse(0L)
-        commitGraphFull(s, root, ver,
-          VectorOps.knnGraph(s, dataDir)
-            .select(col("vec_id").as("src"), col("neighbor_id").as("dst")),
-          -3L, want, retain)
-      }
-  }
-
-  /** The version whose `edges/` directory backs `v`: `v` itself for a
-    * build/fold commit, the nearest lower version for a mutation commit
-    * (which writes only O(touched) `edges-delta/` + `edges-tombstones/`
-    * segments — [[codesVersion]]'s discipline on the graph family).
-    */
-  private def edgesVersion(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Long): Long = {
-    var c = v
-    while (c >= 0 && !fs.exists(
-        new org.apache.hadoop.fs.Path(s"$root/v$c/edges")))
-      c -= 1
-    if (c < 0) throw new IllegalStateException(
-      s"no edges directory reachable from v$v under $root — " +
-        "the referenced base version was pruned")
-    c
+    val stamp = (-3L, s"index:${fingerprint(e)}")
+    SegmentChain.ensure(s, root, stamp)(
+      commitGraphFull(s, root, SegmentChain.next(s, root),
+        VectorOps.knnGraph(s, dataDir)
+          .select(col("vec_id").as("src"), col("neighbor_id").as("dst")),
+        stamp, retain))
   }
 
   /** The LIVE adjacency: base `edges/` folded with every mutation
@@ -886,34 +741,28 @@ object VectorIndex {
     * invariant [[graphDeleteBatch]] maintains. Deltas are batch-sized,
     * so the per-segment supersede is a broadcast anti-join on the base
     * scan; chains fold back to one `edges/` table on the
-    * [[AppendFoldThreshold]] cadence ([[compactGraphIndex]] /
-    * the mutation auto-fold).
+    * [[SegmentChain.AppendFoldThreshold]] cadence ([[compactGraphIndex]]
+    * / the mutation auto-fold).
     */
-  def loadGraph(s: SparkSession, root: String): DataFrame = {
+  def loadGraph(s: SparkSession, root: String): DataFrame =
+    graphAt(s, graphChain.resolve(s, root))
+
+  private def graphAt(s: SparkSession, c: SegmentChain.Snapshot): DataFrame = {
     import org.apache.spark.sql.types._
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val v = StreamOps.cdcLatestCommit(fs, rootP).getOrElse(
-      throw new IllegalStateException(
-        s"no committed graph index under $root — build first"))
-    val bv = edgesVersion(fs, root, v)
     val sch = StructType(Seq(
       StructField("src", LongType), StructField("dst", LongType)))
     val tsch = StructType(Seq(StructField("src", LongType)))
-    ((bv + 1) to v).foldLeft(
-        s.read.schema(sch).parquet(s"$root/v$bv/edges")) { (acc, i) =>
-      val dDir = new org.apache.hadoop.fs.Path(s"$root/v$i/edges-delta")
-      val tDir = new org.apache.hadoop.fs.Path(s"$root/v$i/edges-tombstones")
-      val (hasD, hasT) = (fs.exists(dDir), fs.exists(tDir))
+    c.links.foldLeft(s.read.schema(sch).parquet(c.dir(c.base, "edges"))) { (acc, i) =>
+      val (hasD, hasT) = (c.has(i, "edges-delta"), c.has(i, "edges-tombstones"))
       if (!hasD && !hasT) acc
       else {
         val delta =
-          if (hasD) s.read.schema(sch).parquet(dDir.toString)
+          if (hasD) s.read.schema(sch).parquet(c.dir(i, "edges-delta"))
           else s.createDataFrame(
             s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
         val superseded =
           (if (hasT) delta.select("src").unionByName(
-            s.read.schema(tsch).parquet(tDir.toString))
+            s.read.schema(tsch).parquet(c.dir(i, "edges-tombstones")))
           else delta.select("src")).distinct()
         acc.join(broadcast(superseded), Seq("src"), "left_anti")
           .unionByName(delta)
@@ -921,72 +770,55 @@ object VectorIndex {
     }
   }
 
-  /** Mutation segments tolerated in a graph chain before a commit
-    * auto-folds — every graph version is either a base (`edges/`) or a
-    * mutation segment, so the chain length IS `live − base`.
-    */
-  private def graphChainLength(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, cur: Long): Long =
-    cur - edgesVersion(fs, root, cur)
-
-  /** Commit a SELF-CONTAINED adjacency as `v<ver>/edges` and flip the
-    * marker — the base/fold commit both graph builds and chain folds
-    * end in (src-sorted so row-group min/max stats prune per-hop
-    * probes).
+  /** Commit a SELF-CONTAINED adjacency as `v<ver>/edges` — the base/fold
+    * commit both graph builds and chain folds end in (src-sorted so
+    * row-group min/max stats prune per-hop probes).
     */
   private def commitGraphFull(s: SparkSession, root: String, ver: Long,
-      edges: DataFrame, stampId: Long, stampTag: String,
-      retain: Int): Long = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(rootP)
-    val vdir = new org.apache.hadoop.fs.Path(rootP, s"v$ver")
-    fs.delete(vdir, true) // wipe a crashed attempt's partial dir
-    edges.sortWithinPartitions("src").write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(vdir, "edges").toString)
-    StreamOps.flipCommitMarker(fs, rootP, ver, stampId, stampTag)
-    StreamOps.pruneChainVersions(fs, rootP, retain, Seq("edges"))
-    ver
-  }
+      edges: DataFrame, stamp: (Long, String), retain: Int): Long =
+    graphChain.commit(s, root, ver, stamp, retain) { dir =>
+      edges.sortWithinPartitions("src").write.mode("overwrite")
+        .parquet(new org.apache.hadoop.fs.Path(dir, "edges").toString)
+    }
+
+  /** Commit the kNN graph of `vecs` as the next base version, stamped
+    * (-3, "graph:<fingerprint>") — the first commit of every maintained
+    * graph's ensure chain.
+    */
+  private def commitGraphBase(s: SparkSession, root: String,
+      vecs: DataFrame): Long =
+    commitGraphFull(s, root, SegmentChain.next(s, root),
+      VectorOps.knnGraphFrom(vecs)
+        .select(col("vec_id").as("src"), col("neighbor_id").as("dst")),
+      (-3L, s"graph:${fingerprint(vecs)}"), 2)
 
   /** Commit an O(touched) mutation segment: the touched sources' full
     * new adjacency (`edges-delta/`) plus the removed nodes
     * (`edges-tombstones/`) — the graph family's answer to codes-delta /
     * postings-delta: a micro-batch mutation writes bytes proportional
     * to the touched neighborhood, never the corpus. Auto-folds into a
-    * self-contained `edges/` version once the chain holds
-    * [[AppendFoldThreshold]] segments.
+    * self-contained `edges/` version once the chain is
+    * [[SegmentChain.AppendFoldThreshold]] deep.
     */
-  private def commitGraphMutation(s: SparkSession, root: String,
-      cur: Long, delta: DataFrame, tombstones: Option[DataFrame],
-      stampId: Long, stampTag: String, retain: Int): Long = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (graphChainLength(fs, root, cur) >= AppendFoldThreshold) {
+  private def commitGraphMutation(s: SparkSession, c: SegmentChain.Snapshot,
+      delta: DataFrame, tombstones: Option[DataFrame], stamp: (Long, String),
+      retain: Int): Long =
+    if (c.shouldFold) {
       // fold: resolve the live view (base ∖ superseded ∪ deltas), apply
       // this mutation on top, write one self-contained edges version
-      val live = loadGraph(s, root)
       val superseded = tombstones.foldLeft(delta.select("src").distinct())(
         (t, rm) => t.unionByName(rm.select("src"))).distinct()
-      val merged = live
+      val merged = graphAt(s, c)
         .join(broadcast(superseded), Seq("src"), "left_anti")
         .unionByName(delta)
-      commitGraphFull(s, root, cur + 1, merged, stampId, stampTag, retain)
-    } else {
-      val ver = cur + 1
-      val vdir = new org.apache.hadoop.fs.Path(rootP, s"v$ver")
-      fs.delete(vdir, true) // wipe a crashed attempt's partial dir
+      commitGraphFull(s, c.root, c.live + 1, merged, stamp, retain)
+    } else graphChain.commit(s, c.root, c.live + 1, stamp, retain) { dir =>
       delta.sortWithinPartitions("src").write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir, "edges-delta").toString)
+        .parquet(new org.apache.hadoop.fs.Path(dir, "edges-delta").toString)
       tombstones.foreach(_.select("src").distinct()
         .coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(vdir,
-          "edges-tombstones").toString))
-      StreamOps.flipCommitMarker(fs, rootP, ver, stampId, stampTag)
-      StreamOps.pruneChainVersions(fs, rootP, retain, Seq("edges"))
-      ver
+        .parquet(new org.apache.hadoop.fs.Path(dir, "edges-tombstones").toString))
     }
-  }
 
   /** Fold the live graph chain into ONE self-contained `edges/` version
     * — [[compactIndex]]'s maintenance shape on the graph family,
@@ -994,12 +826,9 @@ object VectorIndex {
     */
   def compactGraphIndex(s: SparkSession, root: String,
       retain: Int = 2): Option[Long] =
-    StreamOps.cdcLatestCommit(
-        new org.apache.hadoop.fs.Path(root).getFileSystem(
-          s.sparkContext.hadoopConfiguration),
-        new org.apache.hadoop.fs.Path(root)).map { cur =>
-      commitGraphFull(s, root, cur + 1, loadGraph(s, root),
-        -2L, "optimize", retain)
+    graphChain.resolveOption(s, root).map { c =>
+      commitGraphFull(s, root, c.live + 1, graphAt(s, c),
+        (-2L, "optimize"), retain)
     }
 
   /** Registry entry: e40's beam-walk recall audit with the adjacency
@@ -1021,9 +850,7 @@ object VectorIndex {
   // ---------------------------------------------------------------- e55
 
   def defaultGraphInsRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-graph-ins/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-ann-graph-ins", dataDir)
 
   /** The deterministic incoming slice e55 inserts (0 stays in the base,
     * so the walk's min-id entry point is a base vector).
@@ -1059,16 +886,12 @@ object VectorIndex {
     import org.apache.spark.sql.expressions.Window
     val s = incoming.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, rootP).getOrElse(
-      throw new IllegalStateException(
-        s"graphInsertBatch needs a committed graph under $root — build first"))
-    if (StreamOps.cdcMarkerStamp(fs, rootP, cur) == ((batchId, incarnationId)))
-      return cur
+    val c = graphChain.resolve(s, root)
+    val stamp = (batchId, incarnationId)
+    if (SegmentChain.isRetry(s, root, c.live, stamp)) return c.live
     // empty micro-batch: nothing to connect — returning the live version
     // avoids version churn for no-op input
-    if (incoming.isEmpty) return cur
+    if (incoming.isEmpty) return c.live
     // TRUNCATE LINEAGE before walking: the resolved live view is a
     // segment chain (base ∖ superseded ∪ deltas), and the beam walk
     // references it at every hop — as a Catalyst TREE each reference
@@ -1076,7 +899,7 @@ object VectorIndex {
     // analysis time (measured: minutes at chain length 8). One eager
     // materialization makes the walk's graph input a leaf; the edge
     // table is O(3n) long-pairs, executor-storage-sized at any corpus.
-    val g = loadGraph(s, root).localCheckpoint()
+    val g = graphAt(s, c).localCheckpoint()
     val q = incoming.selectExpr("vec_id AS qid", "v AS qv")
     val beam = VectorOps.walkFinalBeam(baseVecs, g, q)
     val outE = beam
@@ -1103,8 +926,7 @@ object VectorIndex {
     // rows stay in the base segment, superseded-at-read per src
     // ([[loadGraph]]). The write scales with the batch's neighborhood,
     // never the graph — the codes-delta discipline on the edge table.
-    commitGraphMutation(s, root, cur, pruned.unionByName(outE), None,
-      batchId, incarnationId, retain)
+    commitGraphMutation(s, c, pruned.unionByName(outE), None, stamp, retain)
   }
 
   /** Streaming maintenance sink for the graph index: each micro-batch
@@ -1117,18 +939,12 @@ object VectorIndex {
     */
   def graphInsertSink(vectors: DataFrame, primary: DataFrame,
       indexRoot: String, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val fallbackIncarnation = java.util.UUID.randomUUID().toString
-    vectors.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val incarnation = Option(b.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId"))
-          .getOrElse(fallbackIncarnation)
-        graphInsertBatch(b.toDF(), primary, indexRoot, id, incarnation,
-          retain)
-        ()
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    SegmentChain.stampedSink(vectors) { (b, id, incarnation) =>
+      graphInsertBatch(b, primary, indexRoot, id, incarnation, retain)
+      ()
     }
-  }
+
 
   /** Registry entry: build the BASE split's graph as a committed
     * artifact, insert the incoming slice through [[graphInsertBatch]],
@@ -1148,19 +964,11 @@ object VectorIndex {
     val e = VectorOps.vecs(s, dir).select("vec_id", "v")
     val incoming = e.filter(expr(graphInsertPred))
     val base = e.filter(expr(s"NOT ($graphInsertPred)"))
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
     val want = s"graph+ins[$graphInsertPred]:${fingerprint(e)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-5L, want)))
-      .getOrElse {
-        val ver = StreamOps.cdcLatestCommit(fs, rootP).map(_ + 1).getOrElse(0L)
-        commitGraphFull(s, root, ver,
-          VectorOps.knnGraphFrom(base)
-            .select(col("vec_id").as("src"), col("neighbor_id").as("dst")),
-          -3L, s"graph:${fingerprint(base)}", 2)
-        graphInsertBatch(incoming, base, root, -5L, want)
-      }
+    SegmentChain.ensure(s, root, (-5L, want)) {
+      commitGraphBase(s, root, base)
+      graphInsertBatch(incoming, base, root, -5L, want)
+    }
   }
 
   def graphInsertServed(s: SparkSession, dir: String): DataFrame = {
@@ -1188,9 +996,7 @@ object VectorIndex {
   // ---------------------------------------------------------------- e62
 
   def defaultLifecycleRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-index-life/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-ann-index-life", dataDir)
 
   /** The held-out slice e62 appends (seeds stay in the base so the
     * trained quantizers derive from the initial corpus).
@@ -1208,17 +1014,13 @@ object VectorIndex {
     val e = VectorOps.vecs(s, dir).select("vec_id", "v")
     val base = e.filter(expr(s"NOT ($lifeAppendPred)"))
     val appendSlice = e.filter(expr(lifeAppendPred))
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
     val want = s"index.r+life[app=$lifeAppendPred;del=$deletePred]:${fingerprint(e)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-7L, want)))
-      .getOrElse {
-        buildIndexFrom(base, root)                               // v0: codes
-        deleteIds(s, root, base.filter(expr(deletePred))
-          .select("vec_id"), -6L, s"life-del:$deletePred")       // v1: DV
-        appendBatch(appendSlice, root, -7L, want)                // v2: delta
-      }
+    SegmentChain.ensure(s, root, (-7L, want)) {
+      buildIndexFrom(base, root)                               // v0: codes
+      deleteIds(s, root, base.filter(expr(deletePred))
+        .select("vec_id"), -6L, s"life-del:$deletePred")       // v1: DV
+      appendBatch(appendSlice, root, -7L, want)                // v2: delta
+    }
   }
 
   /** Registry entry: e24's probe served off the index AFTER the full
@@ -1274,9 +1076,7 @@ object VectorIndex {
   // ---------------------------------------------------------------- e58
 
   def defaultGraphDelRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-graph-del/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-ann-graph-del", dataDir)
 
   /** The deterministic slice e58 deletes from the committed graph. */
   private[graft] def graphDeletePred = "vec_id % 31 = 3"
@@ -1304,18 +1104,14 @@ object VectorIndex {
     import org.apache.spark.sql.expressions.Window
     val s = ids.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, rootP).getOrElse(
-      throw new IllegalStateException(
-        s"graphDeleteBatch needs a committed graph under $root — build first"))
-    if (StreamOps.cdcMarkerStamp(fs, rootP, cur) == ((stampId, stampTag)))
-      return cur
-    if (ids.isEmpty) return cur
+    val c = graphChain.resolve(s, root)
+    val stamp = (stampId, stampTag)
+    if (SegmentChain.isRetry(s, root, c.live, stamp)) return c.live
+    if (ids.isEmpty) return c.live
     // truncated lineage, as in [[graphInsertBatch]]: the repair derives
     // lost/inherited/surviving sets from the live view several times —
     // each reference would re-copy the chain subtree into the plan tree
-    val g = loadGraph(s, root).localCheckpoint()
+    val g = graphAt(s, c).localCheckpoint()
     val rm = ids.select("vec_id")
     val rmSrc = rm.withColumnRenamed("vec_id", "src")
     val rmDst = rm.withColumnRenamed("vec_id", "dst")
@@ -1356,9 +1152,9 @@ object VectorIndex {
     // O(|removed| · degree²), never O(graph).
     val emptied = touched.join(pruned.select("src").distinct(),
       Seq("src"), "left_anti")
-    commitGraphMutation(s, root, cur, pruned,
+    commitGraphMutation(s, c, pruned,
       Some(rm.withColumnRenamed("vec_id", "src").unionByName(emptied)),
-      stampId, stampTag, retain)
+      stamp, retain)
   }
 
   /** Streaming deletion sink for the graph index: each micro-batch of
@@ -1371,18 +1167,12 @@ object VectorIndex {
     */
   def graphDeleteSink(ids: DataFrame, primary: DataFrame,
       indexRoot: String, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val fallbackIncarnation = java.util.UUID.randomUUID().toString
-    ids.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val incarnation = Option(b.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId"))
-          .getOrElse(fallbackIncarnation)
-        graphDeleteBatch(b.toDF(), primary, indexRoot, id, incarnation,
-          retain)
-        ()
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    SegmentChain.stampedSink(ids) { (b, id, incarnation) =>
+      graphDeleteBatch(b, primary, indexRoot, id, incarnation, retain)
+      ()
     }
-  }
+
 
   /** Resolve-or-build the deleted graph: the FULL corpus' committed
     * graph followed by one repair-delete commit of the slice — e50's
@@ -1393,20 +1183,12 @@ object VectorIndex {
       root: String): Long = {
     graft.functions.GraftFunctions.register(s)
     val e = VectorOps.vecs(s, dir).select("vec_id", "v")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
     val want = s"graph+del[$graphDeletePred]:${fingerprint(e)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-6L, want)))
-      .getOrElse {
-        val ver = StreamOps.cdcLatestCommit(fs, rootP).map(_ + 1).getOrElse(0L)
-        commitGraphFull(s, root, ver,
-          VectorOps.knnGraphFrom(e)
-            .select(col("vec_id").as("src"), col("neighbor_id").as("dst")),
-          -3L, s"graph:${fingerprint(e)}", 2)
-        graphDeleteBatch(e.filter(expr(graphDeletePred)).select("vec_id"),
-          e, root, -6L, want)
-      }
+    SegmentChain.ensure(s, root, (-6L, want)) {
+      commitGraphBase(s, root, e)
+      graphDeleteBatch(e.filter(expr(graphDeletePred)).select("vec_id"),
+        e, root, -6L, want)
+    }
   }
 
   /** Registry entry: the REPAIRED adjacency after the delete commit —
@@ -1447,9 +1229,7 @@ object VectorIndex {
   // ---------------------------------------------------------------- e64
 
   def defaultGraphLifeRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-graph-life/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-ann-graph-life", dataDir)
 
   /** Resolve-or-build the FULL-LIFECYCLE graph artifact: base build on
     * the non-inserted split (self-contained `edges/`) → one HNSW
@@ -1465,23 +1245,15 @@ object VectorIndex {
     val e = VectorOps.vecs(s, dir).select("vec_id", "v")
     val incoming = e.filter(expr(graphInsertPred))
     val base = e.filter(expr(s"NOT ($graphInsertPred)"))
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
     val want =
       s"graph+life[ins=$graphInsertPred;del=$graphDeletePred]:${fingerprint(e)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-7L, want)))
-      .getOrElse {
-        val ver = StreamOps.cdcLatestCommit(fs, rootP).map(_ + 1).getOrElse(0L)
-        commitGraphFull(s, root, ver,
-          VectorOps.knnGraphFrom(base)
-            .select(col("vec_id").as("src"), col("neighbor_id").as("dst")),
-          -3L, s"graph:${fingerprint(base)}", 2)                     // v0
-        graphInsertBatch(incoming, base, root,
-          -5L, s"life-ins:$graphInsertPred")                         // v1
-        graphDeleteBatch(e.filter(expr(graphDeletePred)).select("vec_id"),
-          e, root, -7L, want)                                        // v2
-      }
+    SegmentChain.ensure(s, root, (-7L, want)) {
+      commitGraphBase(s, root, base)                               // v0
+      graphInsertBatch(incoming, base, root,
+        -5L, s"life-ins:$graphInsertPred")                         // v1
+      graphDeleteBatch(e.filter(expr(graphDeletePred)).select("vec_id"),
+        e, root, -7L, want)                                        // v2
+    }
   }
 
   /** Registry entry: the batch beam walk SERVED off the graph artifact
@@ -1596,9 +1368,7 @@ object VectorIndex {
     * corpus artifact and must never observe e50's tombstones.
     */
   def defaultDeleteRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-index-del/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-ann-index-del", dataDir)
 
   /** The deterministic delete set e50 commits: every 7th vector —
     * large enough to shade candidates out of real probe answers, and a
@@ -1614,18 +1384,14 @@ object VectorIndex {
   private[graft] def ensureDeletedIndex(s: SparkSession, dataDir: String,
       root: String): Long = {
     val e = VectorOps.vecs(s, dataDir).select("vec_id", "v")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
     // the tag encodes the delete RULE: a changed predicate on an
     // unchanged corpus must rebuild rather than reuse old tombstones
     val want = s"index.r+del[$deletePred]:${fingerprint(e)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-4L, want)))
-      .getOrElse {
-        buildIndexFrom(e, root)
-        deleteIds(s, root, e.filter(expr(deletePred)).select("vec_id"),
-          -4L, want)
-      }
+    SegmentChain.ensure(s, root, (-4L, want)) {
+      buildIndexFrom(e, root)
+      deleteIds(s, root, e.filter(expr(deletePred)).select("vec_id"),
+        -4L, want)
+    }
   }
 
   /** Registry entry: e24's probe served off the index AFTER a
@@ -1644,9 +1410,7 @@ object VectorIndex {
   // ---------------------------------------------------------------- e53
 
   def defaultLabeledRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-index-lbl/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-ann-index-lbl", dataDir)
 
   /** Build/ensure the LABELED index: the same codebook + cell-
     * partitioned codes, with each code row carrying the vector's label
@@ -1658,32 +1422,29 @@ object VectorIndex {
   private[graft] def ensureLabeledIndex(s: SparkSession, dataDir: String,
       root: String): Long = {
     val e = VectorOps.vecs(s, dataDir).select("vec_id", "label", "v")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val want = s"index.r+lbl:${fingerprint(e)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-3L, want)))
-      .getOrElse {
-        val ev = e.select("vec_id", "v")
-        val cb = trainCoarse(ev)
-        val pqcb = trainPqResidual(ev, cb)
-        val codes = encodeCorpus(ev, cb, pqcb)
-          .join(e.select("vec_id", "label"), Seq("vec_id"))
-        val ver = StreamOps.cdcLatestCommit(fs, rootP).map(_ + 1).getOrElse(0L)
-        commitVersion(s, root, ver, cb, pqcb, codes, -3L, want, 2)
-      }
+    val stamp = (-3L, s"index.r+lbl:${fingerprint(e)}")
+    SegmentChain.ensure(s, root, stamp) {
+      val ev = e.select("vec_id", "v")
+      val cb = trainCoarse(ev)
+      val pqcb = trainPqResidual(ev, cb)
+      val codes = encodeCorpus(ev, cb, pqcb)
+        .join(e.select("vec_id", "label"), Seq("vec_id"))
+      commitVersion(s, root, SegmentChain.next(s, root), cb, pqcb, codes,
+        stamp, 2)
+    }
   }
 
-  def loadLabeledCodes(s: SparkSession, indexRoot: String): DataFrame = {
+  def loadLabeledCodes(s: SparkSession, indexRoot: String): DataFrame =
+    labeledCodesAt(s, chain.resolve(s, indexRoot))
+
+  private def labeledCodesAt(s: SparkSession, c: SegmentChain.Snapshot): DataFrame = {
     import org.apache.spark.sql.types._
-    val v = latestVersion(s, indexRoot).getOrElse(throw new IllegalStateException(
-      s"no committed index version under $indexRoot — build first"))
     val sch = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("codes", ArrayType(LongType)),
       StructField("label", IntegerType),
       StructField("cell", LongType)))
-    s.read.schema(sch).parquet(s"$indexRoot/v$v/codes")
+    s.read.schema(sch).parquet(c.dir(c.base, "codes"))
   }
 
   /** Registry entry: filtered vector search SERVED off the committed
@@ -1702,7 +1463,8 @@ object VectorIndex {
     val root = defaultLabeledRoot(dir)
     ensureLabeledIndex(s, dir, root)
     graft.functions.GraftFunctions.register(s)
-    val cb = loadCodebook(s, root)
+    val c = chain.resolve(s, root)
+    val cb = codebookAt(s, c)
     val q = VectorOps.vecs(s, dir).filter(col("vec_id") === 0)
       .selectExpr("v AS qv")
     val qcells = cb.crossJoin(broadcast(q))
@@ -1710,10 +1472,10 @@ object VectorIndex {
       .orderBy(desc("cs"), col("cid")).limit(2)
       .select(col("cid").as("qcell"))
     val probed = qcells.collect().map(_.getLong(0)).toSeq
-    val cand = loadLabeledCodes(s, root)
+    val cand = labeledCodesAt(s, c)
       .filter(col("cell").isin(probed: _*))
       .filter(col("label") === 3 && col("vec_id") =!= 0)
-    val qtab = perCellQueryTables(s, root, q, qcells)
+    val qtab = perCellQueryTables(s, c, q, qcells)
     val shortlist = cand.select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
       .join(broadcast(qtab), col("cell") === col("tcell") &&
@@ -1750,7 +1512,8 @@ object VectorIndex {
       indexRoot: String, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(s)
-    val cb = loadCodebook(s, indexRoot)
+    val c = chain.resolve(s, indexRoot)
+    val cb = codebookAt(s, c)
     val q = VectorOps.vecs(s, dataDir).filter(col("vec_id") === 0)
       .selectExpr("v AS qv")
     // cell populations come from the COMMITTED ≤16-row stats table —
@@ -1759,7 +1522,7 @@ object VectorIndex {
     // an answer, so its own cell's count drops by one; its assigned
     // cell IS the top-1 routed cell (assignment ≡ routing, same argmax
     // + lowest-cid tie-break — both engines replay this identically).
-    val cellCounts = loadStats(s, indexRoot)
+    val cellCounts = statsAt(s, c)
     // the routing table: 16 rows — the unpartitioned running sum is
     // bounded by the codebook size, never by data
     val routed0 = cb.crossJoin(broadcast(q))
@@ -1782,10 +1545,10 @@ object VectorIndex {
       .withColumn("cum", sum("cnt").over(wr))
       .filter(col("cum") - col("cnt") < k)
       .select("cid").collect().map(_.getLong(0)).toSeq
-    val cand = loadCodes(s, indexRoot)
+    val cand = codesAt(s, c)
       .filter(col("cell").isin(probed: _*))
       .filter(col("vec_id") =!= 0)
-    val qtab = perCellQueryTables(s, indexRoot, q,
+    val qtab = perCellQueryTables(s, c, q,
       cb.select(col("cid").as("qcell")).filter(col("qcell").isin(probed: _*)))
     cand.select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
@@ -1824,11 +1587,17 @@ object VectorIndex {
     */
   private[ext] def admissionVerdicts(batch: DataFrame, primary: DataFrame,
       indexRoot: String, tau: Double,
+      excludeIds: Option[DataFrame]): DataFrame =
+    verdictsAt(batch, primary, chain.resolve(batch.sparkSession, indexRoot),
+      tau, excludeIds)
+
+  private def verdictsAt(batch: DataFrame, primary: DataFrame,
+      c: SegmentChain.Snapshot, tau: Double,
       excludeIds: Option[DataFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = batch.sparkSession
     graft.functions.GraftFunctions.register(s)
-    val cb = loadCodebook(s, indexRoot)
+    val cb = codebookAt(s, c)
     val qs = batch.selectExpr("vec_id AS qid", "v AS qv")
     val qcells = qs.crossJoin(broadcast(cb))
       .selectExpr("qid", "cid", "cosine_similarity(cv, qv) AS cs")
@@ -1837,11 +1606,11 @@ object VectorIndex {
       .filter(col("rn") <= 2).select(col("qid"), col("cid").as("qcell"))
     val probed = qcells.select("qcell").distinct()
       .collect().map(_.getLong(0)).toSeq
-    val codes0 = loadCodes(s, indexRoot).filter(col("cell").isin(probed: _*))
+    val codes0 = codesAt(s, c).filter(col("cell").isin(probed: _*))
     val cand = excludeIds.foldLeft(codes0)((c, ex) =>
       c.join(broadcast(ex.select("vec_id")), Seq("vec_id"), "left_anti"))
       .join(broadcast(qcells), col("cell") === col("qcell"))
-    val qtab = perQueryCellTables(s, indexRoot, qs, qcells)
+    val qtab = perQueryCellTables(s, c, qs, qcells)
     val shortlist = cand
       .select(col("qid"), col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
@@ -1882,26 +1651,21 @@ object VectorIndex {
       indexRoot: String, batchId: Long, incarnationId: String,
       tau: Double = 0.9, retain: Int = 2): DataFrame = {
     val s = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val cur = StreamOps.cdcLatestCommit(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"vectorAdmitBatch needs a committed index under $indexRoot — build first"))
-    val verdicts = admissionVerdicts(batch, primary, indexRoot, tau,
+    val c = chain.resolve(s, indexRoot)
+    val verdicts = verdictsAt(batch, primary, c, tau,
       Some(batch.select("vec_id"))).cache()
-    val isRetry =
-      StreamOps.cdcMarkerStamp(fs, root, cur) == ((batchId, incarnationId))
-    if (!isRetry) {
+    val stamp = (batchId, incarnationId)
+    if (!SegmentChain.isRetry(s, indexRoot, c.live, stamp)) {
       val admitted = batch.join(
         verdicts.filter(col("is_near_dup")).select("vec_id"),
         Seq("vec_id"), "left_anti")
       // an all-dup (or empty) batch admits nothing — skip the commit
       // entirely rather than rewrite the index for no-op input
       if (!admitted.isEmpty) {
-        val cb = loadCodebook(s, indexRoot)
-        val pqcb = loadPqCodebook(s, indexRoot)
-        appendEncoded(s, indexRoot, cur, cb, pqcb,
-          encodeCorpus(admitted, cb, pqcb), batchId, incarnationId, retain)
+        val cb = codebookAt(s, c)
+        val pqcb = pqCodebookAt(s, c)
+        appendEncoded(s, c, cb, pqcb, encodeCorpus(admitted, cb, pqcb),
+          stamp, retain)
       }
     }
     verdicts
@@ -1913,22 +1677,17 @@ object VectorIndex {
     */
   def vectorAdmissionSink(vectors: DataFrame, primary: DataFrame,
       indexRoot: String, tau: Double = 0.9, retain: Int = 2)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val fallbackIncarnation = java.util.UUID.randomUUID().toString
-    vectors.writeStream.foreachBatch {
-      (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val incarnation = Option(b.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId"))
-          .getOrElse(fallbackIncarnation)
-        val v = vectorAdmitBatch(b.toDF(), primary, indexRoot, id,
-          incarnation, tau, retain)
-        v.count()
-        // drop the per-batch verdict cache — a long-running sink must
-        // not accrete one cached plan per micro-batch in storage memory
-        v.unpersist()
-        ()
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    SegmentChain.stampedSink(vectors) { (b, id, incarnation) =>
+      val v = vectorAdmitBatch(b, primary, indexRoot, id, incarnation, tau,
+        retain)
+      v.count()
+      // drop the per-batch verdict cache — a long-running sink must
+      // not accrete one cached plan per micro-batch in storage memory
+      v.unpersist()
+      ()
     }
-  }
+
 
   /** The registry's incoming/base split for e52: a deterministic id
     * slice of the corpus plays the arriving batch, the rest is the
@@ -1938,9 +1697,7 @@ object VectorIndex {
   private[graft] def admitPred = "vec_id % 23 = 5 AND vec_id >= 16"
 
   def defaultAdmitRoot(dataDir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft-ann-admit/" + dataDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+    SegmentChain.tmpRoot("graft-ann-admit", dataDir)
 
   /** Registry entry: ensure the base split's committed index, probe the
     * incoming split in one batch, emit per-vector verdicts. τ = 0.35
@@ -1956,12 +1713,8 @@ object VectorIndex {
     val incoming = e.filter(expr(admitPred))
     val base = e.filter(expr(s"NOT ($admitPred)"))
     val root = defaultAdmitRoot(dir)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val want = s"index.r:${fingerprint(base)}"
-    StreamOps.cdcLatestCommit(fs, rootP)
-      .filter(v => StreamOps.cdcMarkerStamp(fs, rootP, v) == ((-3L, want)))
-      .getOrElse(buildIndexFrom(base, root))
+    SegmentChain.ensure(s, root, (-3L, s"index.r:${fingerprint(base)}"))(
+      buildIndexFrom(base, root))
     admissionVerdicts(incoming, base, root, tau = 0.35, None)
   }
 
@@ -1997,15 +1750,16 @@ object VectorIndex {
     // reconstruction error is ‖r − q(r)‖² — the residual vs its
     // code-selected residual centroid, which still equals the sum of
     // the 8 chosen subspace distances
-    val perj = loadCodes(s, root)
+    val c = chain.resolve(s, root)
+    val perj = codesAt(s, c)
       .join(VectorOps.vecs(s, dir).select("vec_id", "v"), Seq("vec_id"))
-      .join(broadcast(loadCodebook(s, root)), col("cell") === col("cid"))
+      .join(broadcast(codebookAt(s, c)), col("cell") === col("cid"))
       .selectExpr("vec_id", "cell", "codes",
         "zip_with(v, cv, (x, y) -> x - y) AS rv")
       .select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")), col("rv"))
       .withColumn("sv", expr("slice(rv, 8 * j + 1, 8)"))
-      .join(broadcast(loadPqCodebook(s, root)),
+      .join(broadcast(pqCodebookAt(s, c)),
         col("j") === col("cj") && col("code") === col("cid"))
       .selectExpr("vec_id", "cell", s"$l2 AS d2")
     perj.groupBy("vec_id", "cell")
@@ -2047,9 +1801,10 @@ object VectorIndex {
     // the sweep scans the FULL code table (PQ quality in isolation from
     // the IVF probe), so the query needs a residual table per cell —
     // all 16 of them, still a ≤2048-row broadcast
-    val qtab = perCellQueryTables(s, root, q,
-      loadCodebook(s, root).select(col("cid").as("qcell")))
-    val short50 = loadCodes(s, root).filter(col("vec_id") =!= 0)
+    val c = chain.resolve(s, root)
+    val qtab = perCellQueryTables(s, c, q,
+      codebookAt(s, c).select(col("cid").as("qcell")))
+    val short50 = codesAt(s, c).filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
       .join(broadcast(qtab), col("cell") === col("tcell") &&

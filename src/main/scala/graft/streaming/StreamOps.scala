@@ -519,7 +519,7 @@ object StreamOps {
       }
   }
 
-  private val CdcCommitPrefix = "_commit-"
+  private[graft] val CdcCommitPrefix = "_commit-"
 
   /** Latest committed VERSION of a [[cdcApplyParquetSink]] table: the max
     * version with a commit marker present, None before the first commit.
@@ -719,60 +719,6 @@ object StreamOps {
         // marker before data, so resolution never points at a
         // missing directory mid-sweep
         if (!nm.startsWith(CdcCommitPrefix))
-          fs.delete(new org.apache.hadoop.fs.Path(root,
-            s"$CdcCommitPrefix${nm.drop(1)}"), false)
-        fs.delete(st.getPath, true)
-        ()
-      }
-    }
-  }
-
-  /** REFERENCE-AWARE prune for versioned artifacts whose commits can be
-    * metadata-only (deletion-vector tombstones, delta appends) and
-    * therefore REFERENCE an earlier version's data directories:
-    * [[pruneCdcVersions]]'s newest-`retain` marker rule is kept, but the
-    * DATA sweep keeps every `v<n>` from the oldest retained version's
-    * BASE (the nearest lower version owning one of `dataNames`) upward —
-    * a reader that resolved any retained marker can always reach the
-    * base codes/postings plus every delta/tombstone dir between base and
-    * its version. Without this, a delete-then-append chain (v0 codes,
-    * v1 tombstones→v0, v2 self-contained) would prune v0 while v1 is
-    * still inside the read lease — the exact window retain=2 exists to
-    * protect. Data dirs ABOVE the newest marker (a crashed attempt's
-    * partial `v<n>`) are still swept, so failed writes can't leak.
-    */
-  private[graft] def pruneChainVersions(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, retain: Int,
-      dataNames: Seq[String]): Unit = {
-    val markers = fs.listStatus(root).iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith(CdcCommitPrefix))
-      .map(_.stripPrefix(CdcCommitPrefix).toLong)
-      .toSeq.sorted(Ordering[Long].reverse)
-    val keepM = markers.take(retain).toSet
-    if (keepM.isEmpty) return
-    def baseOf(v: Long): Long = {
-      var c = v
-      while (c >= 0 && !dataNames.exists(n =>
-          fs.exists(new org.apache.hadoop.fs.Path(root, s"v$c/$n"))))
-        c -= 1
-      math.max(c, 0L)
-    }
-    val floor = keepM.map(baseOf).min
-    val ceil = keepM.max
-    fs.listStatus(root).foreach { st =>
-      val nm = st.getPath.getName
-      val isMarker = nm.startsWith(CdcCommitPrefix)
-      val isData = !isMarker && nm.startsWith("v") && nm.drop(1).nonEmpty &&
-        nm.drop(1).forall(_.isDigit)
-      val stale =
-        (isMarker && !keepM.contains(nm.stripPrefix(CdcCommitPrefix).toLong)) ||
-        (isData && {
-          val ver = nm.drop(1).toLong
-          ver < floor || ver > ceil
-        })
-      if (stale) {
-        if (isData)
           fs.delete(new org.apache.hadoop.fs.Path(root,
             s"$CdcCommitPrefix${nm.drop(1)}"), false)
         fs.delete(st.getPath, true)

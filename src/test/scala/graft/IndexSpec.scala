@@ -420,6 +420,45 @@ class IndexSpec extends SparkSpec {
       fullVecs.count() + 9)
   }
 
+  test("an append at chain depth 8 folds, tombstone versions counted (codes and text postings)") {
+    import graft.ext.TextIndex
+    import spark.implicits._
+    // codes: v0 build, v1 delete (tombstones), v2..v8 deltas — the
+    // append that finds live − base = 8 must fold, not add a 9th link
+    val root = tmpRoot("fold-dv")
+    VectorIndex.buildIndexFrom(fullVecs, root)                        // v0
+    VectorIndex.deleteIds(spark, root, Seq(3L).toDF("vec_id"), 1L, "d") // v1
+    (2 to 9).foreach { i =>
+      VectorIndex.appendBatch(
+        fullVecs.limit(1).selectExpr(s"vec_id + ${7000000 + i} AS vec_id", "v"),
+        root, i.toLong, "fold")
+    }
+    assert(new java.io.File(root, "v8/codes-delta").exists())
+    assert(new java.io.File(root, "v9/codes").exists() &&
+      !new java.io.File(root, "v9/codes-delta").exists(),
+      "the append at depth 8 must fold the chain into a codes version")
+    val live = VectorIndex.loadCodes(spark, root)
+    assert(live.count() == fullVecs.count() - 1 + 8)
+    assert(live.filter(col("vec_id") === 3L).count() == 0)
+    // text postings: v0 build, v1 forget (tombstones), v2..v8 admissions
+    def mkText(stem: String) = (1 to 30).map(i => s"${stem}x$i").mkString(" ")
+    val docs = (1L to 6L).map(i => (i, mkText(s"w$i"))).toDF("doc_id", "text")
+    val troot = tmpRoot("fold-text")
+    TextIndex.buildIndexFrom(docs, troot)                              // v0
+    TextIndex.forgetDocs(spark, troot, Seq(2L).toDF("doc_id"), 1L, "f") // v1
+    (2 to 9).foreach { i =>
+      TextIndex.admitBatch(Seq((100L + i, mkText(s"a$i"))).toDF("doc_id", "text"),
+        docs, troot, i.toLong, "fold").unpersist()
+    }
+    assert(new java.io.File(troot, "v8/postings-delta").exists())
+    assert(new java.io.File(troot, "v9/postings").exists() &&
+      !new java.io.File(troot, "v9/postings-delta").exists(),
+      "the admission at depth 8 must fold the chain into a postings version")
+    val ids = TextIndex.loadPostings(spark, troot)
+      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    assert(ids == (1L to 6L).toSet - 2L ++ (102L to 109L))
+  }
+
   test("a second delete compacts: codes rewritten, tombstone chain reset") {
     import spark.implicits._
     val root = tmpRoot("dv-compact")

@@ -7,8 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * transform must touch EXACTLY the statement's top-level WITH list:
   * a `WINDOW w AS (…)` clause (round 15's regex-prototype failure
   * mode), an `AS (` inside a CTE body, and the main SELECT must all
-  * stay byte-identical, and non-WITH / WITH RECURSIVE statements must
-  * return unchanged (DuckDB rejects the hint on recursive CTEs).
+  * stay byte-identical. Non-WITH statements return unchanged; a WITH
+  * RECURSIVE list is rewritten like any other WITH list. Parens and
+  * `AS (` inside string literals, quoted identifiers and `--` comments
+  * are text, not syntax.
   */
 class QueryDefSpec extends AnyFunSuite {
 
@@ -61,6 +63,22 @@ class QueryDefSpec extends AnyFunSuite {
     assert(got.contains("t AS MATERIALIZED ("))
     assert(got.contains("u AS MATERIALIZED (SELECT 1)"))
     assert(got.contains("'([a-z])('"))
+  }
+
+  test("-- line comments do not derail the scan") {
+    val sql = "WITH t AS (SELECT 1 AS one -- closes early: ) AS (\n  FROM x),\n" +
+      "u AS (SELECT 2) SELECT * FROM t, u"
+    assert(materializeCtes(sql) ==
+      "WITH t AS MATERIALIZED (SELECT 1 AS one -- closes early: ) AS (\n" +
+        "  FROM x),\nu AS MATERIALIZED (SELECT 2) SELECT * FROM t, u")
+  }
+
+  test("quoted identifiers containing parens or AS ( do not derail the scan") {
+    val sql = "WITH \"odd)name\" AS (SELECT 1 AS \"x AS (y\"), " +
+      "u AS (SELECT 2) SELECT * FROM \"odd)name\", u"
+    assert(materializeCtes(sql) ==
+      "WITH \"odd)name\" AS MATERIALIZED (SELECT 1 AS \"x AS (y\"), " +
+        "u AS MATERIALIZED (SELECT 2) SELECT * FROM \"odd)name\", u")
   }
 
   test("oracle results are what changed the round-14 gate: the rewrite " +

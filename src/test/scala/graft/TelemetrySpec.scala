@@ -237,6 +237,162 @@ class TelemetrySpec extends SparkSpec {
     assert(long1(0x2c.toByte, 0x01.toByte) == 300L)
   }
 
+  /** Opcode writers for a pickle-protocol-4 stream, each value spelled
+    * the way CPython's pickler emits it — enough to build a joblib
+    * bundle in the test, so the decoders are covered without a shipped
+    * artifact.
+    */
+  private object Pickle {
+    type B = Seq[Byte]
+    private def op(x: Int): B = Seq(x.toByte)
+    private def le32(n: Int): B = (0 until 4).map(k => (n >>> (8 * k)).toByte)
+    def str(v: String): B = {
+      val b = v.getBytes("UTF-8")
+      op(0x8c) ++ Seq(b.length.toByte) ++ b                // SHORT_BINUNICODE
+    }
+    def float(d: Double): B =                               // BINFLOAT (big-endian)
+      op(0x47) ++ java.nio.ByteBuffer.allocate(8).putDouble(d).array
+    def int(n: Int): B = op(0x4a) ++ le32(n)                // BININT
+    def bool(b: Boolean): B = op(if (b) 0x88 else 0x89)     // NEWTRUE / NEWFALSE
+    val none: B = op(0x4e)
+    def bytes(b: Array[Byte]): B = op(0x42) ++ le32(b.length) ++ b // BINBYTES
+    def memoize(v: B): B = v ++ op(0x94)                    // MEMOIZE
+    def get(i: Int): B = op(0x68) ++ Seq(i.toByte)          // BINGET
+    def list(xs: B*): B = op(0x5d) ++ op(0x28) ++ xs.flatten ++ op(0x65) // EMPTY_LIST MARK … APPENDS
+    def tuple(xs: B*): B = op(0x28) ++ xs.flatten ++ op(0x74)           // MARK … TUPLE
+    def dict(kvs: (String, B)*): B =                        // EMPTY_DICT MARK k v … SETITEMS
+      op(0x7d) ++ op(0x28) ++ kvs.flatMap { case (k, v) => str(k) ++ v } ++ op(0x75)
+    private def global(mod: String, name: String): B = str(mod) ++ str(name) ++ op(0x93)
+    def reduce(mod: String, name: String, args: B): B = global(mod, name) ++ args ++ op(0x52)
+    /** `cls.__new__(cls)` then BUILD with `state` (NEWOBJ … BUILD). */
+    def obj(mod: String, name: String, state: B): B =
+      global(mod, name) ++ tuple() ++ op(0x81) ++ state ++ op(0x62)
+    /** PROTO 4, one 8-byte FRAME header, the body, STOP. */
+    def stream(body: B): Array[Byte] =
+      (op(0x80) ++ Seq(4.toByte) ++ op(0x95) ++ Seq.fill(8)(0.toByte) ++ body ++ op(0x2e)).toArray
+
+    private def wrapper(dtype: B, shape: Int, extra: (String, B)*): B =
+      obj("joblib.numpy_pickle", "NumpyArrayWrapper", dict(Seq(
+        "subclass" -> reduce("builtins", "getattr", tuple(str("numpy"), str("ndarray"))),
+        "shape" -> tuple(int(shape)), "order" -> str("C"), "dtype" -> dtype,
+        "allow_mmap" -> bool(false)) ++ extra: _*))
+    /** A numeric `f8` array: the wrapper, then joblib's inline payload —
+      * one alignment-padding count byte, the padding, little-endian data.
+      */
+    def numpyF8(xs: Double*): B = {
+      val dtype = reduce("numpy", "dtype", tuple(str("f8"), bool(false), bool(true))) ++
+        tuple(int(3), str("<"), none, none, none, int(-1), int(-1), int(0)) ++ op(0x62)
+      val raw = java.nio.ByteBuffer.allocate(8 * xs.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      xs.foreach(raw.putDouble)
+      wrapper(dtype, xs.length, "numpy_array_alignment_bytes" -> int(16)) ++
+        Seq(3.toByte) ++ Seq.fill(3)(0.toByte) ++ raw.array
+    }
+    /** An object-dtype array: the wrapper, then a complete nested pickle. */
+    def numpyObjects(xs: String*): B =
+      wrapper(str("|O"), xs.length) ++ stream(list(xs.map(str): _*))
+  }
+
+  /** UBJSON writers (XGBoost's booster serialization). */
+  private object Ubj {
+    type B = Seq[Byte]
+    private def be(f: java.nio.ByteBuffer => java.nio.ByteBuffer, n: Int): B =
+      f(java.nio.ByteBuffer.allocate(n)).array.toSeq
+    private def key(k: String): B = Seq('i'.toByte, k.length.toByte) ++ k.getBytes("UTF-8")
+    def str(v: String): B = Seq('S'.toByte) ++ key(v)
+    def obj(kvs: (String, B)*): B =
+      Seq('{'.toByte) ++ kvs.flatMap { case (k, v) => key(k) ++ v } ++ Seq('}'.toByte)
+    def arr(xs: B*): B = Seq('['.toByte) ++ xs.flatten ++ Seq(']'.toByte)
+    private def typed(t: Char, n: Int, body: B): B =
+      Seq('['.toByte, '$'.toByte, t.toByte, '#'.toByte, 'i'.toByte, n.toByte) ++ body
+    def ints(xs: Int*): B = typed('l', xs.length, xs.flatMap(x => be(_.putInt(x), 4)))
+    def floats(xs: Float*): B = typed('d', xs.length, xs.flatMap(x => be(_.putFloat(x), 4)))
+    def uint8s(xs: Int*): B = typed('U', xs.length, xs.map(_.toByte))
+  }
+
+  /** A complete joblib bundle: metadata plus a scaler → one-hot →
+    * two-stump XGBoost pipeline over numerics (a, b) and category tech.
+    */
+  private lazy val syntheticBundle: String = {
+    import Pickle._
+    def stump(feature: Int, cond: Float, leftLeaf: Float, rightLeaf: Float,
+        defaultLeft: Int): Ubj.B = Ubj.obj(
+      "split_indices" -> Ubj.ints(feature, 0, 0),
+      "split_conditions" -> Ubj.floats(cond, leftLeaf, rightLeaf),
+      "left_children" -> Ubj.ints(1, -1, -1),
+      "right_children" -> Ubj.ints(2, -1, -1),
+      "default_left" -> Ubj.uint8s(defaultLeft, 0, 0),
+      "categories_nodes" -> Ubj.ints())
+    val booster = Ubj.obj("Model" -> Ubj.obj("learner" -> Ubj.obj(
+      "learner_model_param" -> Ubj.obj(
+        "base_score" -> Ubj.str("5E-1"), "num_feature" -> Ubj.str("4")),
+      "objective" -> Ubj.obj("name" -> Ubj.str("binary:logistic")),
+      "gradient_booster" -> Ubj.obj("model" -> Ubj.obj("trees" -> Ubj.arr(
+        stump(0, 0.5f, 0.25f, -0.5f, defaultLeft = 1),      // scaled a
+        stump(3, 0.5f, 0.125f, 0.375f, defaultLeft = 0))))))) // tech == 5G
+    val scaler = obj("sklearn.preprocessing._data", "StandardScaler", dict(
+      "mean_" -> numpyF8(1.0, 2.0), "scale_" -> numpyF8(2.0, 4.0)))
+    val pre = obj("sklearn.compose._column_transformer", "ColumnTransformer", dict(
+      "transformers_" -> list(
+        tuple(str("num"), obj("sklearn.pipeline", "Pipeline", dict(
+          "steps" -> list(tuple(str("scaler"), scaler)))),
+          list(memoize(str("a")), str("b"))),
+        tuple(str("cat"), obj("sklearn.preprocessing._encoders", "OneHotEncoder",
+          dict("handle_unknown" -> str("ignore"), "drop" -> none,
+            "categories_" -> list(numpyObjects("4G", "5G")))),
+          list(str("tech"))))))
+    val clf = obj("xgboost.sklearn", "XGBClassifier", dict(
+      "_Booster" -> obj("xgboost.core", "Booster", dict(
+        "handle" -> reduce("builtins", "bytearray", tuple(bytes(booster.toArray)))))))
+    val bundle = stream(dict(
+      "model" -> obj("sklearn.pipeline", "Pipeline", dict(
+        "steps" -> list(tuple(str("pre"), pre), tuple(str("clf"), clf)))),
+      "num_cols" -> list(get(0), str("b")),
+      "cat_cols" -> list(str("tech")),
+      "label_rule" -> dict("metric" -> str("latency_ms"), "q" -> float(0.8),
+        "hi_bad_primary" -> bool(true),
+        "composite" -> list(str("drop_rate"), str("latency_ms"))),
+      "trained_at" -> str("2025-01-02T03:04:05+00:00"),
+      "metrics" -> dict("auc" -> float(0.75), "n" -> int(180),
+        "positives" -> int(88), "p_at_10" -> float(0.5)),
+      "note" -> none))
+    val path = s"$tmp/synthetic.joblib"
+    Files.write(java.nio.file.Paths.get(path), bundle)
+    path
+  }
+
+  test("joblib pickle-v4 decoder: a bundle built in the test yields its metadata") {
+    val meta = graft.sources.JoblibBundle.readMeta(syntheticBundle)
+    assert(meta.numCols == Seq("a", "b"), "BINGET must replay the memoized string")
+    assert(meta.catCols == Seq("tech"))
+    assert(meta.labelMetric == "latency_ms" && meta.labelQuantile == 0.8 &&
+      meta.hiBadPrimary)
+    assert(meta.composite == Seq("drop_rate", "latency_ms"))
+    assert(meta.trainedAt == "2025-01-02T03:04:05+00:00")
+    assert(meta.metrics == Map("auc" -> 0.75, "n" -> 180.0,
+      "positives" -> 88.0, "p_at_10" -> 0.5))
+    // the inline numpy payloads were consumed: the whole stream parsed
+    val root = graft.sources.JoblibBundle.load(syntheticBundle)
+    assert(root.contains("note") && root("note") == null)
+  }
+
+  test("UBJSON booster decoder: a bundle built in the test scores its hand-computed trees") {
+    val m = graft.sources.XgbBundle.load(syntheticBundle)
+    assert(m.numCols == Seq("a", "b") && m.catCols == Seq("tech"))
+    assert(m.means.toSeq == Seq(1.0, 2.0) && m.scales.toSeq == Seq(2.0, 4.0))
+    assert(m.categories == Seq(Seq("4G", "5G")))
+    assert(m.trees.size == 2 && m.numFeature == 4)
+    assert(m.baseScore == 0.5 && m.objective == "binary:logistic")
+    assert(m.trees.head.defaultLeft.toSeq == Seq(true, false, false))
+    def sig(x: Double) = 1.0 / (1.0 + math.exp(-x))
+    // a = 2 scales to 0.5, not < 0.5: right leaf −0.5; tech 5G: +0.375
+    assert(m.predict(Array(2.0, 0.0), Array("5G")) == sig(-0.5 + 0.375))
+    // a = 0 scales to −0.5: left leaf 0.25; tech 4G: +0.125
+    assert(m.predict(Array(0.0, 0.0), Array("4G")) == sig(0.25 + 0.125))
+    // a missing value follows default_left on the first stump only
+    assert(m.predictFv(Array(Float.NaN, 0f, 0f, Float.NaN)) == sig(0.25 + 0.375))
+  }
+
   test("shipped booster decodes fully and scores bit-identically to an independent driver walk") {
     val path = "/root/reference/data/models/next_hour_congestion.joblib"
     assert(new java.io.File(path).isFile, "reference bundle missing")
