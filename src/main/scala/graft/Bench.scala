@@ -120,12 +120,15 @@ object BenchCore {
 }
 
 /** Benchmark main — driver contract: one JSON line
-  * `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`.
+  * `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`. The harness
+  * parses the LAST bare `{"metric":…}` line of stdout; `sbt run` prints it
+  * without sbt's `[info] ` prefix (`run / outputStrategy` in build.sbt).
   *
   * Methodology: queries run in sorted name order; a first untimed pass
-  * warms JVM/codegen/parquet footers (single-JVM local mode otherwise
-  * charges one-time session costs to whichever query runs first), then
-  * each query is timed three times and the minimum is reported —
+  * warms the JVM's JIT, parquet footers and generated code (single-JVM
+  * local mode otherwise charges one-time session costs to whichever query
+  * runs first), then each query is timed three times and the minimum is
+  * reported —
   * steady-state engine speed, not launch noise. Cross-JVM wall clock on
   * this class of VM varies up to 2×, and round 5 showed bursty host
   * stalls can hit BOTH reps of min-of-2 (d18 read 6.9× on an unchanged
@@ -138,6 +141,14 @@ object BenchCore {
   * floor, with rescued names reported. The stdout `floor` field keeps
   * its [pre, post] shape (driver contract) — pre/post are the first
   * and last entries of the full series.
+  *
+  * The warm-up keeps generated code only because [[GraftSession]] sizes
+  * Spark's codegen cache to the registry's working set: with Spark's
+  * default 100 entries, any run of more than a handful of queries evicted
+  * a query's classes before its timed repetitions and every repetition
+  * compiled them again in Janino. `bench_queries.json` records the check
+  * as a top-level `compiles` object: per query, the classes compiled
+  * during its three timed repetitions (0 or near it when warm).
   */
 object Bench {
 
@@ -193,10 +204,16 @@ object Bench {
     queries.foreach { case (_, fn) => run(fn) } // warm-up pass, untimed
     val floors = scala.collection.mutable.ArrayBuffer[Double]()
     floors += (1 to 3).map(_ => probe()).min
+    // Janino compiles per query across its timed repetitions
+    def compiledClasses(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiles = scala.collection.mutable.ArrayBuffer[(String, Long)]()
     val timed = queries.zipWithIndex.map { case ((name, fn), i) =>
       if (i > 0 && i % FloorEvery == 0) floors += probe()
-      BenchCore.Timing(name, Seq(run(fn), run(fn), run(fn)).min,
-        floors.length - 1)
+      val c0 = compiledClasses()
+      val secs = Seq(run(fn), run(fn), run(fn)).min
+      compiles += name -> (compiledClasses() - c0)
+      BenchCore.Timing(name, secs, floors.length - 1)
     }
     floors += (1 to 3).map(_ => probe()).min
     val floorSeries = floors.toIndexedSeq
@@ -449,8 +466,13 @@ object Bench {
     // re-run actually rescued.
     val floorsJson = floorSeries.map(f => f"$f%.3f").mkString("[", ",", "]")
     val rescuedJson = rescued.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // top-level, outside "queries": BenchCore.parsePriors reads that
+    // object's values as timings
+    val compilesJson = compiles
+      .map { case (k, n) => "\"" + short(k) + "\":" + n }
+      .mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"n_failed":${failed.size},"failed":$failedJson,"queries":${qsAt(3)}$pipeline$vpipe$streamSeg$floor,"floors":$floorsJson,"floor_every":$FloorEvery,"rescued":$rescuedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"n_failed":${failed.size},"failed":$failedJson,"queries":${qsAt(3)}$pipeline$vpipe$streamSeg$floor,"floors":$floorsJson,"floor_every":$FloorEvery,"rescued":$rescuedJson,"compiles":$compilesJson,"sf":"$sfDir"}"""
     // Output dir is explicit — GRAFT_BENCH_DIR when set, else the process
     // CWD — and a failed write WARNS instead of silently leaving a stale
     // committed file that misrepresents the latest run.

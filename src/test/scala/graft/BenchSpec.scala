@@ -96,10 +96,12 @@ class BenchSpec extends AnyFunSuite {
   test("parsePriors reads the committed bench_queries.json line shape") {
     val line = """{"metric":"total","value":123.456,"n_failed":0,""" +
       """"failed":[],"queries":{"q01":0.523,"d39":4.961,"e35":-1.0},""" +
-      """"pipeline":[6.1,19.2,63.6],"floor":[0.074,0.085],"sf":"/x/sf0.1"}"""
+      """"pipeline":[6.1,19.2,63.6],"floor":[0.074,0.085],""" +
+      """"compiles":{"q01":0,"d39":12,"e35":3},"sf":"/x/sf0.1"}"""
     val p = parsePriors(line)
     assert(p == Map("q01" -> 0.523, "d39" -> 4.961, "e35" -> -1.0))
-    // the values outside the queries object must NOT leak in
+    // the values outside the queries object must NOT leak in (the
+    // per-query compile counts share its keys)
     assert(!p.contains("pipeline") && !p.contains("floor"))
     // garbled / absent input degrades to no priors, never throws
     assert(parsePriors("").isEmpty)

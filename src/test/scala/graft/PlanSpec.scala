@@ -190,11 +190,14 @@ class PlanSpec extends SparkSpec {
     // query ever starts paying the full text/vector scan cost. The two
     // sets were seeded from the actual plans and hand-audited: every
     // member tokenizes/hashes text or does vector math on embeddings.
-    // Queries whose text work happens inside an eagerly-built shared
-    // subtree (d13/d20/d42/d45/d46/… via gram8/localCheckpoint) surface
-    // no file scan in their FINAL plan — the build's own scan is audited
-    // through the members above that share it.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    // The audit covers every execution the query function triggers, not
+    // only its final plan: a QueryExecutionListener captures the jobs run
+    // while the frame is built (eager localCheckpoint()s, driver
+    // collects), whose scans a checkpoint truncates out of the final
+    // plan, so no query needs a hand exclusion.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     // suite-order hygiene: a persisted frame left by an earlier test would
     // serve some scans from InMemoryTableScan and make the staleness check
@@ -226,8 +229,18 @@ class PlanSpec extends SparkSpec {
       "d71_source_overlap_matrix", "d72_sparse_cosine_dup_pairs",
       "d73_threshold_sensitivity", "d74_lsh_band_sensitivity",
       "d77_perplexity_buckets",
-      // d61/d76 tokenize text too, but behind localCheckpoint frames that
-      // truncate lineage — no file scan survives into their final plans
+      // read text only in jobs run while the frame is built (eager
+      // localCheckpoint()s of token, shingle, signature or cluster
+      // frames); the checkpoint truncates the scan out of the final plan
+      "d13_dup_clusters", "d34_cluster_weighted_sample",
+      "d49_cluster_safe_split", "d50_bpe_merges", "d51_dup_graph_pagerank",
+      "d52_quality_logreg", "d57_dup_graph_triangles", "d58_zipf_fit",
+      "d59_source_divergence", "d60_shingle_heaps",
+      "d61_minhash_estimate_audit", "d65_fuzzy_decontamination",
+      "d76_minhash_width_sweep", "d78_apply_minhash_dedup",
+      // the 4-row opening-bigram read of the phrase / proximity serves is
+      // collected to the driver during construction
+      "d86_bm25_phrase_topk", "d87_bm25_proximity_topk",
       // m04 decodes media features from payload-header bytes derived
       // from text (m02's derived-payload arrangement on the index arc)
       "m01_binary_hash_dedup", "m02_perceptual_media_dedup",
@@ -247,9 +260,6 @@ class PlanSpec extends SparkSpec {
       // primary store (a doc_id<10-pushed 10-row read — the forward-
       // index stand-in; the corpus-side reads are all index reads)
       "e65_hybrid_index_served")
-      // d86 is NOT here: its 4-row opening-bigram read collects
-      // EAGERLY during construction, so the returned frame's plan is
-      // pure index reads (the sweep sees no text scan)
     val embReaders = Set(
       "e01_knn_brute_force", "e02_label_centroids", "e03_lsh_buckets",
       "e04_top_similar_pairs", "e05_ann_lsh_top5", "e06_cosine_near_dup",
@@ -265,6 +275,9 @@ class PlanSpec extends SparkSpec {
       "e34_silhouette", "e35_knn_label_eval", "e36_embedding_drift",
       "e37_sq_bits_sweep", "e38_ivf_cells_sweep", "e39_pq_shortlist_sweep",
       "e57_trained_shortlist_sweep",
+      // read embeddings only in jobs run while the frame is built (the
+      // checkpointed candidate / projection / power-iteration frames)
+      "e15_mmr_top5", "e28_pca_power_iteration", "e29_jl_projection_audit",
       "e40_graph_walk_recall", "e41_hybrid_rrf_retrieval",
       "e42_graph_walk_depth_sweep", "e43_graph_walk_beam_sweep",
       "e44_knn_outlier_audit", "e45_matryoshka_recall_sweep",
@@ -310,13 +323,27 @@ class PlanSpec extends SparkSpec {
       val self = p match { case f: FileSourceScanExec => Seq(f); case _ => Nil }
       self ++ kids.flatMap(scans) ++ p.subqueries.flatMap(scans)
     }
+    // the executed plans of every execution `body` triggers (read once
+    // the listener bus has delivered them), then the plan `body` returns
+    def executionsOf(body: => SparkPlan): Seq[SparkPlan] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          seen.add(qe)
+        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+          seen.add(qe)
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val last = body
+        org.apache.spark.GraftSparkTestHooks.waitListenerBus(spark.sparkContext)
+        seen.asScala.toSeq.map(_.executedPlan) :+ last
+      } finally spark.listenerManager.unregister(listener)
+    }
     val heavyByQuery = SparkEntry.allQueries
-      // iterative CC queries: constructing the frame EXECUTES the label-
-      // propagation jobs (which do scan text), and the localCheckpointed
-      // labels truncate that scan out of the final plan
-      .filterNot(q => q.name.startsWith("d13") || q.name.startsWith("d78"))
       .map { q =>
-        val reads = scans(q.fn(spark, sf0001).queryExecution.executedPlan)
+        val reads = executionsOf(q.fn(spark, sf0001).queryExecution.executedPlan)
+          .flatMap(scans)
           .flatMap { s =>
             val tbl = s.relation.location.rootPaths.headOption
               .map(_.getName).getOrElse("?")
@@ -341,7 +368,7 @@ class PlanSpec extends SparkSpec {
     val staleText = textReaders.filterNot(n => heavyByQuery.get(n).exists(_.contains("text")))
     val staleEmb = embReaders.filterNot(n => heavyByQuery.get(n).exists(_.contains("embedding")))
     assert(staleText.isEmpty && staleEmb.isEmpty,
-      s"audited readers whose plan no longer reads the column (remove): text=$staleText emb=$staleEmb")
+      s"audited readers whose executions no longer read the column (remove): text=$staleText emb=$staleEmb")
   }
 
   /** Run `body` with `confs` set, restoring previous values after. */

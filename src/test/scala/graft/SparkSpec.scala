@@ -13,7 +13,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   // One session per JVM (Test / fork := true gives the suite its own JVM),
   // built through GraftSession so test posture can't drift from the
-  // Verify/Bench mains' (UTC, partitions, function registration).
+  // Verify/Bench mains' (UTC, partitions, codegen cache, function
+  // registration). The codegen cache size is a static conf, so this must
+  // stay the first session the test JVM builds.
   lazy val session: SparkSession = graft.GraftSession.build(
     "graft-test", "local[8]", 8,
     Map("spark.sql.adaptive.enabled" -> "true"))
