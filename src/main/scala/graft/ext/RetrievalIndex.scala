@@ -104,14 +104,18 @@ object RetrievalIndex {
     * named with `suffix` ("" for a base, "-delta" for an append). The
     * statistics re-derive from the written files (a second pass over
     * the postings) so they always describe what the commit persisted.
+    * A base clusters its token-bucketed segments by `tb` first, so it
+    * holds one file per bucket.
     */
   private def writeSegments(s: SparkSession, dir: org.apache.hadoop.fs.Path,
       postings: DataFrame, suffix: String): Unit = {
     def seg(name: String) = new org.apache.hadoop.fs.Path(dir, name + suffix).toString
-    postings.select("token", "doc_id", "tf", "dl", "positions", "tb")
+    def bucketed(df: DataFrame) =
+      if (suffix.isEmpty) df.hint("rebalance", col("tb")) else df
+    bucketed(postings.select("token", "doc_id", "tf", "dl", "positions", "tb"))
       .write.mode("overwrite").partitionBy("tb").parquet(seg("postings"))
     val written = readPostingsDir(s, seg("postings"))
-    vocabOf(written).write.mode("overwrite").partitionBy("tb")
+    bucketed(vocabOf(written)).write.mode("overwrite").partitionBy("tb")
       .parquet(seg("vocab"))
     statsOf(written).coalesce(1).write.mode("overwrite").parquet(seg("stats"))
     docIdsOf(written).sortWithinPartitions("doc_id")
@@ -460,15 +464,14 @@ object RetrievalIndex {
     }
 
 
-  /** Fold the live chain into ONE self-contained version — stamped
-    * (−2, "optimize") like every index family's maintenance commit.
+  /** Fold the live chain into ONE self-contained version through
+    * [[SegmentChain.fold]] — a no-op on a chain that is already its own
+    * base, e.g. right after a compacting forget.
     */
   def compactIndex(s: SparkSession, root: String,
       retain: Int = 2): Option[Long] =
-    chain.resolveOption(s, root).map { c =>
-      commitBase(s, root, c.live + 1, livePostings(s, c),
-        (-2L, "optimize"), retain)
-    }
+    chain.fold(s, root, retain)((c, dir) =>
+      writeSegments(s, dir, livePostings(s, c), ""))
 
   /** BM25 top-5 per query term, served ENTIRELY off the committed
     * artifact: the 8 rarest terms (df ASC, token ASC — d62's

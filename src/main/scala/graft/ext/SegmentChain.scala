@@ -53,6 +53,17 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * counts, tombstone and marker-only ones included, because a reader
   * resolves through each of them.
   *
+  * Fold rule ([[SegmentChain.fold]], every family's `compactIndex`): a
+  * fold writes the live view as a new base stamped `(-2, "optimize")` at
+  * live + 1, unless the live version already is its own base (depth 0:
+  * no deltas, no tombstones, no marker-only links). Then the fold is a
+  * no-op: it writes nothing, launches no Spark job and returns the live
+  * version, whose stamp stays in place — so a mutation that itself
+  * folded the chain (a compacting forget or delete) is still recognised
+  * as a retry after the maintenance fold. A base write clusters its rows
+  * by the bucket column before `partitionBy`, so a base holds one file
+  * per bucket however many files its inputs had.
+  *
   * Read lease: the newest `retain` markers (default 2: live plus one
   * superseded) stay resolvable, together with every data directory from
   * the oldest retained version's base upward ([[pruneChainVersions]]).
@@ -102,6 +113,19 @@ private[graft] final class SegmentChain(baseSegment: String) {
     SegmentChain.pruneChainVersions(fs, rootP, retain, baseSegment)
     ver
   }
+
+  /** Fold the live chain into one base: `write` puts the live view of
+    * the resolved chain into the new version's directory, committed at
+    * live + 1 stamped `(-2, "optimize")`. A depth-0 chain already is
+    * that base, so the fold returns the live version untouched. None
+    * before the first commit.
+    */
+  def fold(s: SparkSession, root: String, retain: Int)(
+      write: (SegmentChain.Snapshot, Path) => Unit): Option[Long] =
+    resolveOption(s, root).map { c =>
+      if (c.depth == 0) c.live
+      else commit(s, root, c.live + 1, (-2L, "optimize"), retain)(write(c, _))
+    }
 }
 
 private[graft] object SegmentChain {

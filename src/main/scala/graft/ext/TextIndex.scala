@@ -88,11 +88,18 @@ object TextIndex {
   private def commitPostings(s: SparkSession, root: String, ver: Long,
       segment: String, postings: DataFrame, stamp: (Long, String),
       retain: Int): Long =
-    chain.commit(s, root, ver, stamp, retain) { dir =>
-      postings.select("doc_id", "bh", "band").write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(new org.apache.hadoop.fs.Path(dir, segment).toString)
-    }
+    chain.commit(s, root, ver, stamp, retain)(writePostings(_, segment, postings))
+
+  /** Write band-partitioned `postings` as `segment` under `dir`; a base
+    * segment is clustered by band first, so it holds one file per band.
+    */
+  private def writePostings(dir: org.apache.hadoop.fs.Path, segment: String,
+      postings: DataFrame): Unit = {
+    val rows = postings.select("doc_id", "bh", "band")
+    (if (segment == "postings") rows.hint("rebalance", col("band")) else rows)
+      .write.mode("overwrite").partitionBy("band")
+      .parquet(new org.apache.hadoop.fs.Path(dir, segment).toString)
+  }
 
   /** Build the postings of `docs` (doc_id, text) as a NEW version. */
   private[graft] def buildIndexFrom(docs: DataFrame, root: String,
@@ -133,16 +140,14 @@ object TextIndex {
       stamp, retain)
 
   /** Fold the live chain (base ∖ tombstones ∪ deltas) into ONE
-    * self-contained postings version — [[VectorIndex.compactIndex]]'s
-    * maintenance shape on the text family, stamped (−2, "optimize").
-    * None before the first commit.
+    * self-contained postings version through [[SegmentChain.fold]] — a
+    * no-op on a chain that is already its own base. None before the
+    * first commit.
     */
   def compactIndex(s: SparkSession, root: String,
       retain: Int = 2): Option[Long] =
-    chain.resolveOption(s, root).map { c =>
-      commitPostings(s, root, c.live + 1, "postings", livePostings(s, c),
-        (-2L, "optimize"), retain)
-    }
+    chain.fold(s, root, retain)((c, dir) =>
+      writePostings(dir, "postings", livePostings(s, c)))
 
   /** Forget documents — GDPR-style removal from the dedup index: a
     * forget on a postings-owning version commits METADATA ONLY

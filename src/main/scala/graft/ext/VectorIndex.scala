@@ -28,6 +28,11 @@ import org.apache.spark.sql.functions._
   *     cell directories (partition-pruned scan — the e24 scaladoc's
   *     "codes bucketed by cell" promise, made literal on disk);
   *
+  * `codebook/` and `pqcodebook/` exist in BASE versions only (the ones
+  * owning `codes/`): every link above a base — `codes-delta/` appends,
+  * `tombstones/` deletes — encodes against that base's quantizers, so
+  * readers load both codebooks from the chain's base.
+  *
   * Versions commit, resolve and prune through [[SegmentChain]] (the
   * `_commit-<n>` marker protocol, its crash-safety and read lease).
   * Build commits stamp `(-3, "index.r:<fingerprint>")` where the
@@ -56,8 +61,8 @@ import org.apache.spark.sql.functions._
   * is nprobe partition directories of 8-int code rows + a ≤128-row
   * broadcast ADC table, with the only shuffle the final per-candidate
   * sum over the probed cells. Append cost is batch-sized, never
-  * corpus-sized — the delta commit writes |batch| code rows plus the
-  * two tiny codebooks; deletes are metadata-only tombstone commits.
+  * corpus-sized — the delta commit writes |batch| code rows and the
+  * ≤16-row stats; deletes are metadata-only tombstone commits.
   */
 object VectorIndex {
 
@@ -75,7 +80,7 @@ object VectorIndex {
     "round(aggregate(zip_with(sv, cv, (x, y) -> (x - y) * (x - y)), 0D, (a, x) -> a + x), 6)"
 
   /** Codes chain: `codes` bases, `codes-delta` appends and `tombstones`
-    * deletes; every version also carries its codebooks and stats.
+    * deletes; every version carries its stats, bases also the codebooks.
     */
   private val chain = new SegmentChain("codes")
 
@@ -222,25 +227,32 @@ object VectorIndex {
   }
 
   /** Write codebook + cell-partitioned codes as base version `ver` —
-    * the single commit step builds, folds and compactions end in.
+    * the single commit step builds and folds end in.
     */
   private def commitVersion(s: SparkSession, indexRoot: String, ver: Long,
       cb: DataFrame, pqcb: DataFrame, codes: DataFrame, stamp: (Long, String),
       retain: Int): Long =
-    chain.commit(s, indexRoot, ver, stamp, retain) { dir =>
-      writeCodebooks(dir, cb, pqcb)
-      val codesDir = new org.apache.hadoop.fs.Path(dir, "codes").toString
-      codes.write.mode("overwrite").partitionBy("cell").parquet(codesDir)
-      // per-cell population stats, committed WITH the artifact (read back
-      // from the just-written files — exact, and costs one 8-byte-row
-      // column scan at build time, never at serve time): the adaptive
-      // probe routes off this ≤16-row table instead of aggregating the
-      // full code table per query
-      writeStatsFrom(s, readCodesDir(s, codesDir), dir)
-    }
+    chain.commit(s, indexRoot, ver, stamp, retain)(writeBase(s, _, cb, pqcb, codes))
 
-  /** The codebooks copy forward into every version (≤16 + ≤128 rows), so
-    * readers always resolve them at the live version.
+  /** A base version's segments under `dir`: both codebooks, the codes
+    * clustered by cell (one file per cell directory) and their stats.
+    */
+  private def writeBase(s: SparkSession, dir: org.apache.hadoop.fs.Path,
+      cb: DataFrame, pqcb: DataFrame, codes: DataFrame): Unit = {
+    writeCodebooks(dir, cb, pqcb)
+    val codesDir = new org.apache.hadoop.fs.Path(dir, "codes").toString
+    codes.hint("rebalance", col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(codesDir)
+    // per-cell population stats, committed WITH the artifact (read back
+    // from the just-written files — exact, and costs one 8-byte-row
+    // column scan at build time, never at serve time): the adaptive
+    // probe routes off this ≤16-row table instead of aggregating the
+    // full code table per query
+    writeStatsFrom(s, readCodesDir(s, codesDir), dir)
+  }
+
+  /** The codebooks live in base versions only (≤16 + ≤128 rows): every
+    * link of a chain encodes against its base's quantizers.
     */
   private def writeCodebooks(dir: org.apache.hadoop.fs.Path, cb: DataFrame,
       pqcb: DataFrame): Unit = {
@@ -341,24 +353,43 @@ object VectorIndex {
       buildIndexFrom(e, indexRoot))
   }
 
-  /** Load the latest committed version's codebook — 16 rows. Throws with
-    * a clear message before the first commit (readers must never guess
-    * at an uncommitted directory).
+  /** Load the latest committed version's codebook — 16 rows, read from
+    * the chain's base. Throws with a clear message before the first
+    * commit (readers must never guess at an uncommitted directory).
     */
   def loadCodebook(s: SparkSession, indexRoot: String): DataFrame =
     codebookAt(s, chain.resolve(s, indexRoot))
 
+  /** The codebooks' DECLARED schemas (the committed files' own): an
+    * inferred read would launch a schema-inference job per call.
+    */
+  private val codebookSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("cid", LongType),
+      StructField("cv", ArrayType(DoubleType))))
+  }
+
+  private val pqCodebookSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("cid", LongType),
+      StructField("cj", IntegerType),
+      StructField("cv", ArrayType(DoubleType))))
+  }
+
   private def codebookAt(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
-    s.read.parquet(c.dir(c.live, "codebook"))
+    s.read.schema(codebookSchema).parquet(c.dir(c.base, "codebook"))
 
   /** Latest committed version's trained PQ codebooks (cid, cj, cv) —
-    * ≤ 8×16 rows, broadcast at every serve/append site.
+    * ≤ 8×16 rows from the chain's base, broadcast at every serve/append
+    * site.
     */
   def loadPqCodebook(s: SparkSession, indexRoot: String): DataFrame =
     pqCodebookAt(s, chain.resolve(s, indexRoot))
 
   private def pqCodebookAt(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
-    s.read.parquet(c.dir(c.live, "pqcodebook"))
+    s.read.schema(pqCodebookSchema).parquet(c.dir(c.base, "pqcodebook"))
 
   /** Load the latest committed version's code table (vec_id, codes,
     * cell). The schema is DECLARED (not inferred): partition discovery
@@ -389,8 +420,8 @@ object VectorIndex {
   /** Delete `ids` (a one-column vec_id frame) from the served index —
     * the deletion-vector discipline on plain parquet: when the live
     * version owns its code files, the delete commits METADATA ONLY
-    * (cumulative tombstones + the 16-row codebook copied forward; the
-    * big code table is referenced back to the chain base) — at 100 TB
+    * (tombstones and the decremented stats; the code table and the
+    * codebooks are referenced back to the chain base) — at 100 TB
     * this is the difference between an O(deleted) commit and an O(corpus)
     * rewrite. A second delete on top of a DV version COMPACTS instead
     * (codes minus every tombstone, rewritten cell-partitioned), both so
@@ -409,7 +440,6 @@ object VectorIndex {
       return c.live // redelivery of the delete that produced the live version
     chain.commit(s, indexRoot, c.live + 1, stamp, retain) { dir =>
       def seg(name: String) = new org.apache.hadoop.fs.Path(dir, name).toString
-      writeCodebooks(dir, codebookAt(s, c), pqCodebookAt(s, c))
       if (c.depth == 0) {
         // live is a clean base (a codes-owning version starts a fresh
         // chain: no deltas above it, no tombstones): metadata-only DV
@@ -427,13 +457,11 @@ object VectorIndex {
           .coalesce(1).write.mode("overwrite").parquet(seg("stats"))
       } else {
         // live chain already carries tombstones and/or deltas: COMPACT
-        // (live view minus the new ids, rewritten cell-partitioned) — the
+        // (live view minus the new ids, rewritten as a new base) — the
         // rule that keeps chains at most one tombstones version deep and
         // lets [[loadCodes]] shade only the base segment
-        codesAt(s, c)
-          .join(broadcast(ids.select("vec_id")), Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").partitionBy("cell").parquet(seg("codes"))
-        writeStatsFrom(s, readCodesDir(s, seg("codes")), dir)
+        writeBase(s, dir, codebookAt(s, c), pqCodebookAt(s, c), codesAt(s, c)
+          .join(broadcast(ids.select("vec_id")), Seq("vec_id"), "left_anti"))
       }
     }
   }
@@ -482,7 +510,7 @@ object VectorIndex {
     // quantize residuals, so the query side is q − centroid(cell) per
     // probed cell against the residual codebooks — the per-cell tables
     // IndexIVFPQ precomputes (e63's serving shape off the artifact)
-    val qtab = perCellQueryTables(s, c, q, qcells)
+    val qtab = perCellQueryTables(s, c, cb, q, qcells)
     val adc = cand.select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
       .join(broadcast(qtab), col("cell") === col("tcell") &&
@@ -494,12 +522,13 @@ object VectorIndex {
 
   /** The query's per-cell residual ADC tables (tcell, qj, qcid, qd2) —
     * one 8×16 lookup table per cell in `cells(qcell)`: the query's
-    * residual vs THAT cell's centroid, scored against the committed
-    * residual codebooks. Broadcast-sized (|cells| × 128 rows).
+    * residual vs THAT cell's centroid in the serve's coarse codebook
+    * `cb`, scored against the committed residual codebooks.
+    * Broadcast-sized (|cells| × 128 rows).
     */
   private def perCellQueryTables(s: SparkSession, c: SegmentChain.Snapshot,
-      q: DataFrame, cells: DataFrame): DataFrame = {
-    val qres = cells.join(broadcast(codebookAt(s, c)),
+      cb: DataFrame, q: DataFrame, cells: DataFrame): DataFrame = {
+    val qres = cells.join(broadcast(cb),
         col("qcell") === col("cid"))
       .crossJoin(broadcast(q))
       .selectExpr("qcell", "zip_with(qv, cv, (x, y) -> x - y) AS v")
@@ -515,8 +544,8 @@ object VectorIndex {
     * (nQueries × nprobe × 128 rows, still broadcast-sized).
     */
   private def perQueryCellTables(s: SparkSession, c: SegmentChain.Snapshot,
-      qs: DataFrame, qcells: DataFrame): DataFrame = {
-    val qres = qcells.join(broadcast(codebookAt(s, c)),
+      cb: DataFrame, qs: DataFrame, qcells: DataFrame): DataFrame = {
+    val qres = qcells.join(broadcast(cb),
         col("qcell") === col("cid"))
       .join(qs, Seq("qid"))
       .selectExpr("qid", "qcell", "zip_with(qv, cv, (x, y) -> x - y) AS v")
@@ -590,7 +619,6 @@ object VectorIndex {
         stamp, retain)
     else chain.commit(s, c.root, c.live + 1, stamp, retain) { dir =>
       val deltaDir = new org.apache.hadoop.fs.Path(dir, "codes-delta").toString
-      writeCodebooks(dir, cb, pqcb)
       fresh.write.mode("overwrite").partitionBy("cell").parquet(deltaDir)
       // stats merge incrementally: prior table + the written delta's
       // per-cell counts — O(batch + 16), the commit never rescans codes
@@ -603,21 +631,19 @@ object VectorIndex {
     }
 
   /** Fold the live chain (base ∖ tombstones ∪ deltas) into ONE
-    * self-contained codes version — [[graft.streaming.StreamOps.optimizeCdcTable]]'s
-    * maintenance shape on the index family, stamped (−2, "optimize")
-    * like the CDC OPTIMIZE so stream retry detection can never mistake
-    * it for a batch. After the fold, the chain-aware prune retires the
-    * old base + deltas once the read lease expires. None before the
-    * first commit.
+    * self-contained codes version through [[SegmentChain.fold]] —
+    * [[graft.streaming.StreamOps.optimizeCdcTable]]'s maintenance shape
+    * on the index family, stamped (−2, "optimize") like the CDC OPTIMIZE
+    * so stream retry detection can never mistake it for a batch, and a
+    * no-op on a chain that is already its own base. After the fold, the
+    * chain-aware prune retires the old base + deltas once the read lease
+    * expires. None before the first commit.
     */
   def compactIndex(s: SparkSession, indexRoot: String,
       retain: Int = 2): Option[Long] =
-    chain.resolveOption(s, indexRoot).map { c =>
-      commitVersion(s, indexRoot, c.live + 1,
-        codebookAt(s, c), pqCodebookAt(s, c),
-        codesAt(s, c).select("vec_id", "cell", "codes"),
-        (-2L, "optimize"), retain)
-    }
+    chain.fold(s, indexRoot, retain)((c, dir) =>
+      writeBase(s, dir, codebookAt(s, c), pqCodebookAt(s, c),
+        codesAt(s, c).select("vec_id", "cell", "codes")))
 
   /** Streaming maintenance sink: each micro-batch of new vectors
     * appends through [[appendBatch]] — version re-resolved per batch,
@@ -680,7 +706,7 @@ object VectorIndex {
       .filter(col("cell").isin(probed: _*))
     val candQ = cand.join(broadcast(qcells), col("cell") === col("qcell"))
       .filter(col("vec_id") =!= col("qid"))
-    val qtab = perQueryCellTables(s, c, qs, qcells)
+    val qtab = perQueryCellTables(s, c, cb, qs, qcells)
     candQ.select(col("qid"), col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
       .join(broadcast(qtab), col("qid") === col("tqid") &&
@@ -776,10 +802,11 @@ object VectorIndex {
     */
   private def commitGraphFull(s: SparkSession, root: String, ver: Long,
       edges: DataFrame, stamp: (Long, String), retain: Int): Long =
-    graphChain.commit(s, root, ver, stamp, retain) { dir =>
-      edges.sortWithinPartitions("src").write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(dir, "edges").toString)
-    }
+    graphChain.commit(s, root, ver, stamp, retain)(writeEdges(_, edges))
+
+  private def writeEdges(dir: org.apache.hadoop.fs.Path, edges: DataFrame): Unit =
+    edges.sortWithinPartitions("src").write.mode("overwrite")
+      .parquet(new org.apache.hadoop.fs.Path(dir, "edges").toString)
 
   /** Commit the kNN graph of `vecs` as the next base version, stamped
     * (-3, "graph:<fingerprint>") — the first commit of every maintained
@@ -821,15 +848,12 @@ object VectorIndex {
     }
 
   /** Fold the live graph chain into ONE self-contained `edges/` version
-    * — [[compactIndex]]'s maintenance shape on the graph family,
-    * stamped (−2, "optimize"). None before the first commit.
+    * — [[compactIndex]]'s maintenance shape on the graph family, through
+    * [[SegmentChain.fold]]. None before the first commit.
     */
   def compactGraphIndex(s: SparkSession, root: String,
       retain: Int = 2): Option[Long] =
-    graphChain.resolveOption(s, root).map { c =>
-      commitGraphFull(s, root, c.live + 1, graphAt(s, c),
-        (-2L, "optimize"), retain)
-    }
+    graphChain.fold(s, root, retain)((c, dir) => writeEdges(dir, graphAt(s, c)))
 
   /** Registry entry: e40's beam-walk recall audit with the adjacency
     * LOADED from the committed graph artifact instead of rebuilt —
@@ -1475,7 +1499,7 @@ object VectorIndex {
     val cand = labeledCodesAt(s, c)
       .filter(col("cell").isin(probed: _*))
       .filter(col("label") === 3 && col("vec_id") =!= 0)
-    val qtab = perCellQueryTables(s, c, q, qcells)
+    val qtab = perCellQueryTables(s, c, cb, q, qcells)
     val shortlist = cand.select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
       .join(broadcast(qtab), col("cell") === col("tcell") &&
@@ -1548,7 +1572,7 @@ object VectorIndex {
     val cand = codesAt(s, c)
       .filter(col("cell").isin(probed: _*))
       .filter(col("vec_id") =!= 0)
-    val qtab = perCellQueryTables(s, c, q,
+    val qtab = perCellQueryTables(s, c, cb, q,
       cb.select(col("cid").as("qcell")).filter(col("qcell").isin(probed: _*)))
     cand.select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
@@ -1610,7 +1634,7 @@ object VectorIndex {
     val cand = excludeIds.foldLeft(codes0)((c, ex) =>
       c.join(broadcast(ex.select("vec_id")), Seq("vec_id"), "left_anti"))
       .join(broadcast(qcells), col("cell") === col("qcell"))
-    val qtab = perQueryCellTables(s, c, qs, qcells)
+    val qtab = perQueryCellTables(s, c, cb, qs, qcells)
     val shortlist = cand
       .select(col("qid"), col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))
@@ -1802,8 +1826,8 @@ object VectorIndex {
     // the IVF probe), so the query needs a residual table per cell —
     // all 16 of them, still a ≤2048-row broadcast
     val c = chain.resolve(s, root)
-    val qtab = perCellQueryTables(s, c, q,
-      codebookAt(s, c).select(col("cid").as("qcell")))
+    val cb = codebookAt(s, c)
+    val qtab = perCellQueryTables(s, c, cb, q, cb.select(col("cid").as("qcell")))
     val short50 = codesAt(s, c).filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("j", "code")))

@@ -1,7 +1,9 @@
 package graft
 
-import graft.ext.{VectorIndex, VectorOps}
+import graft.ext.{SegmentChain, VectorIndex, VectorOps}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Persisted IVF-PQ index lifecycle ([[graft.ext.VectorIndex]]):
   * build (TRAINED quantizers) → commit → load → serve roundtrip,
@@ -259,7 +261,7 @@ class IndexSpec extends SparkSpec {
     val ids = Seq(3L, 20L, 21L).toDF("vec_id")
     val v1 = VectorIndex.deleteIds(spark, root, ids, 1L, "del-A")
     assert(v1 == 1L)
-    // METADATA-ONLY: v1 has tombstones + codebook, codes stay in v0
+    // METADATA-ONLY: v1 has tombstones, codes and codebooks stay in v0
     val v1names = new java.io.File(root, "v1").list().toSet
     assert(v1names.contains("tombstones") && !v1names.contains("codes"),
       s"DV commit must not rewrite codes: $v1names")
@@ -269,7 +271,7 @@ class IndexSpec extends SparkSpec {
     val live = VectorIndex.loadCodes(spark, root)
     assert(live.count() == before - 3)
     assert(live.filter(col("vec_id").isin(3L, 20L, 21L)).count() == 0)
-    // and the codebook still loads from the DV version (copied forward)
+    // and the codebook still loads, from the chain's base
     assert(VectorIndex.loadCodebook(spark, root).count() == 16L)
   }
 
@@ -317,6 +319,10 @@ class IndexSpec extends SparkSpec {
     // the append is an O(batch) DELTA commit, not a corpus rewrite
     assert(new java.io.File(root, "v2/codes-delta").exists())
     assert(!new java.io.File(root, "v2/codes").exists())
+    // the codebooks live in the base only: neither link copies them
+    for (v <- Seq("v1", "v2"); cb <- Seq("codebook", "pqcodebook"))
+      assert(!new java.io.File(root, s"$v/$cb").exists(),
+        s"$v must not hold a $cb directory")
     // the live view: tombstoned id 3 gone, the appended id present
     val live = VectorIndex.loadCodes(spark, root)
     assert(live.filter(col("vec_id") === 3L).count() == 0)
@@ -1569,5 +1575,101 @@ class IndexSpec extends SparkSpec {
     // readers resolve straight through marker-only versions
     assert(RetrievalIndex.loadPostings(spark, root).count() == 18L)
     assert(RetrievalIndex.serveBm25TopK(spark, root).count() > 0)
+  }
+
+  // ------------------------------------------------- the fold rule
+
+  /** Every file under `root` with its size, relative paths. */
+  private def listing(root: String): Map[String, Long] = {
+    val base = java.nio.file.Paths.get(root)
+    val files = java.nio.file.Files.walk(base)
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => base.relativize(f).toString -> java.nio.file.Files.size(f)).toMap
+    finally files.close()
+  }
+
+  test("compacting a depth-0 chain is a no-op: live version back, no job, nothing written") {
+    import graft.ext.{RetrievalIndex, TextIndex}
+    import spark.implicits._
+    val docs = (1L to 12L).map(i => (i, (1 to 20).map(j => s"w${i % 4}x$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    val vRoot = tmpRoot("noop-vec")
+    VectorIndex.buildIndexFrom(fullVecs, vRoot)
+    val gRoot = tmpRoot("noop-graph")
+    VectorIndex.ensureGraphIndex(spark, sf0001, gRoot)
+    val tRoot = tmpRoot("noop-text")
+    TextIndex.buildIndexFrom(docs, tRoot)
+    val rRoot = tmpRoot("noop-bm25")
+    RetrievalIndex.buildIndexFrom(docs, rRoot)
+    // a compacting forget leaves a depth-0 chain stamped with ITS stamp
+    RetrievalIndex.appendDocs(Seq((100L, "z1 z2 z3")).toDF("doc_id", "text"),
+      rRoot, 1L, "a")                                                 // v1: delta
+    RetrievalIndex.forgetDocs(spark, rRoot, docs.filter(col("doc_id") === 3L),
+      2L, "f")                                                        // v2: folded
+    assert(new java.io.File(rRoot, "v2/postings").exists())
+    val folds = Seq[(String, String, () => Option[Long])](
+      ("codes", vRoot, () => VectorIndex.compactIndex(spark, vRoot)),
+      ("graph", gRoot, () => VectorIndex.compactGraphIndex(spark, gRoot)),
+      ("text postings", tRoot, () => TextIndex.compactIndex(spark, tRoot)),
+      ("bm25 postings", rRoot, () => RetrievalIndex.compactIndex(spark, rRoot)))
+    folds.foreach { case (name, root, fold) =>
+      val live = SegmentChain.latest(spark, root)
+      val before = listing(root)
+      val (v, jobs) = jobsDuring(fold())
+      assert(v == live, s"$name: a depth-0 fold must return the live version")
+      assert(jobs == 0, s"$name: a depth-0 fold launched $jobs Spark jobs")
+      assert(listing(root) == before, s"$name: a depth-0 fold must write nothing")
+    }
+    // the forget's stamp stayed live, so its redelivery is still a retry
+    assert(RetrievalIndex.forgetDocs(spark, rRoot,
+      docs.filter(col("doc_id") === 3L), 2L, "f") == 2L)
+    assert(RetrievalIndex.latestVersion(spark, rRoot).contains(2L))
+  }
+
+  test("loading the codebooks launches no job before an action") {
+    val root = tmpRoot("cb-jobs")
+    VectorIndex.buildIndexFrom(fullVecs, root)
+    val ((cb, pq), jobs) = jobsDuring(
+      (VectorIndex.loadCodebook(spark, root), VectorIndex.loadPqCodebook(spark, root)))
+    assert(jobs == 0, s"loading the codebooks launched $jobs Spark jobs")
+    assert(cb.count() == 16L && pq.select("cj").distinct().count() == 8L)
+  }
+
+  test("after append+compact cycles every bucket directory of the live base holds one file") {
+    import graft.ext.{RetrievalIndex, TextIndex}
+    import spark.implicits._
+    def mkDocs(from: Long, n: Int) = (from until from + n).map(i =>
+      (i, (1 to 20).map(j => s"t${i}w$j").mkString(" "))).toDF("doc_id", "text")
+    val vRoot = tmpRoot("one-file-vec")
+    VectorIndex.buildIndexFrom(fullVecs, vRoot)
+    val tRoot = tmpRoot("one-file-text")
+    val rRoot = tmpRoot("one-file-bm25")
+    val base = mkDocs(1L, 40)
+    TextIndex.buildIndexFrom(base, tRoot)
+    RetrievalIndex.buildIndexFrom(base, rRoot)
+    (1 to 3).foreach { i =>
+      VectorIndex.appendBatch(
+        fullVecs.limit(20).selectExpr(s"vec_id + ${8000000 * i} AS vec_id", "v"),
+        vRoot, i.toLong, "cyc")
+      VectorIndex.compactIndex(spark, vRoot)
+      val batch = mkDocs(1000L * i, 10)
+      TextIndex.admitBatch(batch, base, tRoot, i.toLong, "cyc").unpersist()
+      TextIndex.compactIndex(spark, tRoot)
+      RetrievalIndex.appendDocs(batch, rRoot, i.toLong, "cyc")
+      RetrievalIndex.compactIndex(spark, rRoot)
+    }
+    def bucketFiles(root: String, segment: String): Map[String, Int] = {
+      val live = SegmentChain.latest(spark, root).get
+      val seg = new java.io.File(root, s"v$live/$segment")
+      assert(seg.isDirectory, s"the live version of $root must be a base with $segment")
+      seg.listFiles().filter(_.isDirectory).map(d =>
+        d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    }
+    Seq((vRoot, "codes"), (tRoot, "postings"), (rRoot, "postings"), (rRoot, "vocab"))
+      .foreach { case (root, segment) =>
+        val files = bucketFiles(root, segment)
+        assert(files.nonEmpty && files.values.forall(_ == 1),
+          s"$segment under $root: parquet files per bucket $files")
+      }
   }
 }

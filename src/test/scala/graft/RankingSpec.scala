@@ -209,26 +209,13 @@ class RankingSpec extends SparkSpec {
     def mk(nHeavy: Int) = spark.range(1000).select(col("id"),
       when(col("id") < 900, (col("id") % nHeavy).cast("double"))
         .otherwise(col("id").cast("double")).as("s"))
-    def jobsDuring(nHeavy: Int): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        // construction alone runs every driver-side pass (span, bin
-        // counts, heavy scan, boundary aggregate, split counts)
-        Ranking.exactNtileParts(mk(nHeavy), 10, col("s"), ascending = true,
-          ties = Seq(col("id")), out = "tile", nBuckets = 16, maxBinRows = 50)
-        org.apache.spark.GraftSparkTestHooks.waitListenerBus(spark.sparkContext)
-        counter.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
-    val one = jobsDuring(1)
-    val five = jobsDuring(5)
+    // construction alone runs every driver-side pass (span, bin counts,
+    // heavy scan, boundary aggregate, split counts)
+    def boundaryJobs(nHeavy: Int): Int = jobsDuring(
+      Ranking.exactNtileParts(mk(nHeavy), 10, col("s"), ascending = true,
+        ties = Seq(col("id")), out = "tile", nBuckets = 16, maxBinRows = 50))._2
+    val one = boundaryJobs(1)
+    val five = boundaryJobs(5)
     assert(five <= one,
       s"boundary jobs grew with heavy-value count: 1 heavy -> $one jobs, " +
         s"5 heavy -> $five jobs")

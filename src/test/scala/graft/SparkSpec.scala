@@ -8,6 +8,27 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the Spark jobs launched while it runs (listener
+    * bus drained on both sides, so earlier work is never counted).
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.GraftSparkTestHooks.waitListenerBus
+    waitListenerBus(spark.sparkContext)
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      waitListenerBus(spark.sparkContext)
+      (r, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
