@@ -12,11 +12,11 @@ import org.apache.spark.sql.execution.window.WindowExec
 /** Structured scale-posture report over a frame's PHYSICAL plan — the
   * review `.explain("formatted")` makes a human do, as data.
   *
-  * [[audit]] walks the executed plan (through AQE wrappers, query stages
-  * and cached subtrees) and emits one [[PlanAudit.Finding]] per
-  * scale-relevant operator:
+  * [[audit]] walks the executed plan (through AQE wrappers, query stages,
+  * cached subtrees and subquery plans) and emits one [[PlanAudit.Finding]]
+  * per scale-relevant operator:
   *
-  *  - `scan` — per parquet scan: the table, how many columns survive
+  *  - `scan` — per parquet scan: the table, the columns that survive
   *    pruning, and whether filters were PUSHED to the reader (caution
   *    when a filter exists in the plan but nothing reached the scan);
   *  - `join` — the chosen strategy; broadcast forms are the no-shuffle
@@ -35,7 +35,8 @@ import org.apache.spark.sql.execution.window.WindowExec
   * The result is plain data: assert on it in tests (GuardSpec does),
   * diff it across releases to catch plan regressions, or render it with
   * [[auditDf]] beside job metrics. The audit never executes the frame —
-  * it reads the plan Spark already produced. AQE caveat: codegen spans
+  * it reads the plan Spark already produced, so it also takes a plan
+  * captured from a finished execution (a `QueryExecutionListener`'s). AQE caveat: codegen spans
   * (and AQE's final join/shuffle choices) exist only in MATERIALIZED
   * query stages, so audit an executed frame to see what actually ran;
   * an un-executed frame reports the initial static plan.
@@ -51,7 +52,9 @@ object PlanAudit {
       kind: String, operator: String, detail: String, caution: Boolean)
 
   def audit(df: Dataset[_]): Seq[Finding] =
-    walk(df.queryExecution.executedPlan, Nil)
+    audit(df.queryExecution.executedPlan)
+
+  def audit(plan: SparkPlan): Seq[Finding] = walk(plan, Nil)
 
   /** The findings as a DataFrame, for display/joins with metrics. */
   def auditDf(df: Dataset[_]): Dataset[Finding] = {
@@ -68,7 +71,9 @@ object PlanAudit {
     * predicate never mentions). Wrapper nodes (AQE shells, query stages,
     * cached subtrees) pass the set through unscoped — their inner plans
     * may re-alias attributes, and dropping the filter there would
-    * silently disarm the pushdown caution for every AQE plan.
+    * silently disarm the pushdown caution for every AQE plan. A subquery
+    * plan (scalar, IN, dynamic pruning) starts with no filters above:
+    * it reads its own tables, under none of the outer plan's filters.
     */
   private def walk(p: SparkPlan,
       filtersAbove: Seq[org.apache.spark.sql.catalyst.expressions.AttributeSet])
@@ -87,7 +92,7 @@ object PlanAudit {
         val tbl = s.relation.location.rootPaths.headOption
           .map(_.getName).getOrElse("?")
         val pushed = s.metadata.getOrElse("PushedFilters", "[]")
-        val nCols = s.requiredSchema.fieldNames.length
+        val cols = s.requiredSchema.fieldNames
         val totCols = s.relation.dataSchema.fieldNames.length
         // the advertised pushdown-failure flag: a Filter sits above this
         // scan yet NOTHING reached the reader — neither a data filter
@@ -99,7 +104,7 @@ object PlanAudit {
         val nothingPushed = (pushed == "[]" || pushed.isEmpty) &&
           s.partitionFilters.isEmpty
         Seq(Finding("scan", s"parquet $tbl",
-          s"reads $nCols/$totCols cols, PushedFilters: $pushed" +
+          s"reads ${cols.length}/$totCols cols [${cols.mkString(", ")}], PushedFilters: $pushed" +
             (if (filterAbove && nothingPushed)
                " — filter in plan but NOTHING pushed to the reader" else ""),
           caution = filterAbove && nothingPushed))
@@ -170,6 +175,6 @@ object PlanAudit {
         if (isWrapper) withSelf
         else withSelf.filter(refs => refs.intersect(c.outputSet).nonEmpty)
       walk(c, scoped)
-    }
+    } ++ p.subqueries.flatMap(walk(_, Nil))
   }
 }

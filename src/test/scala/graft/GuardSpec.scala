@@ -109,6 +109,20 @@ class GuardSpec extends SparkSpec {
     assert(bj.exists(x => x.kind == "join" && x.operator == "BroadcastHashJoin" && !x.caution))
   }
 
+  test("PlanAudit reports the scan a scalar subquery reads from a second table") {
+    import graft.plans.PlanAudit
+    import org.apache.spark.sql.functions.{col, max}
+    val nt = graft.Tables.nation(spark, sf0001)
+    val df = graft.Tables.lineitem(spark, sf0001)
+      .filter(col("l_suppkey") > nt.select(max("n_nationkey")).scalar())
+    df.collect()
+    val scans = PlanAudit.audit(df).filter(_.kind == "scan")
+    assert(scans.exists(_.operator == "parquet lineitem.parquet"), scans.toString)
+    // the subquery's plan hangs off an expression, not the operator tree
+    assert(scans.exists(f => f.operator == "parquet nation.parquet" &&
+      f.detail.startsWith("reads 1/") && f.detail.contains("[n_nationkey]")), scans.toString)
+  }
+
   test("PlanAudit cautions a scan when a filter exists but nothing was pushed") {
     import graft.plans.PlanAudit
     val lf = graft.Tables.lineitem(spark, sf0001)

@@ -109,30 +109,25 @@ class PlanSpec extends SparkSpec {
     // The hygiene sweep for accidental unhinted cross joins: a broadcast
     // nested-loop against a 1-row scalar/query frame is fine (and
     // intentional in the brute-force baselines); a CartesianProduct of two
-    // shuffled sides at 100 TB is never fine.
-    // d13 is excluded: its fn drives an iterative label-propagation loop
-    // (checkpoint + count per round), so "getting its plan" executes real
-    // jobs; its per-round join plan is covered by the d05/d06 sweep rows
-    // it is built from.
-    SparkEntry.allQueries.filterNot(_.name.startsWith("d13")).foreach { q =>
-      val p = plan(q.fn(spark, sf0001))
-      assert(!p.contains("CartesianProduct"),
-        s"${q.name} plans a CartesianProduct:\n$p")
+    // shuffled sides at 100 TB is never fine. It reads the findings of
+    // every execution the shared registry run captured, so the jobs a
+    // query runs while building its frame (d13's label-propagation loop,
+    // eager checkpoints) are audited with its final plan.
+    val offenders = registryRun.toSeq.sortBy(_._1).flatMap { case (n, o) =>
+      o.findings.filter(f => f.kind == "join" && f.operator == "CartesianProduct")
+        .map(f => s"$n: ${f.detail}")
     }
+    assert(offenders.isEmpty, s"queries planning a CartesianProduct:\n${offenders.mkString("\n")}")
   }
 
   test("no query plans a partition-less WindowExec over data-scaled input") {
     // The funnel sweep: a WindowExec with an empty partitionSpec moves
     // EVERY input row to one task — the q35/d42 class of bug that
-    // exactNtile eliminated. Like the CartesianProduct sweep, this walks
-    // every registry query's physical plan; the allowlist names the
-    // queries whose unpartitioned window runs over a frame bounded BY
-    // CONSTRUCTION (a calendar/bucket/bin aggregate, never raw rows),
-    // with the bound stated. d13 is excluded for the same reason as
-    // above (its fn executes an iterative loop to build the plan).
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.window.WindowExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // exactNtile eliminated. Like the CartesianProduct sweep, this reads
+    // the findings of every execution each registry query triggers; the
+    // allowlist names the queries whose unpartitioned window runs over a
+    // frame bounded BY CONSTRUCTION (a calendar/bucket/bin aggregate,
+    // never raw rows), with the bound stated.
     val bounded: Map[String, String] = Map(
       // query -> why its unpartitioned window input is bounded
       "q27_open_order_backlog" -> "day spine: ≤ one row per calendar day",
@@ -148,25 +143,14 @@ class PlanSpec extends SparkSpec {
       "t33_concurrent_sessions" -> "boundary minutes: calendar-bounded frame",
       "d25_sequence_packing" -> "bucket-offset frame: |docs|/100 buckets",
       "d28_length_histogram" -> "4 fixed length bands",
-      "d85_bm25_daat_topk" -> "rank over the TakeOrdered ≤10-row doc shortlist")
-    def windows(p: SparkPlan): Seq[WindowExec] = {
-      val kids: Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case o => o.children
-      }
-      val self = p match {
-        case w: WindowExec if w.partitionSpec.isEmpty => Seq(w)
-        case _ => Nil
-      }
-      self ++ kids.flatMap(windows)
+      "d85_bm25_daat_topk" -> "rank over the TakeOrdered ≤10-row doc shortlist",
+      // both windows run in construction jobs; its final plan has none
+      "e54_adaptive_nprobe" -> "routing rank + running coverage over the ≤ codebook-size (16) routing table")
+    val offenders = registryRun.toSeq.sortBy(_._1).flatMap { case (n, o) =>
+      val ws = o.findings.count(f =>
+        f.kind == "window" && f.operator == "WindowExec (partition-less)")
+      if (ws == 0) None else Some(n -> ws)
     }
-    val offenders = SparkEntry.allQueries
-      .filterNot(_.name.startsWith("d13"))
-      .flatMap { q =>
-        val ws = windows(q.fn(spark, sf0001).queryExecution.executedPlan)
-        if (ws.isEmpty) None else Some(q.name -> ws.length)
-      }
     val unexplained = offenders.filterNot { case (n, _) => bounded.contains(n) }
     assert(unexplained.isEmpty,
       s"partition-less WindowExec outside the bounded allowlist: $unexplained")
@@ -183,28 +167,18 @@ class PlanSpec extends SparkSpec {
     // scalar metadata fields). Catalyst prunes them automatically — until
     // something blocks pruning (a typed Dataset op deserializing whole
     // rows, a persist/checkpoint of a wide frame, to_json(struct(*)), a
-    // select("*") carried through a join). This sweep walks every
-    // registry query's FileSourceScanExec nodes (through AQE wrappers and
-    // subqueries) and fails if a query OUTSIDE the audited reader sets
-    // pulls a heavy column through its scan — i.e. if a metadata-only
-    // query ever starts paying the full text/vector scan cost. The two
-    // sets were seeded from the actual plans and hand-audited: every
-    // member tokenizes/hashes text or does vector math on embeddings.
-    // The audit covers every execution the query function triggers, not
-    // only its final plan: a QueryExecutionListener captures the jobs run
-    // while the frame is built (eager localCheckpoint()s, driver
-    // collects), whose scans a checkpoint truncates out of the final
-    // plan, so no query needs a hand exclusion.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    // suite-order hygiene: a persisted frame left by an earlier test would
-    // serve some scans from InMemoryTableScan and make the staleness check
-    // below misread "no file scan" as "no longer reads the column"
-    graft.ext.TextOps.clearSharedFrames()
-    graft.ext.VectorOps.clearSharedFrames()
-    spark.sharedState.cacheManager.clearCache()
+    // select("*") carried through a join). This sweep reads the parquet
+    // scan findings of every registry query (PlanAudit walks AQE wrappers,
+    // subqueries and persisted subtrees) and fails if a query OUTSIDE the
+    // audited reader sets pulls a heavy column through its scan — i.e. if
+    // a metadata-only query ever starts paying the full text/vector scan
+    // cost. The two sets were seeded from the actual plans and
+    // hand-audited: every member tokenizes/hashes text or does vector
+    // math on embeddings. The audit covers every execution the query
+    // function triggers, not only its final plan: the shared registry run
+    // captures the jobs run while the frame is built (eager
+    // localCheckpoint()s, driver collects), whose scans a checkpoint
+    // truncates out of the final plan, so no query needs a hand exclusion.
     val textReaders = Set(
       "d81_curation_pipeline",
       "d01_exact_dedup", "d02_token_stats", "d03_quality_score",
@@ -249,7 +223,7 @@ class PlanSpec extends SparkSpec {
       // tokenizes text inside the unigram-LM subtree (the d42 pattern)
       "d70_isotonic_calibration",
       // visible only THROUGH their internally-persisted build frames
-      // (the InMemoryTableScan recursion below): all five tokenize text
+      // (PlanAudit's InMemoryTableScan recursion): all five tokenize text
       // inside the gram/persist subtree they are built on
       "d20_crossdoc_ngram_dup", "d42_quality_calibration",
       "d45_ngram_novelty", "d46_dup_substring_spans", "d62_bm25_retrieval",
@@ -309,55 +283,15 @@ class PlanSpec extends SparkSpec {
       // the hybrid dense arm reads the 10 query vectors + the 20-row
       // re-rank shortlist from the primary store (two-stage serve)
       "e65_hybrid_index_served")
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = {
-      val kids: Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        // see THROUGH internal persists (d39's shingle frame, q31/q33):
-        // the audit is about what the query's execution reads from
-        // parquet, and a cached subtree's build scan is part of that
-        case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          Seq(c.relation.cachedPlan)
-        case o => o.children
-      }
-      val self = p match { case f: FileSourceScanExec => Seq(f); case _ => Nil }
-      self ++ kids.flatMap(scans) ++ p.subqueries.flatMap(scans)
+    val readCols = """reads \d+/\d+ cols \[([^\]]*)\]""".r
+    val heavyByQuery = registryRun.map { case (n, o) =>
+      n -> o.findings.filter(_.kind == "scan").flatMap { f =>
+        val cols = readCols.findFirstMatchIn(f.detail)
+          .map(_.group(1).split(", ").toSet).getOrElse(Set.empty[String])
+        Seq(("parquet documents.parquet", "text"), ("parquet embeddings.parquet", "embedding"))
+          .collect { case (t, c) if f.operator == t && cols.contains(c) => c }
+      }.toSet
     }
-    // the executed plans of every execution `body` triggers (read once
-    // the listener bus has delivered them), then the plan `body` returns
-    def executionsOf(body: => SparkPlan): Seq[SparkPlan] = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-      val listener = new QueryExecutionListener {
-        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-          seen.add(qe)
-        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-          seen.add(qe)
-      }
-      spark.listenerManager.register(listener)
-      try {
-        val last = body
-        org.apache.spark.GraftSparkTestHooks.waitListenerBus(spark.sparkContext)
-        seen.asScala.toSeq.map(_.executedPlan) :+ last
-      } finally spark.listenerManager.unregister(listener)
-    }
-    val heavyByQuery = SparkEntry.allQueries
-      .map { q =>
-        val reads = executionsOf(q.fn(spark, sf0001).queryExecution.executedPlan)
-          .flatMap(scans)
-          .flatMap { s =>
-            val tbl = s.relation.location.rootPaths.headOption
-              .map(_.getName).getOrElse("?")
-            val cols = s.requiredSchema.fieldNames.toSet
-            Seq(("documents.parquet", "text"), ("embeddings.parquet", "embedding"))
-              .collect { case (t, c) if tbl == t && cols.contains(c) => c }
-          }.toSet
-        // per-query cache hygiene (the runner-owns-cleanup contract):
-        // without it, a frame persisted by one query's fn would serve a
-        // LATER query's matching subtree from cache, making this audit
-        // registry-order-dependent
-        spark.sharedState.cacheManager.clearCache()
-        q.name -> reads
-      }.toMap
     val offenders = heavyByQuery.collect {
       case (n, r) if r.contains("text") && !textReaders.contains(n) => n -> "text"
       case (n, r) if r.contains("embedding") && !embReaders.contains(n) => n -> "embedding"
@@ -369,14 +303,6 @@ class PlanSpec extends SparkSpec {
     val staleEmb = embReaders.filterNot(n => heavyByQuery.get(n).exists(_.contains("embedding")))
     assert(staleText.isEmpty && staleEmb.isEmpty,
       s"audited readers whose executions no longer read the column (remove): text=$staleText emb=$staleEmb")
-  }
-
-  /** Run `body` with `confs` set, restoring previous values after. */
-  private def withConfs[A](confs: (String, String)*)(body: => A): A = {
-    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally old.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("runtime bloom filter prunes the fact side of a selective shuffle join") {

@@ -1,8 +1,9 @@
 package graft
 
-/** Every registered QueryDef runs end-to-end on sf0.001 and yields rows.
-  * (Value-level correctness is enforced by the DuckDB oracle diff — see
-  * scripts/check_oracle.py and the driver's CORRECTNESS gate.)
+/** Every registered QueryDef runs end-to-end on sf0.001 and yields rows,
+  * read from the shared ANSI-on [[RegistryRun]]. (Value-level correctness
+  * is enforced by the DuckDB oracle diff — see scripts/check_oracle.py and
+  * the CORRECTNESS gate.)
   */
 class QueriesSpec extends SparkSpec {
 
@@ -22,9 +23,9 @@ class QueriesSpec extends SparkSpec {
 
   SparkEntry.allQueries.foreach { q =>
     test(s"${q.name} runs and returns rows on sf0.001") {
-      val df = q.fn(spark, sf0001)
-      assert(df.columns.nonEmpty)
-      assert(df.count() > 0)
+      val (schema, rows) = registryRun(q.name).ansiOn.get
+      assert(schema.nonEmpty)
+      assert(rows.nonEmpty)
     }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.{Failure, Success}
 
 /** Pinned semantics from SURVEY.md §7.5 — the traps that differ between
   * pandas/DuckDB/Spark, asserted on hand-computed frames.
@@ -14,26 +15,33 @@ class SemanticsSpec extends SparkSpec {
     // The audit VERDICT r4 asked for: the registry must be ANSI-clean —
     // no overflow (t24's decimal accumulator), no division-by-zero on
     // any hot path (guards like F8's σ==0 replace exact zeros BEFORE
-    // dividing), no lossy casts that ANSI would reject. Both plan sets
-    // are built INSIDE their conf scope (ANSI changes analysis-time
-    // cast/arith resolution, not just execution).
-    val deltas = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df = fn(spark, sf0001)
-      val base = (df.schema.simpleString, df.collect().toSeq)
-      try {
-        spark.conf.set("spark.sql.ansi.enabled", "true")
-        try {
-          val adf = fn(spark, sf0001)
-          val ansi = (adf.schema.simpleString, adf.collect().toSeq)
-          if (ansi._1 != base._1) deltas += s"$name: schema ${base._1} -> ${ansi._1}"
-          else if (ansi._2 != base._2) deltas += s"$name: rows differ"
-        } finally spark.conf.set("spark.sql.ansi.enabled", "false")
-      } catch { case e: Throwable =>
-        deltas += s"$name: ANSI error ${String.valueOf(e.getMessage).take(120)}"
+    // dividing), no lossy casts that ANSI would reject. The shared
+    // registry run builds both plan sets INSIDE their conf scope (ANSI
+    // changes analysis-time cast/arith resolution, not just execution).
+    val deltas = registryRun.toSeq.sortBy(_._1).flatMap { case (name, o) =>
+      (o.ansiOff, o.ansiOn) match {
+        case (Success((bs, br)), Success((as, ar))) =>
+          if (as.simpleString != bs.simpleString)
+            Some(s"$name: schema ${bs.simpleString} -> ${as.simpleString}")
+          else if (ar != br) Some(s"$name: rows differ")
+          else None
+        case (_, Failure(e)) =>
+          Some(s"$name: ANSI error ${String.valueOf(e.getMessage).take(120)}")
+        case (Failure(e), _) =>
+          Some(s"$name: ANSI-off error ${String.valueOf(e.getMessage).take(120)}")
       }
     }
     assert(deltas.isEmpty, s"ANSI behavior deltas:\n${deltas.mkString("\n")}")
+  }
+
+  test("the registry's ANSI-off run leaves the session ANSI-on, as the mains run") {
+    // Every suite shares one session; a registry check that left ANSI off
+    // would run every later suite unlike Verify and Bench
+    val ansi = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(ansi)
+    registryRun
+    assert(spark.conf.get(ansi) == before, s"the registry run changed ANSI from $before")
+    assert(before == "true", "the test session runs ANSI-off")
   }
 
   test("q38 rank metrics equal a driver-side pairwise/sweep recomputation on real data") {

@@ -9,6 +9,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
 
+  /** Every registry query's outcome at sf0.001 — one shared pass per JVM
+    * (see [[RegistryRun]]), forced by the first test that reads it.
+    */
+  def registryRun: Map[String, RegistryRun.Outcome] = RegistryRun.of(spark, sf0001)
+
+  /** Run `body` with `confs` set, restoring previous values after. */
+  def withConfs[A](confs: (String, String)*)(body: => A): A =
+    SparkSpec.withConfs(spark, confs: _*)(body)
+
   /** `body`'s result and the Spark jobs launched while it runs (listener
     * bus drained on both sides, so earlier work is never counted).
     */
@@ -40,4 +49,11 @@ object SparkSpec {
   lazy val session: SparkSession = graft.GraftSession.build(
     "graft-test", "local[8]", 8,
     Map("spark.sql.adaptive.enabled" -> "true"))
+
+  def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally old.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }
