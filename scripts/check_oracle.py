@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's DuckDB-oracle compare.
 
-Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir> [<prefix,name,...>]
 
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json against DuckDB views over the same
@@ -22,19 +22,25 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
-    # Optional 3rd arg: comma-separated query-name prefixes to check (e.g.
-    # "d19,d20,t19" — lets sf0.1 spot-checks skip d13, whose recursive-CTE
-    # oracle takes >40 min in DuckDB at that scale).
-    only = sys.argv[3].split(",") if len(sys.argv) > 3 else None
+    # Optional 3rd arg: comma-separated registry prefixes or full names to
+    # check (e.g. "d19,d20,t19" — lets sf0.1 spot-checks skip d13, whose
+    # recursive-CTE oracle takes >40 min in DuckDB at that scale). Matched
+    # like graft.Verify's selector; an entry that matches nothing fails.
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    keys = lambda name: {name, name.split("_", 1)[0]}
     n_ok = n_fail = 0
+    if only:
+        for p in sorted(only - set().union(*map(keys, oracle))):
+            print(f"FAIL {p}: matches no oracle_sql.json entry")
+            n_fail += 1
     for name in sorted(oracle):
-        if only and not any(name.startswith(p) for p in only):
+        if only and not keys(name) & only:
             continue
         try:
             got = con.execute(

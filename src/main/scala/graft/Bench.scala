@@ -117,12 +117,63 @@ object BenchCore {
     re.findAllMatchIn(json.substring(start + 1, end))
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
+
+  /** Sum of the successful timings, 3 decimals. Failed queries (sentinel
+    * -1) are left out: summing them in would LOWER the metric on a
+    * regression; [[failedJson]] reports them by name instead.
+    */
+  def total(results: Seq[(String, Double)]): String =
+    f"${results.map(_._2).filter(_ >= 0).sum}%.3f"
+
+  /** The failed queries' full names, as a JSON array. */
+  def failedJson(results: Seq[(String, Double)]): String =
+    results.filter(_._2 < 0).map("\"" + _._1 + "\"").mkString("[", ",", "]")
+
+  /** The run's first and last floor probes, as a `"floor"` field: the
+    * compact [pre, post] shape both the stdout line and the file record
+    * carry.
+    */
+  def floorField(floors: IndexedSeq[Double]): String =
+    f""","floor":[${floors.head}%.3f,${floors.last}%.3f]"""
+
+  /** Successful queries the stdout line names. */
+  val Slowest = 60
+
+  /** [[Bench]]'s one stdout line. The harness keeps only the last ~2000
+    * chars of stdout, and a per-query map of the whole registry does not
+    * fit there even at 1 decimal, so the line carries the total, the
+    * failures by name, the query count and the [[Slowest]] successful
+    * timings (prefix keys, 1 decimal, slowest first) — the tail a perf
+    * review reads. The full map is in `bench_queries.json`. `sfName` is
+    * the data directory's basename (`sf0.1`).
+    */
+  def stdoutLine(results: Seq[(String, Double)], floors: IndexedSeq[Double],
+                 sfName: String): String = {
+    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(Slowest)
+      .map { case (k, v) => "\"" + SparkEntry.prefix(k) + "\":" + f"$v%.1f" }
+      .mkString("{", ",", "}")
+    val nFailed = results.count(_._2 < 0)
+    s"""{"metric":"total","value":${total(results)},"unit":"sec","n_failed":$nFailed,"failed":${failedJson(results)},"n_queries":${results.size},"slowest":$slowest${floorField(floors)},"sf":"$sfName"}"""
+  }
 }
 
-/** Benchmark main — driver contract: one JSON line
-  * `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`. The harness
-  * parses the LAST bare `{"metric":…}` line of stdout; `sbt run` prints it
-  * without sbt's `[info] ` prefix (`run / outputStrategy` in build.sbt).
+/** Benchmark main, and graft's one timing loop.
+  *
+  * Options: `SPARK_GRAFT_SF_DIR` (data directory, default
+  * `/root/testdata/sf0.1`), `SPARK_GRAFT_CPUS` (default 32),
+  * `SPARK_GRAFT_ONLY` (a comma-separated list of registry prefixes or full
+  * names, see [[SparkEntry.select]]; unset = the whole registry) and
+  * `GRAFT_BENCH_DIR` (where the previous record is read and the new one
+  * written, default the working directory).
+  *
+  * Stdout contract: the LAST stdout line is one JSON object,
+  * [[BenchCore.stdoutLine]] — `metric`, `value` (total seconds), `unit`,
+  * `n_failed`, `failed`, `n_queries`, the slowest 60 timings, `floor` and
+  * `sf` — and stays under 1,950 chars. `sbt run` prints it without sbt's
+  * `[info] ` prefix (`run / outputStrategy` in build.sbt). Every query's
+  * timing, the shared-frame and streaming segments and the noise evidence
+  * go to `bench_queries.json`, one line, read back by [[graft.Scaling]] and
+  * as the next run's priors.
   *
   * Methodology: queries run in sorted name order; a first untimed pass
   * warms the JVM's JIT, parquet footers and generated code (single-JVM
@@ -138,9 +189,15 @@ object BenchCore {
   * (every [[FloorEvery]] queries — the full per-segment series lands in
   * `bench_queries.json`), and any query measuring >2× its committed
   * prior inside a degraded window is re-timed once on a recovered
-  * floor, with rescued names reported. The stdout `floor` field keeps
-  * its [pre, post] shape (driver contract) — pre/post are the first
-  * and last entries of the full series.
+  * floor, with rescued names reported. The `floor` field keeps its
+  * [pre, post] shape — pre/post are the first and last entries of the
+  * full series.
+  *
+  * Index roots: the untimed warm-up pass builds the index-serving
+  * queries' persisted index roots under `java.io.tmpdir` (or finds them
+  * there from an earlier run), so the timed repetitions measure serving
+  * from warm roots, never the build. [[Verify]] runs each query once and
+  * is the main that exercises the cold build path.
   *
   * The warm-up keeps generated code only because [[GraftSession]] sizes
   * Spark's codegen cache to the registry's working set: with Spark's
@@ -157,24 +214,25 @@ object Bench {
     * enough (~0.05 s each, healthy) to not perturb the run.
     */
   val FloorEvery = 8
+
+  /** Seconds `f` takes. */
+  private def secs(f: => Any): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val queries = SparkEntry.select(only)
+    val qByName = queries.toMap
+    // the previous record is read for priors before this run overwrites it
+    val recordPath = java.nio.file.Paths
+      .get(sys.env.getOrElse("GRAFT_BENCH_DIR", ".")).resolve("bench_queries.json")
     val spark = GraftSession.local("graft-bench", cpus)
 
-    // SPARK_GRAFT_ONLY=q01,d05 limits the run (dev iteration); unset = all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.mkString(",")}")
-    }
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val dt = try secs(fn(spark, sfDir).count()) catch { case _: Throwable => -1.0 }
       // each invocation persists fresh frames (q31/q33) that are never
       // shared across calls — drop them outside the timed span or every
       // repetition leaks another copy into executor storage
@@ -185,20 +243,12 @@ object Bench {
     // VM-noise calibration probe: no IO, no parquet — pure codegen +
     // scheduling. A healthy window floors ~0.05 s; multi-× inflation here
     // means host contention, not engine regression.
-    def probe(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(2000000L).selectExpr("sum(id) AS s").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Priors for the noise adjudication come from the PREVIOUS run's
-    // committed bench_queries.json (read before this run overwrites it);
-    // keys there are the compacted registry prefixes.
-    val priorsPath = java.nio.file.Paths
-      .get(sys.env.getOrElse("GRAFT_BENCH_DIR", "."))
-      .resolve("bench_queries.json")
+    def probe(): Double = secs(spark.range(2000000L).selectExpr("sum(id) AS s").collect())
+    // Priors for the noise adjudication; keys there are the registry
+    // prefixes.
     val priors: Map[String, Double] =
       try BenchCore.parsePriors(new String(
-        java.nio.file.Files.readAllBytes(priorsPath), "UTF-8"))
+        java.nio.file.Files.readAllBytes(recordPath), "UTF-8"))
       catch { case _: Exception => Map.empty }
 
     queries.foreach { case (_, fn) => run(fn) } // warm-up pass, untimed
@@ -211,63 +261,66 @@ object Bench {
     val timed = queries.zipWithIndex.map { case ((name, fn), i) =>
       if (i > 0 && i % FloorEvery == 0) floors += probe()
       val c0 = compiledClasses()
-      val secs = Seq(run(fn), run(fn), run(fn)).min
+      val best = Seq(run(fn), run(fn), run(fn)).min
       compiles += name -> (compiledClasses() - c0)
-      BenchCore.Timing(name, secs, floors.length - 1)
+      BenchCore.Timing(name, best, floors.length - 1)
     }
     floors += (1 to 3).map(_ => probe()).min
     val floorSeries = floors.toIndexedSeq
-    val floorPre = floorSeries.head
-    val floorPost = floorSeries.last
 
     // Outlier re-run: >2× the committed prior inside a degraded floor
     // window → one more min-of-2 on a recovered floor; keep the min.
     // Never rescues a slow-on-healthy-floor measurement (that is a real
     // regression) and never makes any timing WORSE (min).
-    def shortName(name: String): String = name.takeWhile(_ != '_')
+    import SparkEntry.prefix
     val suspectSet = BenchCore.suspects(
-      timed.map(t => t.copy(name = shortName(t.name))), floorSeries,
+      timed.map(t => t.copy(name = prefix(t.name))), floorSeries,
       priors).toSet
-    val qByName = queries.toMap
     val rescued = scala.collection.mutable.ArrayBuffer[String]()
     val results = timed.map { t =>
-      if (!suspectSet.contains(shortName(t.name))) t.name -> t.secs
+      if (!suspectSet.contains(prefix(t.name))) t.name -> t.secs
       else if (BenchCore.degraded(probe(), BenchCore.refFloor(floorSeries))) {
         // the host is STILL contended — an immediate re-run would just
         // re-measure the noise; keep the honest (flagged) timing
         t.name -> t.secs
       } else {
         val again = math.min(run(qByName(t.name)), run(qByName(t.name)))
-        if (again >= 0 && again < t.secs) { rescued += shortName(t.name); () }
+        if (again >= 0 && again < t.secs) { rescued += prefix(t.name); () }
         t.name -> (if (again >= 0) math.min(t.secs, again) else t.secs)
       }
     }
 
-    // The harness captures only the last ~2000 chars of stdout, so the JSON
-    // line must stay comfortably below that: per-query keys are compacted to
-    // the registry prefix (q01_pricing_summary -> q01; prefixes are unique by
-    // construction) and timings rounded to ms. Full names print above for
-    // humans; CORRECTNESS_r*.json carries the prefix->name mapping anyway.
-    def short(name: String): String = name.takeWhile(_ != '_')
-    require(results.map(n => short(n._1)).distinct.size == results.size,
+    // Record keys are the registry prefixes (q01_pricing_summary -> q01);
+    // CORRECTNESS_r*.json carries the prefix->name mapping.
+    require(results.map(n => prefix(n._1)).distinct.size == results.size,
       "bench key prefixes must be unique")
-    // 2-decimal per-query timings: 10 ms grain is below this VM's run-to-run
-    // noise anyway, and the saved chars keep the line under the harness's
-    // ~2000-char stdout tail as the registry grows (full ms precision for
-    // humans prints in the per-query lines above). At 140 queries the line
-    // sits ~90 chars under the cap, so if 2 decimals would overflow it the
-    // map degrades to 1 decimal rather than tripping the length guard.
-    def qsAt(dec: Int): String = results
-      .map { case (k, v) => "\"" + short(k) + "\":" + s"%.${dec}f".format(v) }
-      .mkString("{", ",", "}")
-    // Pipeline segment: the dedup family (d12/d13/d18/d26/d29/d34/d37/d39
-    // all rebuild the shingle / d05 pair / d13 cluster subtrees when run
-    // self-contained — d39 builds the shingle table three times) re-times
-    // with those frames materialized ONCE via TextOps.enableSharedFrames —
-    // how a real pipeline runs. Reported beside the isolated numbers so
-    // regression signal separates from shared-subtree recompute noise;
-    // per-query timings above keep the driver contract untouched.
-    val family = Seq("d12_edit_distance_dup_pairs", "d13_dup_clusters",
+    val resultMap = results.toMap
+    // Shared-frame segment: a family re-timed with its common subtrees
+    // materialized ONCE through the family's `enableSharedFrames` — how
+    // a real pipeline runs — reported as a compact [build, shared,
+    // isolated] array beside the isolated numbers, so regression signal
+    // separates from shared-subtree recompute noise. Every member must
+    // have SUCCEEDED in the timed pass (-1.0 is the failure sentinel):
+    // re-timing a failing query here would throw after all per-query
+    // work completed and lose the whole record.
+    def sharedSegment(key: String, family: Seq[String], enable: => Unit,
+                      clear: () => Unit): String = {
+      val members = family.filter(qByName.contains)
+      if (members.isEmpty || !members.forall(resultMap(_) >= 0)) ""
+      else {
+        val build = secs(enable)
+        val shared = members.map(n => secs(qByName(n)(spark, sfDir).count())).sum
+        clear()
+        spark.sharedState.cacheManager.clearCache()
+        val isolated = members.map(resultMap).sum
+        f""","$key":[$build%.2f,$shared%.2f,$isolated%.2f]"""
+      }
+    }
+    // the dedup family (d12/d13/d18/d26/d29/d34/d37/d39 all rebuild the
+    // shingle / d05 pair / d13 cluster subtrees when run self-contained —
+    // d39 builds the shingle table three times)
+    val pipeline = sharedSegment("pipeline", Seq(
+      "d12_edit_distance_dup_pairs", "d13_dup_clusters",
       "d18_contamination", "d20_crossdoc_ngram_dup",
       "d26_cross_split_leakage", "d29_apply_near_dup_removal",
       "d34_cluster_weighted_sample", "d37_best_of_cluster",
@@ -278,53 +331,22 @@ object Bench {
       "d51_dup_graph_pagerank", "d53_apply_decontamination",
       "d56_bpe_encode", "d57_dup_graph_triangles",
       "d61_minhash_estimate_audit", "d67_dup_mass_report",
-      "d74_lsh_band_sensitivity")
-      .filter(n => only.forall(_.contains(n)))
-    val resultMap = results.toMap
-    // every family member must have SUCCEEDED in the timed pass (-1.0 is the
-    // failure sentinel) — re-timing a failing query here would throw after
-    // all per-query work completed and lose the whole bench line
-    val pipeline = if (family.nonEmpty &&
-        family.forall(n => resultMap.get(n).exists(_ >= 0))) {
-      def t(f: => Unit): Double =
-        { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
-      val build = t(graft.ext.TextOps.enableSharedFrames(spark, sfDir))
-      val sharedSec =
-        family.map(n => t { SparkEntry.queries(n)(spark, sfDir).count(); () }).sum
-      graft.ext.TextOps.clearSharedFrames()
-      spark.sharedState.cacheManager.clearCache()
-      val isolated = family.map(resultMap(_)).filter(_ >= 0).sum
-      // compact [build, shared, isolated] array: the object form's field
-      // names cost ~60 chars/segment, which at 152 queries pushed the
-      // 1-decimal line past the ladder rung and silently shed BOTH
-      // pipeline segments — the array keeps them on the line
-      f""","pipeline":[$build%.2f,$sharedSec%.2f,$isolated%.2f]"""
-    } else ""
-    // Vector-serving segment, same methodology: e20 re-encodes the PQ
-    // index e19 built, e13 re-buckets what e03/e05 bucketed, e21 rebuilds
-    // its code table, and the IVF family (e07/e18/e22-e26) each
-    // re-assigns the corpus to the coarse codebook —
-    // VectorOps.enableSharedFrames materializes the vector/bucket/PQ/BQ/
-    // IVF-assignment index frames once, how a serving pipeline runs.
-    val vfamily = Seq("e03_lsh_buckets", "e05_ann_lsh_top5", "e07_ann_ivf_top5",
+      "d74_lsh_band_sensitivity"),
+      graft.ext.TextOps.enableSharedFrames(spark, sfDir),
+      () => graft.ext.TextOps.clearSharedFrames())
+    // the vector-serving family: e20 re-encodes the PQ index e19 built,
+    // e13 re-buckets what e03/e05 bucketed, e21 rebuilds its code table,
+    // and the IVF family (e07/e18/e22-e26) each re-assigns the corpus to
+    // the coarse codebook
+    val vpipe = sharedSegment("vpipe", Seq(
+      "e03_lsh_buckets", "e05_ann_lsh_top5", "e07_ann_ivf_top5",
       "e13_lsh_recall", "e18_ann_ivf_multiprobe", "e19_pq_knn",
       "e20_pq_rerank_top5", "e21_bq_knn", "e22_semantic_dedup",
       "e23_crossmodal_dup_confirm", "e24_ivfpq_knn", "e25_kmeans_codebook",
       "e26_ivf_recall", "e27_knn_graph", "e28_pca_power_iteration",
-      "e30_hard_negatives", "e31_triplet_mining", "e40_graph_walk_recall")
-      .filter(n => only.forall(_.contains(n)))
-    val vpipe = if (vfamily.nonEmpty &&
-        vfamily.forall(n => resultMap.get(n).exists(_ >= 0))) {
-      def t(f: => Unit): Double =
-        { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
-      val build = t(graft.ext.VectorOps.enableSharedFrames(spark, sfDir))
-      val sharedSec =
-        vfamily.map(n => t { SparkEntry.queries(n)(spark, sfDir).count(); () }).sum
-      graft.ext.VectorOps.clearSharedFrames()
-      spark.sharedState.cacheManager.clearCache()
-      val isolated = vfamily.map(resultMap(_)).filter(_ >= 0).sum
-      f""","vpipe":[$build%.2f,$sharedSec%.2f,$isolated%.2f]""" // same [b,s,i] shape
-    } else ""
+      "e30_hard_negatives", "e31_triplet_mining", "e40_graph_walk_recall"),
+      graft.ext.VectorOps.enableSharedFrames(spark, sfDir),
+      () => graft.ext.VectorOps.clearSharedFrames())
     // Streaming segment: the stateful monitors are spec-verified but were
     // never TIMED — a state-store regression was invisible to the bench.
     // Fixed replay: the whole events table, ts-ordered, split into 8
@@ -333,10 +355,10 @@ object Bench {
     // session windows, watermark dedup, CUSUM monitor, decayed trending
     // heavy hitters) under the RocksDB state store (the production
     // posture; the transformWithState monitors need its column
-    // families). Reported in bench_queries.json only ("stream" object) —
-    // the stdout line has no budget for it. Skipped under
-    // SPARK_GRAFT_ONLY (dev iteration) and on any failure (a WARN, not a
-    // lost bench line).
+    // families). Reported in bench_queries.json only ("stream" object).
+    // Whole-registry runs only: perfbench's `analytics` workload times a
+    // micro-batch through the same five pipelines for targeted work. On
+    // any failure the segment is left out with a WARN, not a lost record.
     def streamSegment(): String = {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import spark.implicits._
@@ -365,12 +387,12 @@ object Bench {
               org.apache.spark.sql.streaming.StreamingQuery): (String, Double) = {
           implicit val ctx = spark.sqlContext
           val ms = MemoryStream[Event]
-          val t0 = System.nanoTime()
-          val q = start(ms)
-          try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
-          finally q.stop()
-          spark.catalog.dropTempView(s"bench_stream_$name")
-          name -> (System.nanoTime() - t0) / 1e9
+          name -> secs {
+            val q = start(ms)
+            try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+            finally q.stop()
+            spark.catalog.dropTempView(s"bench_stream_$name")
+          }
         }
         // bracket the segment with the same floor probe the query pass
         // uses: the round-10 closing run recorded tumble at 24 s vs its
@@ -403,96 +425,41 @@ object Bench {
         case None => spark.conf.unset(key)
       }
     }
-    // SPARK_GRAFT_STREAM=1 forces the segment under SPARK_GRAFT_ONLY
-    // (dev iteration on the streaming layer itself)
-    val streamSeg =
-      if (only.isEmpty || sys.env.contains("SPARK_GRAFT_STREAM"))
-        streamSegment()
-      else ""
+    val streamSeg = if (only.isEmpty) streamSegment() else ""
 
-    // Failed queries (-1.0 sentinel) are excluded from the headline total —
-    // summing them in would *lower* the metric on a regression — and
-    // reported by name so a nonzero failure list is unmissable.
-    val (failed, ok) = results.partition(_._2 < 0)
-    val total = f"${ok.map(_._2).sum}%.3f"
-    // sf as the directory basename ("sf0.1"): the full path spent 15 chars
-    // of the ~2000-char stdout-tail budget repeating a constant prefix —
-    // at 175 queries those chars are what keep the pipeline segments on
-    // the 1-decimal line
-    val sfName = new java.io.File(sfDir).getName
-    val failedJson = failed.map("\"" + _._1 + "\"").mkString("[", ",", "]")
     results.foreach { case (k, v) => println(f"# $k%-40s $v%8.3f s") }
-    // compact [pre, post] array (same shape trade as pipeline/vpipe): the
-    // object form's field names cost 13 chars the 157-query line needs
-    val floor = f""","floor":[$floorPre%.3f,$floorPost%.3f]"""
-    def mkLine(dec: Int): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_failed":${failed.size},"failed":$failedJson,"queries":${qsAt(dec)}$pipeline$vpipe$floor,"sf":"$sfName"}"""
-    // degradation ladder as the registry grows: 2-decimal timings →
-    // 1-decimal → (last resort) drop the pipeline enrichment but keep
-    // the per-query map — the driver contract needs total+queries; the
-    // enrichments are this repo's own additions. The ~40-char floor
-    // probe survives EVERY rung (mkMinimal included): it is the
-    // VM-noise calibration the cross-round methodology checks first,
-    // and dropping it would be the inconsistency of shedding the
-    // smallest field before the biggest.
-    def mkBare(dec: Int): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_failed":${failed.size},"failed":$failedJson,"queries":${qsAt(dec)}$floor,"sf":"$sfName"}"""
-    // When even the bare 1-decimal map overflows the tail budget (the
-    // registry crossed ~180 queries), keep the SLOWEST 60 — the tail a
-    // perf review actually reads — plus the query count; the full map
-    // is always in bench_queries.json (written below), so nothing is
-    // lost, only demoted off the stdout line.
-    def mkTop: String = {
-      val slowest = ok.sortBy(-_._2).take(60)
-        .map { case (k, v) => "\"" + short(k) + "\":" + f"$v%.1f" }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","n_failed":${failed.size},"failed":$failedJson,"n_queries":${results.size},"slowest":$slowest$floor,"sf":"$sfName"}"""
-    }
-    // absolute floor: total + failures only — the driver contract fields.
-    // Losing per-query detail beats losing the whole line to the length
-    // guard AFTER all benchmarking work completed.
-    def mkMinimal: String =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_failed":${failed.size},"failed":$failedJson$floor,"sf":"$sfName"}"""
-    // Full-resolution per-query record, unconditionally: the stdout line
-    // is budget-bound but the repo is not — every run leaves its complete
-    // 3-decimal map (plus floor) here for PERF.md work and review. The
-    // file record keeps the FULL sfDir path (no length budget applies):
-    // two corpora with the same basename in different parents stay
-    // distinguishable; only the stdout line uses the basename.
-    // The file record carries the FULL noise-adjudication evidence the
-    // stdout line cannot afford: the per-segment floor series (each
-    // query's bracket is floors[i/floor_every], floors[i/floor_every+1]
-    // in sorted-name order), and which suspect timings a recovered-floor
-    // re-run actually rescued.
+    // The file record carries what the stdout line cannot afford: every
+    // query's 3-decimal timing, the shared-frame and streaming segments,
+    // the per-segment floor series (each query's bracket is
+    // floors[i/floor_every], floors[i/floor_every+1] in sorted-name
+    // order), which suspect timings a recovered-floor re-run rescued, and
+    // the FULL sfDir path (two corpora with the same basename in
+    // different parents stay distinguishable).
+    val queriesJson = results
+      .map { case (k, v) => "\"" + prefix(k) + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
     val floorsJson = floorSeries.map(f => f"$f%.3f").mkString("[", ",", "]")
     val rescuedJson = rescued.map("\"" + _ + "\"").mkString("[", ",", "]")
     // top-level, outside "queries": BenchCore.parsePriors reads that
     // object's values as timings
     val compilesJson = compiles
-      .map { case (k, n) => "\"" + short(k) + "\":" + n }
+      .map { case (k, n) => "\"" + prefix(k) + "\":" + n }
       .mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"n_failed":${failed.size},"failed":$failedJson,"queries":${qsAt(3)}$pipeline$vpipe$streamSeg$floor,"floors":$floorsJson,"floor_every":$FloorEvery,"rescued":$rescuedJson,"compiles":$compilesJson,"sf":"$sfDir"}"""
-    // Output dir is explicit — GRAFT_BENCH_DIR when set, else the process
-    // CWD — and a failed write WARNS instead of silently leaving a stale
-    // committed file that misrepresents the latest run.
-    val outPath = java.nio.file.Paths
-      .get(sys.env.getOrElse("GRAFT_BENCH_DIR", "."))
-      .resolve("bench_queries.json")
+      s"""{"metric":"total","value":${BenchCore.total(results)},"n_failed":${results.count(_._2 < 0)},"failed":${BenchCore.failedJson(results)},"queries":$queriesJson$pipeline$vpipe$streamSeg${BenchCore.floorField(floorSeries)},"floors":$floorsJson,"floor_every":$FloorEvery,"rescued":$rescuedJson,"compiles":$compilesJson,"sf":"$sfDir"}"""
+    // a failed write WARNS instead of silently leaving a stale committed
+    // file that misrepresents the latest run
     try {
-      java.nio.file.Files.write(outPath, (fullJson + "\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(recordPath, (fullJson + "\n").getBytes("UTF-8"))
     } catch {
       case e: Exception => // a read-only CWD must not fail the bench itself
         System.err.println(
-          s"# WARN bench_queries.json not written to $outPath (${e.getClass.getSimpleName}: ${e.getMessage}); any existing file there is STALE")
+          s"# WARN bench_queries.json not written to $recordPath (${e.getClass.getSimpleName}: ${e.getMessage}); any existing file there is STALE")
     }
-    // Rung raised 1880 → 1948 at 171 queries: the JSON line is the LAST
-    // stdout print (spark.stop logs to stderr), so the harness's ~2000-char
-    // stdout tail captures it whole at ≤1950. At 171 queries the 1-decimal
-    // map alone is ~1850 chars; the old 1880 rung silently shed BOTH
-    // pipeline segments (~57 chars) that still fit under the true bound.
-    val line = Seq(mkLine(2), mkLine(1), mkBare(1), mkTop, mkMinimal)
-      .find(_.length < 1948).getOrElse(mkMinimal)
+    // the JSON line is the LAST stdout print (spark.stop logs to stderr),
+    // so the harness's ~2000-char stdout tail captures it whole at ≤1950
+    val line = BenchCore.stdoutLine(results, floorSeries,
+      new java.io.File(sfDir).getName)
     require(line.length < 1950, s"bench JSON line ${line.length} chars risks tail truncation")
     println(line)
     spark.stop()

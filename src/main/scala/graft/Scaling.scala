@@ -58,10 +58,16 @@ object ScalingCore {
       !exps.contains(n) || !(exps(n) > Threshold)).toSeq.sorted
 }
 
-/** Scaling-audit main: times every registry query at sf0.01 and sf0.1
-  * (warm-up pass per SF, then min-of-2), writes the full per-query
-  * record to `SCALING.json` and prints a one-line summary. Driver-style
-  * env knobs: SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY, GRAFT_BENCH_DIR.
+/** Scaling-audit main: fits every query's exponent from two [[Bench]]
+  * records of the same queries at two scale factors, writes the full
+  * per-query record to `SCALING.json` and prints a one-line summary. It
+  * runs no query and opens no SparkSession: the timings are Bench's
+  * (warm-up pass, min-of-3, noise adjudication).
+  *
+  * Usage: `sbt "runMain graft.Scaling <lo bench_queries.json>
+  * <hi bench_queries.json>"`; `SCALING.json` goes to `GRAFT_BENCH_DIR`
+  * (default the working directory). Each record's scale comes from its
+  * `sf` basename (`…/sf0.01` → 0.01).
   */
 object Scaling {
 
@@ -81,71 +87,80 @@ object Scaling {
   // query whose superlinear term outgrows its constants flags loudly
   // instead of hiding behind a pre-excused label.
 
-  def main(args: Array[String]): Unit = {
-    val loDir = sys.env.getOrElse("SPARK_GRAFT_SF_LO", "/root/testdata/sf0.01")
-    val hiDir = sys.env.getOrElse("SPARK_GRAFT_SF_HI", "/root/testdata/sf0.1")
-    val sfRatio = 10.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local("graft-scaling", cpus)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+  /** One query's low and high timing and their fitted exponent. */
+  final case class Row(lo: Double, hi: Double, exp: Double)
 
-    def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-            dir: String): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, dir).count() } catch { case _: Throwable => return -1.0 }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      dt
-    }
-    // per-SF pass: warm-up then min-of-2 (the bench's steady-state
-    // discipline; one fewer rep — the audit wants the EXPONENT, which a
-    // 2-rep min pins well within the 20× flag margin)
-    def pass(dir: String): Map[String, Double] = {
-      queries.foreach { case (_, fn) => run(fn, dir) }
-      queries.map { case (n, fn) =>
-        n -> math.min(run(fn, dir), run(fn, dir))
-      }.toMap
-    }
-    val lo = pass(loDir)
-    val hi = pass(hiDir)
-    val exps = queries.map { case (n, _) =>
-      n -> ScalingCore.exponent(lo(n), hi(n), sfRatio)
-    }.toMap
+  /** A Bench record's `sf` field: the data directory it ran on. */
+  def sfDir(record: String): String =
+    """"sf":"([^"]*)"""".r.findFirstMatchIn(record).map(_.group(1))
+      .getOrElse(throw new IllegalArgumentException("bench record has no sf field"))
+
+  /** The scale a data directory's basename states: `…/sf0.01` → 0.01. */
+  def scaleOf(dir: String): Double = {
+    val base = new java.io.File(dir).getName
+    require(base.matches("sf[0-9]*\\.?[0-9]+"), s"'$dir' does not name a scale (sf<number>)")
+    base.drop(2).toDouble
+  }
+
+  /** Exponents fitted from two Bench record lines, keyed by the full
+    * names in `registry`, and the queries that cannot be fitted, sorted:
+    * a query timed in only one record, or a record key that names no
+    * registry query. A failed timing (sentinel -1) fits to NaN.
+    */
+  def fit(loRecord: String, hiRecord: String,
+          registry: Iterable[String]): (Map[String, Row], Seq[String]) = {
+    val ratio = scaleOf(sfDir(hiRecord)) / scaleOf(sfDir(loRecord))
+    require(ratio > 1.0, s"the high record's scale must exceed the low one's (ratio $ratio)")
+    val full = registry.map(n => SparkEntry.prefix(n) -> n).toMap
+    def timings(record: String) = BenchCore.parsePriors(record)
+      .map { case (k, v) => full.getOrElse(k, k) -> v }
+    val (lo, hi) = (timings(loRecord), timings(hiRecord))
+    val fitted = lo.keySet & hi.keySet & full.values.toSet
+    val rows = fitted.map(n =>
+      n -> Row(lo(n), hi(n), ScalingCore.exponent(lo(n), hi(n), ratio))).toMap
+    (rows, ((lo.keySet ++ hi.keySet) -- fitted).toSeq.sorted)
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length == 2,
+      "usage: graft.Scaling <lo bench_queries.json> <hi bench_queries.json>")
+    val Seq(loRecord, hiRecord) = args.toSeq.map(p =>
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8"))
+    val (rows, unfitted) = fit(loRecord, hiRecord, SparkEntry.queries.keys)
+    val exps = rows.map { case (n, r) => n -> r.exp }
     val flagged = ScalingCore.flagged(exps, allowlist)
     val stale = ScalingCore.staleAllow(exps, allowlist)
 
     def jq(s: String) = "\"" + s + "\""
     def jd(d: Double) = if (d.isNaN) "null" else f"$d%.3f"
-    val rows = queries.map { case (n, _) =>
+    val rowsJson = rows.toSeq.sortBy(_._1).map { case (n, r) =>
       s"${jq(n)}:{" +
-        s""""lo":${f"${lo(n)}%.3f"},"hi":${f"${hi(n)}%.3f"},""" +
-        s""""exp":${jd(exps(n))}}"""
+        s""""lo":${f"${r.lo}%.3f"},"hi":${f"${r.hi}%.3f"},""" +
+        s""""exp":${jd(r.exp)}}"""
     }.mkString("{", ",", "}")
     val json =
-      s"""{"sf_lo":${jq(loDir)},"sf_hi":${jq(hiDir)},""" +
+      s"""{"sf_lo":${jq(sfDir(loRecord))},"sf_hi":${jq(sfDir(hiRecord))},""" +
       s""""threshold":${ScalingCore.Threshold},""" +
       s""""floor_clamp":${ScalingCore.FloorSecs},""" +
       s""""flagged":${flagged.map(jq).mkString("[", ",", "]")},""" +
       s""""allowlisted":${allowlist.keys.toSeq.sorted.map(jq).mkString("[", ",", "]")},""" +
       s""""stale_allow":${stale.map(jq).mkString("[", ",", "]")},""" +
-      s""""queries":$rows}"""
+      s""""queries":$rowsJson}"""
     val outPath = java.nio.file.Paths
       .get(sys.env.getOrElse("GRAFT_BENCH_DIR", "."))
       .resolve("SCALING.json")
     java.nio.file.Files.write(outPath, (json + "\n").getBytes("UTF-8"))
 
     // human summary: every exponent, sorted descending, with the verdict
-    exps.toSeq.sortBy(-_._2).foreach { case (n, e) =>
+    rows.toSeq.sortBy(-_._2.exp).foreach { case (n, Row(lo, hi, e)) =>
       val tag =
         if (e.isNaN) "FAILED"
         else if (e > ScalingCore.Threshold && allowlist.contains(n)) "allow"
         else if (e > ScalingCore.Threshold) "FLAG"
         else "ok"
-      println(f"# $n%-40s lo=${lo(n)}%7.3f hi=${hi(n)}%7.3f exp=${if (e.isNaN) Double.NaN else e}%5.2f  $tag")
+      println(f"# $n%-40s lo=$lo%7.3f hi=$hi%7.3f exp=$e%5.2f  $tag")
     }
-    println(s"""{"metric":"scaling_flagged","value":${flagged.size},"stale_allow":${stale.size},"n_queries":${queries.size}}""")
-    spark.stop()
+    unfitted.foreach(n => println(f"# $n%-40s in one record only, or not in the registry: not fitted"))
+    println(s"""{"metric":"scaling_flagged","value":${flagged.size},"stale_allow":${stale.size},"n_queries":${rows.size},"n_unfitted":${unfitted.size}}""")
   }
 }

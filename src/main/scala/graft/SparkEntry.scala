@@ -30,4 +30,22 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
+
+  /** A query's registry prefix (`q01_pricing_summary` → `q01`), the key
+    * every bench record uses. Prefixes are unique by construction.
+    */
+  def prefix(name: String): String = name.takeWhile(_ != '_')
+
+  /** The registry queries a comma-separated list selects, sorted by name;
+    * `None` selects the whole registry. Each entry is a full name or its
+    * prefix, and an entry that names no query aborts the run.
+    */
+  def select(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val byKey = all.keys.flatMap(n => Seq(n -> n, prefix(n) -> n)).toMap
+    val keys = only.fold(all.keys.toSeq)(_.split(',').toSeq)
+    val unknown = keys.filterNot(byKey.contains)
+    require(unknown.isEmpty, s"not in the registry: ${unknown.mkString(",")}")
+    keys.map(byKey).distinct.sorted.map(n => n -> all(n))
+  }
 }

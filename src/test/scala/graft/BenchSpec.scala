@@ -121,4 +121,29 @@ class BenchSpec extends AnyFunSuite {
     // an unterminated queries object degrades to no priors
     assert(parsePriors("""{"queries":{"a":1.0,"n":{"x":2.0}""").isEmpty)
   }
+
+  test("the stdout line: total, failures, count and the 60 slowest, under the tail cap") {
+    // the registry's size, registry-length names, two failures
+    val results = (1 to 262).map { i =>
+      f"q$i%03d_synthetic_registry_query_name" -> (if (i % 100 == 0) -1.0 else i * 0.037)
+    }
+    val line = stdoutLine(results, IndexedSeq(0.061, 0.2, 0.058), "sf0.1")
+    assert(line.length < 1948, s"${line.length} chars")
+    val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(j.get("metric").asText == "total" && j.get("unit").asText == "sec")
+    val ok = results.filter(_._2 >= 0)
+    assert(j.get("value").asText == f"${ok.map(_._2).sum}%.3f")
+    assert(j.get("n_failed").asInt == 2)
+    assert((0 until j.get("failed").size).map(j.get("failed").get(_).asText) ==
+      Seq("q100_synthetic_registry_query_name", "q200_synthetic_registry_query_name"))
+    assert(j.get("n_queries").asInt == 262)
+    import scala.jdk.CollectionConverters._
+    val slowest = j.get("slowest").properties.asScala.toSeq.map(e => e.getKey -> e.getValue.asDouble)
+    // descending, keyed by prefix, the failures never among them
+    assert(slowest.map(_._1) == (262 to 201 by -1).filter(_ != 200).take(60).map(i => s"q$i"))
+    assert(slowest.map(_._2) == ok.map(_._2).sorted.reverse.take(60)
+      .map(v => BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toDouble))
+    assert(j.get("floor").get(0).asDouble == 0.061 && j.get("floor").get(1).asDouble == 0.058)
+    assert(j.get("sf").asText == "sf0.1")
+  }
 }

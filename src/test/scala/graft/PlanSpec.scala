@@ -661,9 +661,10 @@ class PlanSpec extends SparkSpec {
       "e20_pq_rerank_top5", "e21_bq_knn", "e22_semantic_dedup",
       "e23_crossmodal_dup_confirm", "e24_ivfpq_knn", "e25_kmeans_codebook",
       "e30_hard_negatives", "e31_triplet_mining")
+    // self-contained rows: the registry pass ran each query with the
+    // shared frames and the cache manager cleared first
+    val iso = names.map(n => n -> registryRun(n).ansiOn.get._2).toMap
     spark.sharedState.cacheManager.clearCache()
-    val iso = names.map(n =>
-      n -> SparkEntry.queries(n)(spark, sf0001).collect().toSeq).toMap
     graft.ext.VectorOps.enableSharedFrames(spark, sf0001)
     val sh = names.map(n =>
       n -> SparkEntry.queries(n)(spark, sf0001).collect().toSeq).toMap
@@ -677,8 +678,7 @@ class PlanSpec extends SparkSpec {
     // e26 persists its broadcast-query scoring pass (three aggregation
     // consumers — the q31 ownership model), so the runner's clearCache
     // is part of its contract; equality across modes still must hold
-    spark.sharedState.cacheManager.clearCache()
-    val iso = SparkEntry.queries("e26_ivf_recall")(spark, sf0001).collect().toSeq
+    val iso = registryRun("e26_ivf_recall").ansiOn.get._2
     spark.sharedState.cacheManager.clearCache()
     graft.ext.VectorOps.enableSharedFrames(spark, sf0001)
     val sh = SparkEntry.queries("e26_ivf_recall")(spark, sf0001).collect().toSeq

@@ -17,6 +17,18 @@ class QueriesSpec extends SparkSpec {
     assert(names.distinct.size == names.size)
   }
 
+  test("a prefix and a full name select the same query; an unknown name aborts") {
+    val byPrefix = SparkEntry.select(Some("e46"))
+    assert(byPrefix.map(_._1) == Seq("e46_ivfpq_index_served"))
+    assert(SparkEntry.select(Some("e46_ivfpq_index_served")).map(_._1) == byPrefix.map(_._1))
+    // a mixed list comes back sorted by name, duplicates once
+    val mixed = SparkEntry.select(Some("q02,e46_ivfpq_index_served,e46,q01"))
+    assert(mixed.map(n => SparkEntry.prefix(n._1)) == Seq("e46", "q01", "q02"))
+    assert(SparkEntry.select(None).size == SparkEntry.queries.size)
+    val e = intercept[IllegalArgumentException](SparkEntry.select(Some("q01,e4")))
+    assert(e.getMessage.contains("e4") && !e.getMessage.contains("q01"))
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -3,12 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[ScalingCore]] — the scaling-exponent audit's fit / flag /
-  * staleness logic, Spark-free (BenchSpec's arrangement), plus the
-  * registry-consistency check on [[Scaling.allowlist]].
+  * staleness logic, Spark-free (BenchSpec's arrangement), the
+  * registry-consistency check on [[Scaling.allowlist]], and
+  * [[Scaling.fit]] over two Bench record lines.
   */
 class ScalingSpec extends AnyFunSuite {
 
   import ScalingCore._
+  import Scaling.scaleOf
 
   test("two-point log-log slope: linear reads 1, quadratic reads 2") {
     assert(math.abs(exponent(0.2, 2.0, 10.0) - 1.0) < 1e-9)
@@ -57,5 +59,35 @@ class ScalingSpec extends AnyFunSuite {
     assert(unknown.isEmpty, s"allowlist names unknown queries: $unknown")
     assert(Scaling.allowlist.values.forall(_.trim.length > 20),
       "every allowlist entry must carry a substantive reason")
+  }
+
+  test("fit reads two bench records: the sf basenames give the ratio") {
+    val lo = """{"metric":"total","value":1.3,"n_failed":1,"failed":["c01_gamma"],""" +
+      """"queries":{"a01":0.2,"b01":0.5,"c01":-1.0,"d01":0.3,"z99":0.1},""" +
+      """"floor":[0.05,0.06],"compiles":{"a01":7},"sf":"/data/sf0.01"}"""
+    val hi = """{"metric":"total","value":8.1,"n_failed":0,"failed":[],""" +
+      """"queries":{"a01":2.0,"b01":0.5,"c01":1.6,"e01":4.0,"z99":0.1},""" +
+      """"floor":[0.05,0.06],"compiles":{"a01":0},"sf":"/other/sf1"}"""
+    val registry = Seq("a01_alpha", "b01_beta", "c01_gamma", "d01_delta", "e01_eps")
+    val (rows, unfitted) = Scaling.fit(lo, hi, registry)
+    // sf0.01 → sf1 is a ratio of 100: 10× the time reads 0.5, not 1.0
+    assert(math.abs(rows("a01_alpha").exp - 0.5) < 1e-9)
+    assert(rows("a01_alpha").lo == 0.2 && rows("a01_alpha").hi == 2.0)
+    assert(math.abs(rows("b01_beta").exp) < 1e-9)
+    // the failure sentinel is reported as NaN, not fitted
+    assert(rows("c01_gamma").exp.isNaN)
+    assert(rows.keySet == Set("a01_alpha", "b01_beta", "c01_gamma"))
+    // timed in one record only, or not a registry query: reported
+    assert(unfitted == Seq("d01_delta", "e01_eps", "z99"))
+  }
+
+  test("a record whose sf names no scale, or records in the wrong order, abort") {
+    assert(scaleOf("/root/testdata/sf0.01") == 0.01 && scaleOf("sf10") == 10.0)
+    intercept[IllegalArgumentException](scaleOf("/data/tpch"))
+    val rec = (sf: String) => s"""{"queries":{"a01":1.0},"sf":"$sf"}"""
+    intercept[IllegalArgumentException](
+      Scaling.fit(rec("/d/sf0.1"), rec("/d/sf0.01"), Seq("a01_alpha")))
+    intercept[IllegalArgumentException](
+      Scaling.fit("""{"queries":{"a01":1.0}}""", rec("/d/sf0.1"), Seq("a01_alpha")))
   }
 }
