@@ -1,46 +1,57 @@
 package graft.ext
 
-import graft.streaming.StreamOps.{CdcCommitPrefix, cdcLatestCommit, cdcMarkerStamp, flipCommitMarker}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** The versioned segment chain every persisted index family commits
-  * through: IVF-PQ codes and the kNN graph ([[VectorIndex]]), MinHash
-  * band postings ([[TextIndex]]) and BM25 postings ([[RetrievalIndex]]).
-  * This scaladoc is the one statement of the on-disk, commit,
-  * crash-safety and read-lease contract; a family only decides what its
-  * segments hold and how they merge.
+/** The versioned segment chain every persisted table commits through:
+  * IVF-PQ codes and the kNN graph ([[VectorIndex]]), MinHash band
+  * postings ([[TextIndex]]), BM25 postings ([[RetrievalIndex]]) and the
+  * CDC MERGE table ([[graft.streaming.StreamOps.applyCdcBatch]]). This
+  * scaladoc is the one statement of the on-disk, commit, crash-safety
+  * and read-lease contract, and this file the only code that reads or
+  * writes a marker; a family only decides what its segments hold and how
+  * they merge.
   *
-  * Layout under an index root:
+  * Layout under a root:
   *   - `v<n>/<segment>/` — version n's data directories. A BASE version
-  *     owns the family's base segment (`codes`, `edges` or `postings`)
-  *     and is self-contained. Every other version is a chain link whose
-  *     segments (`*-delta`, `tombstones`, signed `vocab-delta` /
-  *     `stats-delta`, or none at all for a marker-only commit) apply on
-  *     top of the nearest lower base, in commit order.
+  *     owns the family's base segment (`codes`, `edges`, `postings` or
+  *     `table`) and is self-contained. Every other version is a chain
+  *     link whose segments (`*-delta`, `tombstones`, signed
+  *     `vocab-delta` / `stats-delta`, or none at all for a marker-only
+  *     commit) apply on top of the nearest lower base, in commit order.
+  *     Every CDC commit writes the whole merged table, so each of its
+  *     versions is a base and its chains have depth 0.
   *   - `_commit-<n>` — version n's commit marker. Its content is the
   *     stamp `batchId\nincarnation`: the stream batch id and stream
   *     incarnation for sink commits, a negative id plus a tag for
   *     everything else (`(-3, "<format>:<fingerprint>")` for builds,
-  *     `(-2, "optimize")` for folds).
+  *     `(-2, "optimize")` for folds and OPTIMIZE rewrites).
   *
   * Commit ([[SegmentChain.commit]]): create the root, wipe any `v<n>` a
   * crashed attempt left at the same number, write the segments, flip the
-  * marker with one rename, prune. The wipe matters because base
+  * marker with one file rename, prune. The wipe matters because base
   * resolution walks data directories, not markers: a torn base segment
   * left at a reused number would otherwise be adopted as the base. Data
   * first, marker last, so a crash anywhere before the rename leaves the
   * previous version live and the partial directory invisible. Readers
   * resolve the newest marker ([[SegmentChain.resolve]]) and never
-  * observe a torn version.
+  * observe a torn version. Versions are the chain's own counter, never
+  * stream batch ids: a stream restarted on a fresh checkpoint numbers
+  * its batches from 0 again. Single writer: the next version number is
+  * resolved, not locked.
   *
   * Exactly-once: a mutation whose stamp equals the live marker's is a
   * redelivery of the commit that produced the live version and no-ops
-  * ([[SegmentChain.isRetry]]). Ensure paths reuse the live version when
-  * its marker carries the wanted stamp and build otherwise
+  * ([[SegmentChain.isRetry]]). The comparison is equality with the live
+  * marker only, and the stamp carries the incarnation beside the batch
+  * id: batch ids alone collide across incarnations, and an ordering
+  * test would drop every batch of a restarted stream. A crash before the
+  * flip leaves no stamp, so the redelivered batch re-applies on the
+  * previous version. Ensure paths reuse the live version when its marker
+  * carries the wanted stamp and build otherwise
   * ([[SegmentChain.ensure]]). The stamp tag encodes the corpus
   * fingerprint and any mutation rule, so changed data or a changed rule
   * rebuilds instead of reusing.
@@ -53,23 +64,24 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * counts, tombstone and marker-only ones included, because a reader
   * resolves through each of them.
   *
-  * Fold rule ([[SegmentChain.fold]], every family's `compactIndex`): a
-  * fold writes the live view as a new base stamped `(-2, "optimize")` at
-  * live + 1, unless the live version already is its own base (depth 0:
-  * no deltas, no tombstones, no marker-only links). Then the fold is a
-  * no-op: it writes nothing, launches no Spark job and returns the live
-  * version, whose stamp stays in place — so a mutation that itself
-  * folded the chain (a compacting forget or delete) is still recognised
-  * as a retry after the maintenance fold. A base write clusters its rows
-  * by the bucket column before `partitionBy`, so a base holds one file
-  * per bucket however many files its inputs had.
+  * Fold rule ([[SegmentChain.fold]], every index family's
+  * `compactIndex`): a fold writes the live view as a new base stamped
+  * `(-2, "optimize")` at live + 1, unless the live version already is
+  * its own base (depth 0: no deltas, no tombstones, no marker-only
+  * links). Then the fold is a no-op: it writes nothing, launches no
+  * Spark job and returns the live version, whose stamp stays in place —
+  * so a mutation that itself folded the chain (a compacting forget or
+  * delete) is still recognised as a retry after the maintenance fold. A
+  * base write clusters its rows by the bucket column before
+  * `partitionBy`, so a base holds one file per bucket however many files
+  * its inputs had.
   *
   * Read lease: the newest `retain` markers (default 2: live plus one
-  * superseded) stay resolvable, together with every data directory from
-  * the oldest retained version's base upward ([[pruneChainVersions]]).
-  * A reader holding a resolved snapshot therefore keeps its exact view
-  * across retain − 1 later commits; deployments with slower readers
-  * widen `retain`.
+  * superseded; at least 1) stay resolvable, together with every data
+  * directory from the oldest retained version's base upward
+  * ([[pruneChainVersions]]). A reader holding a resolved snapshot
+  * therefore keeps its exact view across retain − 1 later commits;
+  * deployments with slower readers widen `retain`.
   */
 private[graft] final class SegmentChain(baseSegment: String) {
 
@@ -85,7 +97,7 @@ private[graft] final class SegmentChain(baseSegment: String) {
   /** [[resolve]], None before the first commit. */
   def resolveOption(s: SparkSession, root: String): Option[SegmentChain.Snapshot] = {
     val (fs, rootP) = SegmentChain.fsOf(s, root)
-    cdcLatestCommit(fs, rootP).map { live =>
+    SegmentChain.latest(s, root).map { live =>
       val (links, rest) = Iterator.iterate(live)(_ - 1).takeWhile(_ >= 0)
         .map(v => v -> SegmentChain.children(fs, new Path(rootP, s"v$v")))
         .span { case (_, names) => !names(baseSegment) }
@@ -100,16 +112,19 @@ private[graft] final class SegmentChain(baseSegment: String) {
 
   /** Commit version `ver` stamped `stamp`: create the root, wipe a
     * crashed attempt's `v<ver>`, `write` the segments into it, flip the
-    * marker, prune to the `retain` lease. Returns `ver`.
+    * marker, prune to the `retain` lease. Returns `ver`. A `retain`
+    * below 1 throws before anything is written: it would leave no
+    * marker to prune to, so the root would grow without bound.
     */
   def commit(s: SparkSession, root: String, ver: Long, stamp: (Long, String),
       retain: Int)(write: Path => Unit): Long = {
+    require(retain >= 1, s"retain must keep at least the live version, got $retain")
     val (fs, rootP) = SegmentChain.fsOf(s, root)
     fs.mkdirs(rootP)
     val dir = new Path(rootP, s"v$ver")
     fs.delete(dir, true)
     write(dir)
-    flipCommitMarker(fs, rootP, ver, stamp._1, stamp._2)
+    SegmentChain.flipCommitMarker(s, root, ver, stamp)
     SegmentChain.pruneChainVersions(fs, rootP, retain, baseSegment)
     ver
   }
@@ -187,10 +202,22 @@ private[graft] object SegmentChain {
     try fs.listStatus(dir).iterator.map(_.getPath.getName).toSet
     catch { case _: java.io.FileNotFoundException => Set.empty }
 
+  private val CommitPrefix = "_commit-"
+
+  private def marker(root: Path, ver: Long): Path = new Path(root, s"$CommitPrefix$ver")
+
+  /** A stamp as its marker holds it: `batchId\nincarnation`. */
+  private def stampText(stamp: (Long, String)): String = s"${stamp._1}\n${stamp._2}"
+
+  /** The versions whose markers are under `root`, none before the first. */
+  private def committed(fs: FileSystem, root: Path): Seq[Long] =
+    children(fs, root).toSeq.filter(_.startsWith(CommitPrefix))
+      .map(_.stripPrefix(CommitPrefix).toLong)
+
   /** The newest committed version under `root`, None before the first. */
   def latest(s: SparkSession, root: String): Option[Long] = {
     val (fs, rootP) = fsOf(s, root)
-    cdcLatestCommit(fs, rootP)
+    committed(fs, rootP).maxOption
   }
 
   /** The version a fresh build commits as: one past the newest. */
@@ -198,12 +225,30 @@ private[graft] object SegmentChain {
     latest(s, root).map(_ + 1).getOrElse(0L)
 
   /** Whether version `ver`'s marker carries `stamp` — true means the
-    * mutation stamped `stamp` already produced `ver`.
+    * mutation stamped `stamp` already produced `ver`. A missing or
+    * unreadable marker is not a retry, so the mutation applies again.
     */
   def isRetry(s: SparkSession, root: String, ver: Long,
       stamp: (Long, String)): Boolean = {
     val (fs, rootP) = fsOf(s, root)
-    cdcMarkerStamp(fs, rootP, ver) == stamp
+    try {
+      val in = fs.open(marker(rootP, ver))
+      try new String(in.readAllBytes(), "UTF-8") == stampText(stamp)
+      finally in.close()
+    } catch { case _: java.io.IOException => false }
+  }
+
+  /** The commit point: write `stamp` to a temporary file and rename it
+    * to version `ver`'s marker, one filesystem operation.
+    */
+  private[graft] def flipCommitMarker(s: SparkSession, root: String,
+      ver: Long, stamp: (Long, String)): Unit = {
+    val (fs, rootP) = fsOf(s, root)
+    val tmp = new Path(rootP, s".commit-$ver.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(stampText(stamp).getBytes("UTF-8")) finally out.close()
+    require(fs.rename(tmp, marker(rootP, ver)),
+      s"commit marker flip failed for version $ver under $root")
   }
 
   /** The live version if its marker carries `stamp`, else `build`'s. */
@@ -251,15 +296,14 @@ private[graft] object SegmentChain {
     * delete-then-append chain (v0 codes, v1 tombstones, v2 delta) would
     * lose v0 while v1 is still inside the lease. Directories above the
     * newest marker (a crashed attempt's partial `v<n>`) are swept too.
+    * Where every version owns the base segment (the CDC table) the floor
+    * is the oldest kept marker, and since a crashed attempt's number is
+    * wiped and reused, kept markers are consecutive: exactly their own
+    * data directories stay.
     */
   private[graft] def pruneChainVersions(fs: FileSystem, root: Path,
       retain: Int, baseSegment: String): Unit = {
-    val prefix = CdcCommitPrefix
-    val keep = fs.listStatus(root).iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .map(_.stripPrefix(prefix).toLong)
-      .toSeq.sorted(Ordering[Long].reverse).take(retain).toSet
+    val keep = committed(fs, root).sorted(Ordering[Long].reverse).take(retain).toSet
     if (keep.isEmpty) return
     def baseOf(v: Long): Long =
       Iterator.iterate(v)(_ - 1).takeWhile(_ >= 0)
@@ -269,16 +313,16 @@ private[graft] object SegmentChain {
     val ceil = keep.max
     fs.listStatus(root).foreach { st =>
       val nm = st.getPath.getName
-      val isMarker = nm.startsWith(prefix)
+      val isMarker = nm.startsWith(CommitPrefix)
       val isData = !isMarker && nm.startsWith("v") && nm.drop(1).nonEmpty &&
         nm.drop(1).forall(_.isDigit)
       val stale =
-        (isMarker && !keep.contains(nm.stripPrefix(prefix).toLong)) ||
+        (isMarker && !keep.contains(nm.stripPrefix(CommitPrefix).toLong)) ||
           (isData && { val ver = nm.drop(1).toLong; ver < floor || ver > ceil })
       if (stale) {
         // marker before data, so resolution never points at a missing
         // directory mid-sweep
-        if (isData) fs.delete(new Path(root, s"$prefix${nm.drop(1)}"), false)
+        if (isData) fs.delete(marker(root, nm.drop(1).toLong), false)
         fs.delete(st.getPath, true)
       }
     }

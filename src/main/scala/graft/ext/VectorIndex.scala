@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * readers load both codebooks from the chain's base.
   *
   * Versions commit, resolve and prune through [[SegmentChain]] (the
-  * `_commit-<n>` marker protocol, its crash-safety and read lease).
+  * commit-marker protocol, its crash-safety and read lease).
   * Build commits stamp `(-3, "index.r:<fingerprint>")` where the
   * fingerprint is a cheap deterministic aggregate of the indexed corpus
   * (row count + vec_id sum); [[ensureIndex]] rebuilds as a NEW version
@@ -631,11 +631,10 @@ object VectorIndex {
     }
 
   /** Fold the live chain (base ∖ tombstones ∪ deltas) into ONE
-    * self-contained codes version through [[SegmentChain.fold]] —
-    * [[graft.streaming.StreamOps.optimizeCdcTable]]'s maintenance shape
-    * on the index family, stamped (−2, "optimize") like the CDC OPTIMIZE
-    * so stream retry detection can never mistake it for a batch, and a
-    * no-op on a chain that is already its own base. After the fold, the
+    * self-contained codes version through [[SegmentChain.fold]],
+    * stamped (−2, "optimize") so stream retry detection can never
+    * mistake it for a batch, and a no-op on a chain that is already its
+    * own base. After the fold, the
     * chain-aware prune retires the old base + deltas once the read lease
     * expires. None before the first commit.
     */
@@ -647,8 +646,8 @@ object VectorIndex {
 
   /** Streaming maintenance sink: each micro-batch of new vectors
     * appends through [[appendBatch]] — version re-resolved per batch,
-    * commit via the marker flip, retries detected by stamp
-    * ([[graft.streaming.StreamOps.cdcApplyParquetSink]]'s exact discipline).
+    * committed exactly once per (batch id, incarnation) stamp through
+    * [[SegmentChain]].
     */
   def indexAppendSink(vectors: DataFrame, indexRoot: String,
       retain: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =

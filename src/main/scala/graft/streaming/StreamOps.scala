@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.ext.SegmentChain
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 import java.sql.Timestamp
 
 /** Structured Streaming surface (SURVEY.md §2.9). The reference has no
@@ -25,6 +27,13 @@ object StreamOps {
 
   case class UserLatest(user_id: Long, last_ts: Timestamp, last_value: Double,
                         n_seen: Long)
+
+  /** Exact µs epoch (getTime is ms; sub-ms lives in getNanos): the key
+    * the stateful operators sort and bucket by, equal to the batch twins'
+    * `unix_micros`, ties included.
+    */
+  private def micros(t: Timestamp): Long =
+    t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
 
   /** Watermarked 1-hour tumbling aggregate — streaming form of
     * Temporal.tumblingHourly. Works identically on batch frames (the
@@ -235,13 +244,11 @@ object StreamOps {
       onClose(hUs, n, up, down)
       s = CusumState(Long.MinValue, 0L, cumN, i, runMin, runMax)
     }
-    def usOf(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     val HourUs = 3600000000L
     rows.toSeq
       .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
       .foreach { e =>
-        val h = usOf(e.ts) / HourUs * HourUs
+        val h = micros(e.ts) / HourUs * HourUs
         if (h == s.openHourUs) s = s.copy(openN = s.openN + 1)
         else if (h > s.openHourUs) {
           if (s.openHourUs != Long.MinValue) {
@@ -354,12 +361,10 @@ object StreamOps {
           val w = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
           s0.users.zip(s0.weights).foreach { case (u, x) => w(u) = x }
           var lastUs = s0.lastUs
-          def usOf(t: Timestamp): Long =
-            t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
           val sorted = rows.toSeq
             .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
           sorted.foreach { e =>
-            val us = usOf(e.ts)
+            val us = micros(e.ts)
             if (lastUs != Long.MinValue && us > lastUs) {
               val f = math.pow(2.0, -(us - lastUs) / hlUs)
               w.keys.toSeq.foreach(u => w(u) = w(u) * f)
@@ -519,117 +524,48 @@ object StreamOps {
       }
   }
 
-  private[graft] val CdcCommitPrefix = "_commit-"
-
-  /** Latest committed VERSION of a [[cdcApplyParquetSink]] table: the max
-    * version with a commit marker present, None before the first commit.
-    * Markers are tiny files flipped into place by an atomic file rename,
-    * so this resolution never observes a half-written commit. Versions
-    * are the sink's own monotone counter, NOT stream batch ids — a
-    * restarted stream with a fresh checkpoint restarts batch ids at 0,
-    * and keying versions by batch id would make every such batch look
-    * "already applied" (silent data loss); the applied batch id is
-    * recorded IN the marker instead, purely for retry detection.
+  /** The CDC table's chain: every commit writes the whole merged table
+    * as the `table` segment, so every version is a base. Commit, retry
+    * detection, crash safety and the `retain` read lease are
+    * [[SegmentChain]]'s.
     */
-  def cdcLatestCommit(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Option[Long] =
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith(CdcCommitPrefix))
-      .map(_.stripPrefix(CdcCommitPrefix).toLong)
-      .reduceOption((a, b) => math.max(a, b))
+  private val cdcChain = new SegmentChain("table")
 
-  /** The (stream batch id, incarnation id) stamp recorded in a version's
-    * commit marker — line 1 is the batch id, line 2 the incarnation the
-    * batch belonged to ((−1, "") for a marker with unreadable/absent
-    * content, which can never equal a live stamp, so it reads as
-    * "not a retry" and the idempotent merge re-applies — safe). Both
-    * halves matter: batch ids alone collide across stream incarnations
-    * (a fresh checkpoint restarts them at 0, so "latest commit also says
-    * batch 0" does NOT prove this batch was applied), and the
-    * incarnation alone says nothing about WHICH batch committed.
+  /** The table's columns: [[CdcRow]]'s minus `op`, nullable as Spark
+    * writes them to parquet.
     */
-  private[graft] def cdcMarkerStamp(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, ver: Long): (Long, String) =
-    try {
-      val in = fs.open(new org.apache.hadoop.fs.Path(dir, s"$CdcCommitPrefix$ver"))
-      try {
-        val lines = new String(in.readAllBytes(), "UTF-8").linesIterator.toSeq
-        (lines.head.trim.toLong, lines.lift(1).map(_.trim).getOrElse(""))
-      } finally in.close()
-    } catch { case _: Exception => (-1L, "") }
+  private val CdcTableSchema = StructType(
+    Encoders.product[CdcRow].schema.filter(_.name != "op").map(_.copy(nullable = true)))
 
-  /** Reader half of the [[cdcApplyParquetSink]] contract: resolve the
-    * newest commit marker, read that version's data directory. None before
-    * the first commit. Readers must come through here (or replicate the
-    * marker resolution) — the table ROOT holds multiple versions and is
-    * not itself a parquet dataset.
-    *
-    * Read lease: the resolved version stays on disk only while it is
-    * among the newest `retain` commits (sink parameter, default 2 = live
-    * + one superseded). A reader that holds a resolved path across
-    * `retain` or more subsequent commits can observe its `v<n>` pruned
-    * mid-read — deployments with slow readers must widen `retain` to
-    * cover the longest read they expect.
+  private def cdcTableAt(s: SparkSession, c: SegmentChain.Snapshot): DataFrame =
+    s.read.schema(CdcTableSchema).parquet(c.dir(c.live, "table"))
+
+  /** The table's live version, None before the first commit. The table
+    * root holds several versions and is not itself a parquet dataset,
+    * so readers come through here. The frame reads one resolved version:
+    * it stays readable across `retain` − 1 later commits.
     */
-  def readCdcTable(spark: SparkSession, tableDir: String): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cdcLatestCommit(fs, path).map { n =>
-      spark.read.parquet(new org.apache.hadoop.fs.Path(path, s"v$n").toString)
-    }
-  }
+  def readCdcTable(spark: SparkSession, tableDir: String): Option[DataFrame] =
+    cdcChain.resolveOption(spark, tableDir).map(cdcTableAt(spark, _))
 
   /** MERGE-apply sink for [[cdcSnapshotStream]]'s changefeed: each
     * micro-batch upserts op='U' rows and deletes op='D' keys into a
-    * keyed parquet table — lakehouse MERGE semantics on plain parquet.
-    *
-    * Commit protocol (the part that makes the atomicity claim TRUE —
-    * directory delete+rename is two filesystem ops with a visible gap,
-    * so versions + an atomically renamed marker FILE replace it):
-    * each batch writes its full merged snapshot to `v<ver>/` (the sink's
-    * own monotone version counter), then flips `_commit-<ver>` — whose
-    * CONTENT is the applied stream batch id — into place via a single
-    * file rename. Readers ([[readCdcTable]]) resolve max(committed
-    * version) → `v<ver>/`, so at every instant they see exactly one
-    * complete, fully-committed snapshot — no missing-table window, no
-    * torn batch. Crash recovery: a crash before the marker flip leaves
-    * the previous commit live and the retried batch re-merges from it
-    * (the merge is a pure function of table + batch, so re-application
-    * is idempotent); a retry AFTER the flip finds its (batch id,
-    * incarnation) stamp in the latest marker and no-ops. The stamp is
-    * compared by EQUALITY with the latest marker only, and carries the
-    * stream incarnation alongside the batch id — a stream restarted on a
-    * fresh checkpoint restarts ids at 0, so an id-ordering comparison
-    * would silently drop every batch of the new incarnation, and a bare
-    * id-equality check would misread the new incarnation's batch 0 as a
-    * retry whenever the previous incarnation happened to stop on batch
-    * 0. Old versions beyond the newest `retain` (default two) are pruned
-    * after each commit (markers first; the data
-    * sweep goes by directory NAME so a crash mid-prune or a failed
-    * attempt's partial dir can't leak storage forever), bounding disk
-    * while leaving one superseded snapshot for readers that resolved
-    * just before the flip. Cost per batch is one table
+    * keyed parquet table — lakehouse MERGE semantics on plain parquet,
+    * committed exactly once per (batch id, incarnation) through
+    * [[SegmentChain]]. A retried batch that never committed
+    * re-merges from the previous version; the merge is a pure function
+    * of table and batch, so that is safe. Cost per batch is one table
     * rewrite — the plain-parquet floor; a format with deletion vectors
     * (Delta/Iceberg) turns this same changefeed into metadata-only
     * commits, which is why the emitted op column matches their MERGE
     * contract.
     */
   def cdcApplyParquetSink(cdc: Dataset[CdcRow], tableDir: String,
-      retain: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[CdcRow] = {
-    // one id per sink construction = one per stream incarnation; inside a
-    // micro-batch Spark's driver thread also carries the stable query id
-    // as a local property, which we prefer (it survives object reuse and
-    // names the checkpoint lineage batch ids are monotone within)
-    val fallbackIncarnation = java.util.UUID.randomUUID().toString
-    cdc.writeStream.foreachBatch { (batch: Dataset[CdcRow], batchId: Long) =>
-      val incarnation = Option(batch.sparkSession.sparkContext
-          .getLocalProperty("sql.streaming.queryId"))
-        .getOrElse(fallbackIncarnation)
-      applyCdcBatch(batch, tableDir, batchId, incarnation, retain)
+      retain: Int = 2): DataStreamWriter[Row] =
+    SegmentChain.stampedSink(cdc.toDF()) { (b, id, incarnation) =>
+      applyCdcBatch(b.as[CdcRow](Encoders.product[CdcRow]), tableDir, id,
+        incarnation, retain)
     }
-  }
 
   /** One MERGE-apply commit — the [[cdcApplyParquetSink]] batch body,
     * public so the retry/crash-recovery paths are directly spec-testable
@@ -638,128 +574,41 @@ object StreamOps {
     */
   def applyCdcBatch(batch: Dataset[CdcRow], tableDir: String, batchId: Long,
       incarnationId: String = "batch", retain: Int = 2): Unit = {
-      require(retain >= 1, s"retain must keep at least the live version, got $retain")
-      val s = batch.sparkSession
-      val conf = s.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(tableDir)
-      val fs = root.getFileSystem(conf)
-      fs.mkdirs(root)
-      val current = cdcLatestCommit(fs, root)
-      // genuine retry = the LATEST commit records this very (batch id,
-      // incarnation) pair (crash after the marker flip, Spark re-delivers
-      // the batch). Anything else — including the SAME id from a different
-      // incarnation after a checkpoint reset restarted batch numbering at
-      // 0 — must apply: batch ids only mean "already applied" within the
-      // incarnation that numbered them, and versions are the sink's own
-      // counter precisely so stale-id comparisons can't drop data.
-      val isRetry = current.exists { v =>
-        cdcMarkerStamp(fs, root, v) == ((batchId, incarnationId))
+    val s = batch.sparkSession
+    val stamp = (batchId, incarnationId)
+    val current = cdcChain.resolveOption(s, tableDir)
+    if (!current.exists(c => SegmentChain.isRetry(s, tableDir, c.live, stamp))) {
+      val upserts = batch.toDF().filter(col("op") === "U").drop("op")
+      val merged = current.fold(upserts) { c =>
+        cdcTableAt(s, c)
+          .join(batch.toDF().select("user_id").distinct(), Seq("user_id"), "left_anti")
+          .unionByName(upserts)
       }
-      if (!isRetry) {
-        val ver = current.map(_ + 1).getOrElse(0L)
-        val touched = batch.toDF().select(col("user_id")).distinct()
-        val upserts = batch.toDF().filter(col("op") === "U")
-          .select("user_id", "last_type", "last_value", "last_ts", "n_events")
-        val merged = current match {
-          case Some(n) =>
-            s.read.parquet(new org.apache.hadoop.fs.Path(root, s"v$n").toString)
-              .join(touched, Seq("user_id"), "left_anti")
-              .unionByName(upserts)
-          case None => upserts
-        }
-        // overwrite mode: a crashed attempt's partial v<ver> is replaced
-        merged.write.mode("overwrite")
-          .parquet(new org.apache.hadoop.fs.Path(root, s"v$ver").toString)
-        // marker content = the applied (batch id, incarnation) stamp
-        // (retry detection); the FILE rename is the atomic commit point
-        flipCommitMarker(fs, root, ver, batchId, incarnationId)
-        pruneCdcVersions(fs, root, retain)
-      }
-      ()
-  }
-
-  /** Atomic commit: write the (batch id, incarnation) stamp to a temp
-    * file, rename into `_commit-<ver>` — the single-filesystem-op flip
-    * both the MERGE sink and [[optimizeCdcTable]] commit through.
-    */
-  private[graft] def flipCommitMarker(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, ver: Long, batchId: Long,
-      incarnationId: String): Unit = {
-    val tmpMarker = new org.apache.hadoop.fs.Path(root, s".commit-$ver.tmp")
-    val out = fs.create(tmpMarker, true)
-    out.write(s"$batchId\n$incarnationId".getBytes("UTF-8"))
-    out.close()
-    val marker = new org.apache.hadoop.fs.Path(root, s"$CdcCommitPrefix$ver")
-    require(fs.rename(tmpMarker, marker),
-      s"commit marker flip failed for version $ver (batch $batchId)")
-  }
-
-  /** Prune: newest `retain` committed versions stay (the live one plus
-    * retain−1 superseded snapshots for readers that resolved just before
-    * a flip — size the window to the slowest reader's lease). Sweeps
-    * DATA dirs by name, not by marker — a crash between a marker delete
-    * and its data delete (or a failed attempt's partial dir) must not
-    * leak an unreclaimable v<n> forever.
-    */
-  private[graft] def pruneCdcVersions(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, retain: Int): Unit = {
-    val keep = fs.listStatus(root).iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith(CdcCommitPrefix))
-      .map(_.stripPrefix(CdcCommitPrefix).toLong)
-      .toSeq.sorted(Ordering[Long].reverse).take(retain).toSet
-    fs.listStatus(root).foreach { st =>
-      val nm = st.getPath.getName
-      val stale =
-        (nm.startsWith(CdcCommitPrefix) &&
-          !keep.contains(nm.stripPrefix(CdcCommitPrefix).toLong)) ||
-        (nm.startsWith("v") && nm.drop(1).nonEmpty && nm.drop(1).forall(_.isDigit) &&
-          !keep.contains(nm.drop(1).toLong))
-      if (stale) {
-        // marker before data, so resolution never points at a
-        // missing directory mid-sweep
-        if (!nm.startsWith(CdcCommitPrefix))
-          fs.delete(new org.apache.hadoop.fs.Path(root,
-            s"$CdcCommitPrefix${nm.drop(1)}"), false)
-        fs.delete(st.getPath, true)
-        ()
-      }
+      cdcChain.commit(s, tableDir, SegmentChain.next(s, tableDir), stamp,
+        retain)(dir => merged.write.parquet(s"$dir/table"))
     }
   }
 
   /** Incremental OPTIMIZE pass — the table-maintenance job every
     * long-lived keyed table needs, composed from the repo's own layout
-    * tools and committed through the SAME versioned-marker protocol as
-    * the MERGE sink (the lakehouse OPTIMIZE shape on plain parquet):
-    * resolve the latest committed snapshot, rewrite it COMPACTED
-    * (ceil(on-disk bytes / targetBytes) output files — Formats.compact's
-    * sizing, from actual file lengths, not plan stats) and Z-ORDERED on
-    * `zCols` ([[graft.operators.ZOrder.cluster]] — tight per-file
-    * min/max footer stats on every participating column), write it as
-    * `v<cur+1>/`, flip the commit marker, prune. Readers never observe
-    * a torn table — they keep resolving `v<cur>` until the flip — and
-    * the next stream batch merges on top of the optimized snapshot.
-    *
-    * The marker stamp is (−2, "optimize"): a live stream stamp always
-    * carries batchId ≥ 0, so the sink's equality-based retry detection
-    * can never mistake an optimize commit for its own batch (and a
-    * retried stream batch lands as a NEW version over the optimized
-    * data — the merge is content-idempotent, so nothing is lost).
-    *
-    * Single-writer contract: run in a maintenance window, never
-    * concurrently with the sink — the version counter is resolved, not
-    * locked (the same rule lakehouse OPTIMIZE has without a conflict
-    * resolver). Returns the new committed version; None if the table
-    * has no commit yet.
+    * tools (the lakehouse OPTIMIZE shape on plain parquet): rewrite the
+    * live version COMPACTED (ceil(on-disk bytes / targetBytes) output
+    * files — Formats.compact's sizing, from actual file lengths, not
+    * plan stats) and Z-ORDERED on `zCols`
+    * ([[graft.operators.ZOrder.cluster]] — tight per-file min/max footer
+    * stats on every participating column), committed as live + 1 stamped
+    * `(-2, "optimize")`. That stamp never equals a stream batch's, so
+    * the next batch merges on top of the optimized version. This is a
+    * layout rewrite of a depth-0 chain, not a fold, so it always
+    * commits. Run it in a maintenance window, never concurrently with
+    * the sink. Returns the new committed version; None if the table has
+    * no commit yet.
     */
   def optimizeCdcTable(spark: SparkSession, tableDir: String,
       zCols: Seq[String], targetBytes: Long = 128L * 1024 * 1024,
-      bits: Int = 16, retain: Int = 2): Option[Long] = {
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cdcLatestCommit(fs, root).map { cur =>
-      val ver = cur + 1
-      val df = spark.read.parquet(new org.apache.hadoop.fs.Path(root, s"v$cur").toString)
+      bits: Int = 16, retain: Int = 2): Option[Long] =
+    cdcChain.resolveOption(spark, tableDir).map { c =>
+      val df = cdcTableAt(spark, c)
       // size from actual on-disk lengths (the listing is already
       // driver-resident in the read's file index) — plan stats estimate
       // decompressed bytes and would overshoot the file count severalfold
@@ -769,14 +618,9 @@ object StreamOps {
         p.getFileSystem(hconf).getFileStatus(p).getLen
       }.sum
       val nFiles = math.max(1, (bytes.toDouble / targetBytes.toDouble).ceil.toInt)
-      graft.operators.ZOrder.cluster(df, zCols, bits, nFiles)
-        .write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(root, s"v$ver").toString)
-      flipCommitMarker(fs, root, ver, -2L, "optimize")
-      pruneCdcVersions(fs, root, retain)
-      ver
+      cdcChain.commit(spark, tableDir, c.live + 1, (-2L, "optimize"), retain)(dir =>
+        graft.operators.ZOrder.cluster(df, zCols, bits, nFiles).write.parquet(s"$dir/table"))
     }
-  }
 
   /** Streaming exact dedup on event_id with watermark-bounded state —
     * the streaming form of d01-style exact dedup: duplicate deliveries
@@ -820,15 +664,11 @@ object StreamOps {
       st = getHandle.getValueState[(Long, Double)]("agg",
         org.apache.spark.sql.Encoders.product[(Long, Double)],
         org.apache.spark.sql.streaming.TTLConfig.NONE)
-    // exact µs epoch (getTime is ms; sub-ms lives in getNanos) — the sort
-    // key must match the batch twin's unix_micros tie order exactly
-    private def us(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     override def handleInputRows(key: Long, rows: Iterator[Event],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[RunStats] = {
       var (n, sum) = if (st.exists()) st.get() else (0L, 0.0)
-      val out = rows.toSeq.sortBy(e => (us(e.ts), e.event_id)).map { e =>
-        val r = RunStats(key, e.event_id, us(e.ts), e.value, n,
+      val out = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).map { e =>
+        val r = RunStats(key, e.event_id, micros(e.ts), e.value, n,
           if (n == 0) 0.0 else sum / n)
         n += 1; sum += e.value
         r
@@ -891,8 +731,6 @@ object StreamOps {
       st = getHandle.getValueState[(Long, Long, Long, Double)]("open",
         org.apache.spark.sql.Encoders.product[(Long, Long, Long, Double)],
         org.apache.spark.sql.streaming.TTLConfig.NONE)
-    private def us(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     private def close(key: Long, s: (Long, Long, Long, Double)): SessionOut =
       SessionOut(key, s._1, s._2 + GapUs, s._3,
         new java.math.BigDecimal(java.lang.Double.toString(s._4))
@@ -904,8 +742,8 @@ object StreamOps {
       //    (t ≤ last + gap), matching MergingSessionsIterator's
       //    newStart <= currentEnd rule
       val batchSessions = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-      rows.toSeq.sortBy(e => (us(e.ts), e.event_id)).foreach { e =>
-        val t = us(e.ts)
+      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
+        val t = micros(e.ts)
         batchSessions.lastOption match {
           case Some(s) if t <= s._2 + GapUs =>
             batchSessions(batchSessions.length - 1) = (s._1, t, s._3 + 1, s._4 + e.value)
@@ -1079,8 +917,6 @@ object StreamOps {
         org.apache.spark.sql.Encoders.product[(Long, Long, Double)],
         org.apache.spark.sql.streaming.TTLConfig.NONE)
     }
-    private def us(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     /** Emit every pending error the watermark has sealed, prune state,
       * and re-arm one timer at the earliest still-pending error. */
     private def emitDue(key: Long, wmUs: Long): Iterator[AsofOut] = {
@@ -1114,9 +950,9 @@ object StreamOps {
     override def handleInputRows(key: Long, rows: Iterator[Event],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[AsofOut] = {
       rows.foreach { e =>
-        if (e.event_type == "error") errs.appendValue((us(e.ts), e.event_id))
+        if (e.event_type == "error") errs.appendValue((micros(e.ts), e.event_id))
         else if (e.event_type == "purchase")
-          purch.appendValue((us(e.ts), e.event_id, e.value))
+          purch.appendValue((micros(e.ts), e.event_id, e.value))
       }
       emitDue(key, tv.getCurrentWatermarkInMs() * 1000L)
     }
@@ -1222,7 +1058,7 @@ object StreamOps {
     * (caller-provided via `.option("checkpointLocation", …)`) carries the
     * batch-id watermark across restarts.
     */
-  def incrementalParquetSink(events: DataFrame, outDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  def incrementalParquetSink(events: DataFrame, outDir: String): DataStreamWriter[Row] =
     events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
     }
@@ -1242,7 +1078,7 @@ object StreamOps {
     * micro-batch — the slowly-changing-dimension join done right on a
     * streaming pipeline. A plain `stream.join(readCdcTable(...))` would
     * freeze the dimension at the version resolved when the query was
-    * PLANNED: `readCdcTable` pins a concrete `v<n>/` path, so dimension
+    * PLANNED: `readCdcTable` pins one resolved version, so dimension
     * updates committed while the stream runs are silently ignored — the
     * classic stale-dimension bug. Resolving inside `foreachBatch` makes
     * each batch read the version current at ITS start, so an upsert
@@ -1254,8 +1090,8 @@ object StreamOps {
     * the broadcast hint keeps every batch a map-side hash join — the
     * fact side (the stream) never shuffles. `retain ≥ 2` on the sink is
     * what makes this race-safe: a version superseded mid-batch stays
-    * readable until the NEXT commit prunes it (the read lease documented
-    * on [[readCdcTable]]).
+    * readable until the NEXT commit prunes it (the read lease of
+    * [[SegmentChain]]).
     *
     * `enrich` receives (batch ⟕ dimension) rows — left join, so stream
     * rows with no dimension entry survive with nulls (an inner join
@@ -1263,7 +1099,7 @@ object StreamOps {
     */
   def enrichAgainstCdcTable(events: DataFrame, tableDir: String,
       joinKey: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val dim = readCdcTable(batch.sparkSession, tableDir)
       val enriched = dim match {
@@ -1273,9 +1109,8 @@ object StreamOps {
         // (no dimension columns), so a schema-strict sink would fail at
         // an unpredictable batch mid-stream instead of at start — and a
         // lenient one would silently persist schema-unstable output.
-        // The dimension schema is unknowable before its first commit, so
-        // null-padding is not an option; the contract is: commit the
-        // dimension's first version before starting the stream.
+        // The contract is: commit the dimension's first version before
+        // starting the stream.
         case None => throw new IllegalStateException(
           s"enrichAgainstCdcTable: no committed CDC version under $tableDir " +
           "— commit the dimension's first version (applyCdcBatch / " +

@@ -658,12 +658,10 @@ class IndexSpec extends SparkSpec {
     val incoming = e.filter(expr(s"vec_id % 29 = 7"))
     val base = e.filter(expr(s"NOT (vec_id % 29 = 7)"))
     // seed the committed base graph (e49's artifact shape)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     VectorOps.knnGraphFrom(base)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .write.parquet(s"$root/v0/edges")
-    graft.streaming.StreamOps.flipCommitMarker(fs, rootP, 0L, -3L, "seed")
+    SegmentChain.flipCommitMarker(spark, root, 0L, (-3L, "seed"))
     val nInc = incoming.count()
     val v1 = VectorIndex.graphInsertBatch(incoming, base, root, 1L, "ins")
     assert(v1 == 1L)
@@ -694,12 +692,10 @@ class IndexSpec extends SparkSpec {
     val incoming = e.filter(expr("vec_id % 29 = 7"))
     val base = e.filter(expr("NOT (vec_id % 29 = 7)"))
     val root = tmpRoot("gins-clustered")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     VectorOps.knnGraphFrom(base)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .write.parquet(s"$root/v0/edges")
-    graft.streaming.StreamOps.flipCommitMarker(fs, rootP, 0L, -3L, "seed")
+    SegmentChain.flipCommitMarker(spark, root, 0L, (-3L, "seed"))
     VectorIndex.graphInsertBatch(incoming, base, root, 1L, "c")
     def avgRecall(g: org.apache.spark.sql.DataFrame): Double = {
       val r = VectorOps.graphWalkRecallFrom(e, g, nQueries = 10).collect()
@@ -724,14 +720,12 @@ class IndexSpec extends SparkSpec {
       else Option(p.listFiles).map(_.map(dirBytes).sum).getOrElse(0L)
     val e = fullVecs
     val root = tmpRoot("gdelta")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = e.filter(expr("NOT (vec_id % 29 = 7)"))
     val incoming = e.filter(expr("vec_id % 29 = 7"))
     VectorOps.knnGraphFrom(base)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .write.parquet(s"$root/v0/edges")
-    graft.streaming.StreamOps.flipCommitMarker(fs, rootP, 0L, -3L, "seed")
+    SegmentChain.flipCommitMarker(spark, root, 0L, (-3L, "seed"))
     val baseBytes = dirBytes(new java.io.File(root, "v0/edges"))
     val baseSnap = VectorIndex.loadGraph(spark, root).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -785,15 +779,13 @@ class IndexSpec extends SparkSpec {
     import spark.implicits._
     val e = fullVecs
     val root = tmpRoot("gfold")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val incoming = e.filter(expr("vec_id % 29 = 7"))
       .orderBy("vec_id").limit(9).collect()
     val base = e.filter(expr("NOT (vec_id % 29 = 7)"))
     VectorOps.knnGraphFrom(base)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .write.parquet(s"$root/v0/edges")
-    graft.streaming.StreamOps.flipCommitMarker(fs, rootP, 0L, -3L, "seed")
+    SegmentChain.flipCommitMarker(spark, root, 0L, (-3L, "seed"))
     import org.apache.spark.sql.types._
     val vsch = StructType(Seq(StructField("vec_id", LongType),
       StructField("v", ArrayType(DoubleType))))
@@ -847,12 +839,10 @@ class IndexSpec extends SparkSpec {
     val vecs = ((0L to 5L).map(i => (i, jitter(cA))) ++
       (10L to 15L).map(i => (i, jitter(cB)))).toDF("vec_id", "v")
     val root = tmpRoot("gdel")
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     VectorOps.knnGraphFrom(vecs)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .write.parquet(s"$root/v0/edges")
-    graft.streaming.StreamOps.flipCommitMarker(fs, rootP, 0L, -3L, "seed")
+    SegmentChain.flipCommitMarker(spark, root, 0L, (-3L, "seed"))
     val before = VectorIndex.loadGraph(spark, root)
     // pick a hub dynamically: a node with both in- and out-edges (the
     // LSH bucket assignment decides which ids connect on this fixture)
@@ -1486,7 +1476,6 @@ class IndexSpec extends SparkSpec {
 
   test("bm25 admission gate: overlapping batches never double-count; the novelty read is bucket-pruned") {
     import graft.ext.RetrievalIndex
-    import graft.streaming.StreamOps
     import spark.implicits._
     def mkText(stem: String, n: Int) =
       (1 to n).map(i => s"$stem$i").mkString(" ")
@@ -1524,10 +1513,7 @@ class IndexSpec extends SparkSpec {
     assert(RetrievalIndex.admitDocs(base.filter(col("doc_id") <= 4),
       root, 2L, "dup") == 2L)
     assert(!new java.io.File(root, "v2").exists())
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(StreamOps.cdcMarkerStamp(fs,
-      new org.apache.hadoop.fs.Path(root), 2L) == ((2L, "dup")))
+    assert(SegmentChain.isRetry(spark, root, 2L, (2L, "dup")))
     assert(recount() == after)
     // the novelty read prunes the doc-id sidecar to the queried buckets
     val pruned = RetrievalIndex.liveDocIds(spark, root, Some(Seq(3L)))
@@ -1553,28 +1539,41 @@ class IndexSpec extends SparkSpec {
 
   test("bm25 empty batches flip marker-only versions (the stamp survives a no-op commit)") {
     import graft.ext.RetrievalIndex
-    import graft.streaming.StreamOps
     import spark.implicits._
     val docs = (1L to 6L).map(i => (i, s"a$i b$i c$i")).toDF("doc_id", "text")
     val root = tmpRoot("bm25-empty")
     RetrievalIndex.buildIndexFrom(docs, root)                       // v0
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val rootP = new org.apache.hadoop.fs.Path(root)
     assert(RetrievalIndex.appendDocs(empty, root, 5L, "e") == 1L)
     assert(!new java.io.File(root, "v1").exists(),
       "an empty append writes no data dirs")
-    assert(StreamOps.cdcMarkerStamp(fs, rootP, 1L) == ((5L, "e")))
+    assert(SegmentChain.isRetry(spark, root, 1L, (5L, "e")))
     // the stamp is live: a redelivery no-ops instead of re-committing
     assert(RetrievalIndex.appendDocs(empty, root, 5L, "e") == 1L)
     assert(RetrievalIndex.latestVersion(spark, root).contains(1L))
     // an empty forget stamps the same way
     assert(RetrievalIndex.forgetDocs(spark, root, empty, 6L, "f") == 2L)
-    assert(StreamOps.cdcMarkerStamp(fs, rootP, 2L) == ((6L, "f")))
+    assert(SegmentChain.isRetry(spark, root, 2L, (6L, "f")))
     // readers resolve straight through marker-only versions
     assert(RetrievalIndex.loadPostings(spark, root).count() == 18L)
     assert(RetrievalIndex.serveBm25TopK(spark, root).count() > 0)
+  }
+
+  test("a commit that keeps no version (retain = 0) throws and leaves the live version") {
+    import graft.ext.RetrievalIndex
+    import spark.implicits._
+    val docs = (1L to 6L).map(i => (i, s"a$i b$i c$i")).toDF("doc_id", "text")
+    val root = tmpRoot("bm25-retain0")
+    RetrievalIndex.buildIndexFrom(docs, root)                       // v0
+    val more = Seq((7L, "a7 b7 c7")).toDF("doc_id", "text")
+    // retain = 0 would empty the prune's keep set, and the root would
+    // then never be pruned again
+    intercept[IllegalArgumentException] {
+      RetrievalIndex.appendDocs(more, root, 1L, "r0", retain = 0)
+    }
+    assert(RetrievalIndex.latestVersion(spark, root).contains(0L))
+    assert(!new java.io.File(root, "v1").exists(), "a rejected commit writes nothing")
+    assert(RetrievalIndex.loadPostings(spark, root).count() == 18L)
   }
 
   // ------------------------------------------------- the fold rule

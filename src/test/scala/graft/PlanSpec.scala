@@ -230,6 +230,10 @@ class PlanSpec extends SparkSpec {
       // signature-index admission shingles the incoming split's text
       // (and the base split's, on a cold index root / for the verify)
       "d79_index_near_dedup", "d80_index_forget",
+      // persisted-index serving builds its cold index root (RegistryRun
+      // deletes the roots first) from the corpus text
+      "d82_index_lifecycle_state", "d83_bm25_index_served",
+      "d84_bm25_index_lifecycle", "d88_bm25_admission_served",
       // the hybrid serve reads the 10 QUERY docs' token sets from the
       // primary store (a doc_id<10-pushed 10-row read — the forward-
       // index stand-in; the corpus-side reads are all index reads)

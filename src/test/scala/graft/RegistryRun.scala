@@ -30,6 +30,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * The session's ANSI value is restored after each run. A query that
   * throws fails only the checks that read its outcome.
+  *
+  * Before the pass, the data dir's default index roots
+  * (`<tmpdir>/graft-<family>/<dir slug>`, [[graft.ext.SegmentChain.tmpRoot]])
+  * are deleted, so every index query takes the cold build path — the
+  * regime Verify exercises — and its recorded scans do not depend on
+  * what an earlier run left under the tmpdir.
   */
 object RegistryRun {
 
@@ -48,6 +54,7 @@ object RegistryRun {
     runs.computeIfAbsent(dir, _ => run(spark, dir))
 
   private def run(spark: SparkSession, dir: String): Map[String, Outcome] = {
+    deleteIndexRoots(dir)
     val outcomes = SparkEntry.allQueries.sortBy(_.name).map { q =>
       clearCaches(spark)
       def result(): Result =
@@ -64,6 +71,14 @@ object RegistryRun {
     }
     clearCaches(spark)
     outcomes.toMap
+  }
+
+  private def deleteIndexRoots(dir: String): Unit = {
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    Option(tmp.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("graft-"))
+      .foreach(f => org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(graft.ext.SegmentChain.tmpRoot(f.getName, dir))))
   }
 
   private def clearCaches(spark: SparkSession): Unit = {

@@ -833,7 +833,7 @@ class StreamingSpec extends SparkSpec {
     // crash window: batch 2's data dir written but the marker flip never
     // happened — readers still resolve batch 1, and the retried batch 2
     // re-merges from batch 1's committed snapshot
-    val orphan = new org.apache.hadoop.fs.Path(root, "v2")
+    val orphan = new org.apache.hadoop.fs.Path(root, "v2/table")
     cdcBatch((1L, "D", "error", 0.0)).toDF()
       .write.mode("overwrite").parquet(orphan.toString)
     assert(snapshot() == afterTwo, "uncommitted version must be invisible")
@@ -892,6 +892,16 @@ class StreamingSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       StreamOps.applyCdcBatch(cdcBatch(9L, 9.0), dir, 9L, retain = 0)
     }
+  }
+
+  test("reading the CDC table declares its schema and launches no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("cdc-schema").toString + "/t"
+    StreamOps.applyCdcBatch(Seq(StreamOps.CdcRow(1L, "U", "view", 1.0,
+      new java.sql.Timestamp(1000L), 1L)).toDS(), dir, 0L)
+    val (table, jobs) = jobsDuring(StreamOps.readCdcTable(spark, dir))
+    assert(jobs == 0, s"a CDC read must not infer its schema: $jobs jobs")
+    assert(table.get.columns.toSeq ==
+      Seq("user_id", "last_type", "last_value", "last_ts", "n_events"))
   }
 
   test("streaming CDC snapshot converges to the batch t36 semantics across micro-batches") {
@@ -1318,12 +1328,10 @@ class StreamingSpec extends SparkSpec {
       .toDF("vec_id", "v")
     val root = java.nio.file.Files
       .createTempDirectory("graft-graph-ins-stream").toString
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     VectorOps.knnGraphFrom(base)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .write.parquet(s"$root/v0/edges")
-    graft.streaming.StreamOps.flipCommitMarker(fs, rootP, 0L, -3L, "seed")
+    graft.ext.SegmentChain.flipCommitMarker(spark, root, 0L, (-3L, "seed"))
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[(Long, Seq[Double])]
     val q = VectorIndex.graphInsertSink(
@@ -1358,12 +1366,10 @@ class StreamingSpec extends SparkSpec {
     val primary = vs.toDF("vec_id", "v")
     val root = java.nio.file.Files
       .createTempDirectory("graft-graph-del-stream").toString
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     VectorOps.knnGraphFrom(primary)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .write.parquet(s"$root/v0/edges")
-    graft.streaming.StreamOps.flipCommitMarker(fs, rootP, 0L, -3L, "seed")
+    graft.ext.SegmentChain.flipCommitMarker(spark, root, 0L, (-3L, "seed"))
     val victims = VectorIndex.loadGraph(spark, root)
       .select("dst").distinct().limit(2).collect().map(_.getLong(0))
     implicit val ctx = spark.sqlContext

@@ -59,8 +59,8 @@ class ZOrderSpec extends SparkSpec {
       batchId = 0L, incarnationId = "inc-a")
     val before = StreamOps.readCdcTable(spark, dir).get
       .collect().map(_.toString).sorted.toSeq
-    val uBefore = avgSpan(fileSpans(s"$dir/v0", "user_id"))
-    val vBefore = avgSpan(fileSpans(s"$dir/v0", "last_value"))
+    val uBefore = avgSpan(fileSpans(s"$dir/v0/table", "user_id"))
+    val vBefore = avgSpan(fileSpans(s"$dir/v0/table", "last_value"))
 
     // small targetBytes → ~9 output files: enough z-range slices that
     // span tightening holds with margin under repartitionByRange's
@@ -74,8 +74,8 @@ class ZOrderSpec extends SparkSpec {
       "reader must resolve the optimized version")
     // the rewrite is layout-only: content survives bit-for-bit
     assert(after.collect().map(_.toString).sorted.toSeq == before)
-    val uAfter = avgSpan(fileSpans(s"$dir/v1", "user_id"))
-    val vAfter = avgSpan(fileSpans(s"$dir/v1", "last_value"))
+    val uAfter = avgSpan(fileSpans(s"$dir/v1/table", "user_id"))
+    val vAfter = avgSpan(fileSpans(s"$dir/v1/table", "last_value"))
     // 0.8: this test pins the COMPOSITION (rewrite-through-protocol with
     // locality gained on both columns); the dedicated z-order test above
     // pins tightness itself at fixed file counts
